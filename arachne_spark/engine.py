@@ -69,7 +69,7 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 from itertools import product as _iter_product
 from typing import Optional
@@ -147,6 +147,29 @@ class _CompiledRules:
     gate_pairs: tuple       # const-(p,o) gate atoms (alpha-memory emptiness)
     gate_preds: tuple       # constant predicates across rule bodies
 
+    @property
+    def sig(self) -> tuple:
+        """Gate-key signature: gate counts (and slice caches keyed by them)
+        carry over between runs only under an identical signature."""
+        return (self.gate_preds, self.gate_pairs)
+
+
+@dataclass
+class _Counts:
+    """Exact counts a run starts from: gate counts and row totals of the
+    first delta, of facts and of facts_old (empty on a fresh run), plus the
+    TBox-slice value cache they validate. Callers observe them on the job
+    that materializes each relation, or carry them from a prior result."""
+
+    delta: dict
+    delta_total: int
+    facts: dict
+    facts_total: int
+    old: dict = field(default_factory=dict)
+    old_total: int = 0
+    lineage: list = field(default_factory=list)
+    slices: dict = field(default_factory=dict)
+
 
 def _compile_rules(ruleset) -> _CompiledRules:
     rules = tuple(ruleset)
@@ -214,6 +237,15 @@ class FixpointResult:
     # flag is recorded here so every decode on this result (not just
     # facts/asserted in _wrap_ids) inherits it (ADVICE r4 #1)
     strict_decode: bool = False
+    # exact gate counts of ``facts`` (keys as in _delta_stats) under the
+    # engine's gate-key signature ``gate_sig``, and the TBox-slice value
+    # cache ({(key, pos): (alpha count, values)}). Facts are append-only
+    # with set semantics and an incremental seed delta is disjoint from
+    # ``facts``, so incremental() continues from prev counts + seed counts
+    # exactly, and a cached slice whose count is unchanged is unchanged.
+    gate_counts: Optional[dict] = None
+    gate_sig: Optional[tuple] = None
+    slice_cache: Optional[dict] = None
 
     def inferred_only(self) -> DataFrame:
         """facts minus asserted — the --inferred-only export (S6, Main.scala:81).
@@ -567,22 +599,23 @@ class FixpointEngine:
         return counts, total, [lineage[k] for k in sorted(lineage)]
 
     @staticmethod
-    def _gate_obs_aggs(ctx: _CompiledRules) -> tuple[list, list]:
+    def _gate_obs_aggs(ctx: Optional[_CompiledRules]) -> tuple[list, list]:
         """Observation aggregates equivalent to _delta_stats' gate counts:
         one exact count + one conditional sum per gate key (both bounded by
-        the RULE SET's constant vocabulary, never the data's). Riding these
-        on the dedup job's Observation replaces the separate per-round
-        grouped stats job when lineage tracking is off."""
+        the RULE SET's constant vocabulary, never the data's). EXACTNESS:
+        the conditional sums partition the same rows _delta_stats groups, so
+        every decision input — total, per-gate-key counts — is identical.
+        ``ctx=None`` yields the count alone."""
         aggs = [F.count(F.lit(1)).alias("n")]
         keys: list[tuple] = []
-        for p in ctx.gate_preds:
+        for p in ctx.gate_preds if ctx else ():
             keys.append(("p", p))
             aggs.append(
                 F.sum((F.col("p") == F.lit(p)).cast("long")).alias(
                     f"g{len(keys) - 1}"
                 )
             )
-        for p, o in ctx.gate_pairs:
+        for p, o in ctx.gate_pairs if ctx else ():
             keys.append(("po", p, o))
             aggs.append(
                 F.sum(
@@ -593,6 +626,27 @@ class FixpointEngine:
             )
         return aggs, keys
 
+    @staticmethod
+    def _gate_vals(vals, keys: list) -> tuple[dict, int]:
+        """(nonzero gate counts, row count) from observed aggregate values."""
+        preds = {kk: vals[f"g{i}"] for i, kk in enumerate(keys) if vals[f"g{i}"]}
+        return preds, vals["n"]
+
+    def _observed_checkpoint(
+        self, plan: DataFrame, obs_aggs: tuple[list, list]
+    ) -> tuple[DataFrame, dict, int]:
+        """Eager localCheckpoint of ``plan`` whose own job also yields the
+        exact gate counts and row count, via an Observation."""
+        obs = Observation()
+        df = plan.observe(obs, *obs_aggs[0]).localCheckpoint(eager=True)
+        return (df, *self._gate_vals(obs.get, obs_aggs[1]))
+
+    def _gate_pass(self, df: DataFrame, ctx: _CompiledRules) -> tuple[dict, int]:
+        """One aggregate pass over an already materialized relation, for
+        counts no earlier job could observe."""
+        aggs, keys = self._gate_obs_aggs(ctx)
+        return self._gate_vals(df.agg(*aggs).first(), keys)
+
     def _commit_delta(
         self, plan: DataFrame, ctx: _CompiledRules, obs_aggs: tuple[list, list]
     ) -> tuple[DataFrame, dict, int, list[int]]:
@@ -600,52 +654,44 @@ class FixpointEngine:
         (delta, gate counts, exact total, lineage). Lineage tracking keeps
         the separate grouped stats job (per-partition histogram needs
         grouping); otherwise the counts fold into the checkpoint's own job
-        via an Observation — exact either way (EXACTNESS: the conditional
-        sums partition the same rows _delta_stats groups, so every decision
-        input — delta total, per-gate-key counts — is identical)."""
+        via an Observation — exact either way (see _gate_obs_aggs)."""
         if self.track_lineage:
             nd = plan.localCheckpoint(eager=True)
             preds, total, lineage = self._delta_stats(nd, ctx)
             return nd, preds, total, lineage
-        obs = Observation()
-        aggs, keys = obs_aggs
-        nd = plan.observe(obs, *aggs).localCheckpoint(eager=True)
-        vals = obs.get
-        preds = {}
-        for i, kk in enumerate(keys):
-            c = vals[f"g{i}"] or 0
-            if c:
-                preds[kk] = c
-        return nd, preds, vals["n"], []
+        return (*self._observed_checkpoint(plan, obs_aggs), [])
 
     def _stage0_checkpoint(
-        self, distinct_plan: DataFrame, ctx: _CompiledRules
+        self, distinct_plan: DataFrame, ctx: Optional[_CompiledRules]
     ) -> tuple[DataFrame, int, Optional[tuple]]:
         """Checkpoint the stage-0 distinct with the round-0 stats riding the
         checkpoint's OWN job via an Observation — (facts, row count, stats0)
-        where stats0 = (gate counts, total, lineage) feeds _run's round-0
-        _delta_stats slot. Same EXACTNESS argument as _commit_delta: the
-        conditional sums partition exactly the rows the checkpoint
-        materializes, so every skip-decision input is identical to the
-        separate grouped job's. Lineage tracking keeps the grouped stats job
-        (the per-partition histogram needs grouping) by returning
-        stats0=None."""
-        obs = Observation()
+        where stats0 = (gate counts, total, lineage) feeds _fresh_counts.
+        Count-only (stats0=None) for ``ctx=None`` — a caller that does not
+        yet know its representation — and under lineage tracking, which
+        keeps the grouped stats job (the per-partition histogram needs
+        grouping)."""
         if self.track_lineage:
-            facts = (
-                distinct_plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+            ctx = None
+        facts, preds, n = self._observed_checkpoint(
+            distinct_plan, self._gate_obs_aggs(ctx)
+        )
+        return facts, n, None if ctx is None else (preds, n, [])
+
+    def _fresh_counts(
+        self, facts: DataFrame, ctx: _CompiledRules, stats0: Optional[tuple]
+    ) -> _Counts:
+        """Round-0 counts of a fresh run, whose delta IS ``facts``: the
+        stage-0 Observation's ``stats0`` when it took them, else the grouped
+        histogram (lineage tracking) or one aggregate pass."""
+        if stats0 is None:
+            stats0 = (
+                self._delta_stats(facts, ctx)
+                if self.track_lineage
+                else (*self._gate_pass(facts, ctx), [])
             )
-            return facts, obs.get["n"], None
-        aggs, keys = self._gate_obs_aggs(ctx)
-        facts = distinct_plan.observe(obs, *aggs).localCheckpoint(eager=True)
-        vals = obs.get
-        preds = {
-            kk: vals[f"g{i}"]
-            for i, kk in enumerate(keys)
-            if vals[f"g{i}"]
-        }
-        return facts, vals["n"], (preds, vals["n"], [])
+        preds, n, lineage = stats0
+        return _Counts(preds, n, preds, n, lineage=lineage)
 
     @staticmethod
     def _atom_key(atom) -> Optional[tuple]:
@@ -713,52 +759,15 @@ class FixpointEngine:
             out[j] = cons
         return out
 
-    def _slice_values(
-        self, facts: DataFrame, kk: tuple, pos: str, totals: dict, cache: dict
-    ) -> Optional[frozenset]:
-        """Distinct s- or o-values of one alpha slice of ``facts``, or None
-        when the slice is too big to collect/use. Cached per (key, pos) and
-        keyed by the slice's current alpha count: facts are append-only set
-        semantics, so an unchanged count proves an unchanged slice."""
-        cnt = totals.get(kk, 0)
-        hit = cache.get((kk, pos))
-        if hit is not None and hit[0] == cnt:
-            return hit[1]
-        vals: Optional[frozenset] = None
-        if self.PRED_SLICE_COLLECT_ROWS < 0:
-            pass  # pruning disabled (tests' sensitivity guard)
-        elif cnt == 0:
-            vals = frozenset()
-        elif cnt <= self.PRED_SLICE_COLLECT_ROWS:
-            rel = facts
-            if "__pb" in rel.columns:
-                rel = rel.filter(F.col("__pb") == _pb_of_const(kk[1]))
-            cond = F.col("p") == F.lit(kk[1])
-            if kk[0] == "po":
-                cond = cond & (F.col("o") == F.lit(kk[2]))
-            col = "s" if pos == "s" else "o"
-            rows = (
-                rel.filter(cond)
-                .select(col)
-                .distinct()
-                .limit(self.PRED_SET_CAP + 1)
-                .collect()
-            )
-            if len(rows) <= self.PRED_SET_CAP:
-                vals = frozenset(r[0] for r in rows)
-        cache[(kk, pos)] = (cnt, vals)
-        return vals
-
     def _warm_slice_cache(
         self, facts: DataFrame, vp_cons: list, totals: dict, cache: dict
     ) -> None:
         """Collect every stale-but-eligible TBox-slice value set in ONE
-        single-pass job. A cold cache otherwise pays one small collect job
-        per slice inside the rule loop (~10 scheduler round trips at round 1
-        on a typical OWL-RL rule set) — a pure per-leg floor that the rest of
-        the round cannot amortize. One scan + one map-side-partial aggregate
-        replaces them; later rounds find every count unchanged and skip the
-        job entirely. Collect size stays bounded: only slices whose exact
+        single-pass job — one scan + one map-side-partial aggregate instead
+        of a collect per slice (~10 scheduler round trips at round 1 on a
+        typical OWL-RL rule set). Later rounds, and incremental batches that
+        carry the cache, find every count unchanged and skip the job
+        entirely. Collect size stays bounded: only slices whose exact
         alpha count is <= PRED_SLICE_COLLECT_ROWS are included, so the
         per-tag collect_set state is capped by construction."""
         if self.PRED_SLICE_COLLECT_ROWS < 0:
@@ -821,11 +830,7 @@ class FixpointEngine:
             cache[(kk, pos)] = (cnt, vals)
 
     def _allowed_preds(
-        self,
-        facts: DataFrame,
-        cons: list[tuple],
-        totals: dict,
-        cache: dict,
+        self, cons: list[tuple], totals: dict, cache: dict
     ) -> Optional[frozenset]:
         """Intersection of the available constraint slices' value sets (a
         safe superset of the variable's matches — using any subset of the
@@ -835,18 +840,21 @@ class FixpointEngine:
         is about the SAME variable (built per-variable by
         _var_pred_constraints), so a feasible binding must appear in every
         constraining slice — intersection is sound. Each slice set is
-        collected over the full ``facts`` relation, while the constraining
-        atom may be joined against a SUB-relation (delta or facts_old, both
-        subsets of facts) — a superset source only widens the result. Slice
-        sets are cached keyed on the slice's exact alpha count: facts are
-        append-only with set semantics, so an unchanged count proves an
-        unchanged slice (_slice_values)."""
+        collected over the full ``facts`` relation (_warm_slice_cache),
+        while the constraining atom may be joined against a SUB-relation
+        (delta or facts_old, both subsets of facts) — a superset source only
+        widens the result. A cached set is used only while its recorded
+        alpha count equals the slice's exact count: facts are append-only
+        with set semantics, so an unchanged count proves an unchanged slice
+        (slices too big to collect have no usable entry)."""
+        if self.PRED_SLICE_COLLECT_ROWS < 0:
+            return None  # pruning disabled (tests' sensitivity guard)
         out: Optional[frozenset] = None
         for kk, pos in cons:
-            s = self._slice_values(facts, kk, pos, totals, cache)
-            if s is None:
+            hit = cache.get((kk, pos))
+            if hit is None or hit[0] != totals.get(kk, 0) or hit[1] is None:
                 continue
-            out = s if out is None else (out & s)
+            out = hit[1] if out is None else (out & hit[1])
         return out
 
     def _delta_pred_values(
@@ -877,6 +885,12 @@ class FixpointEngine:
             )
             out = out.filter(pb)
         return out
+
+    def _mark0(self, name: str) -> None:
+        """Record one setup phase's wall seconds for round 0's metrics."""
+        now = time.time()
+        self._setup_ph[name] = round(now - self._setup_t, 4)
+        self._setup_t = now
 
     def _write_meta(self, *, ids: bool, salt: int = 0) -> None:
         """Record the checkpoint representation. The string path writes
@@ -936,14 +950,7 @@ class FixpointEngine:
         coverage violation raises instead of dropping facts. Ignored in
         string mode."""
         self._clear_stale_checkpoint()
-        self._setup_ph = {}
-        _t = [time.time()]
-
-        def _mark0(name: str) -> None:
-            now = time.time()
-            self._setup_ph[name] = round(now - _t[0], 4)
-            _t[0] = now
-
+        self._setup_ph, self._setup_t = {}, time.time()
         asserted = asserted.select(*TRIPLE_COLS)
         use_ids = self.dict_encode
         n_in: Optional[int] = row_hint
@@ -965,25 +972,25 @@ class FixpointEngine:
             # the old path scanned — and encode is a pure projection whose
             # output is already distinct. Store-auto / forced-store runs
             # keep the explicit count (the store write needs the distinct
-            # LAZY, and store sizing precedes it).
-            facts_str, n_in, stats0 = self._stage0_checkpoint(
-                asserted.distinct(), self._string_ctx
-            )
-            _mark0("stage0_distinct")
+            # LAZY, and store sizing precedes it). It counts rows only: gate
+            # counts depend on the representation n decides. Below the
+            # threshold one pass over the small distinct takes the string
+            # ones; at/above it the encode checkpoint observes the id ones.
+            facts_str, n_in, _ = self._stage0_checkpoint(asserted.distinct(), None)
+            self._mark0("stage0_distinct")
             if n_in < self.dict_threshold:
                 self._write_meta(ids=False)
+                counts = self._fresh_counts(facts_str, self._string_ctx, None)
+                self._mark0("stats0")
                 return self._run(
                     facts_str, facts_str, round0=0, prior_metrics=[],
                     derivations=None, ctx=self._string_ctx, use_store=False,
-                    stats0=stats0,
+                    counts=counts,
                 )
-            # >= threshold: the observed gate counts keyed the STRING ctx;
-            # the id run re-derives its own (one stats job amortized by the
-            # dictionary-scale input)
             salt, term_dict = build_term_dict(
                 self.spark, facts_str, self._const_terms
             )
-            _mark0("dict_build")
+            self._mark0("dict_build")
             ctx = self._ctx_for_salt(salt)
             self._write_meta(ids=True, salt=salt)
             # injectivity was verified by build_term_dict, so encoding the
@@ -991,17 +998,18 @@ class FixpointEngine:
             facts_ids, _, stats0 = self._stage0_checkpoint(
                 encode_ids(facts_str, salt), ctx
             )
-            _mark0("encode")
+            self._mark0("encode")
             raw = self._run(
                 facts_ids, facts_ids, round0=0, prior_metrics=[],
-                derivations=None, ctx=ctx, use_store=False, stats0=stats0,
+                derivations=None, ctx=ctx, use_store=False,
+                counts=self._fresh_counts(facts_ids, ctx, stats0),
             )
             return self._wrap_ids(raw, term_dict, salt, strict=False)
         if n_in is None and (use_ids == "auto" or self.pred_partitioned == "auto"):
             # one count pass (cheap for parquet/checkpointed inputs) decides
             # whether the dictionary's / bucketed store's fixed jobs amortize
             n_in = asserted.count()
-            _mark0("input_count")
+            self._mark0("input_count")
         if use_ids == "auto":
             use_ids = n_in >= self.dict_threshold
         use_store = self._resolve_store(n_in)
@@ -1014,32 +1022,34 @@ class FixpointEngine:
             # checkpoint of the full fact set — the r2-measured ~5x-cost
             # write)
             facts = asserted.distinct()
-            stats0 = None
+            counts = None  # store mode: the store write counts itself
             if not use_store:
                 # the result's `asserted` is the checkpointed distinct —
                 # self-contained outside foreachBatch at zero extra cost
                 facts, _, stats0 = self._stage0_checkpoint(
                     facts, self._string_ctx
                 )
-                _mark0("stage0_distinct")
+                counts = self._fresh_counts(facts, self._string_ctx, stats0)
+                self._mark0("stage0_distinct")
             return self._run(
                 facts, facts, round0=0, prior_metrics=[], derivations=None,
-                ctx=self._string_ctx, use_store=use_store, stats0=stats0,
+                ctx=self._string_ctx, use_store=use_store, counts=counts,
             )
         salt, term_dict = build_term_dict(
             self.spark, asserted, self._const_terms, vocab=vocab
         )
-        _mark0("dict_build")
+        self._mark0("dict_build")
         ctx = self._ctx_for_salt(salt)
         self._write_meta(ids=True, salt=salt)
         facts_ids = encode_ids(asserted, salt).distinct()
-        stats0 = None
+        counts = None
         if not use_store:
             facts_ids, _, stats0 = self._stage0_checkpoint(facts_ids, ctx)
-            _mark0("encode")
+            counts = self._fresh_counts(facts_ids, ctx, stats0)
+            self._mark0("encode")
         raw = self._run(
             facts_ids, facts_ids, round0=0, prior_metrics=[], derivations=None,
-            ctx=ctx, use_store=use_store, stats0=stats0,
+            ctx=ctx, use_store=use_store, counts=counts,
         )
         return self._wrap_ids(raw, term_dict, salt, strict=vocab is not None)
 
@@ -1085,30 +1095,24 @@ class FixpointEngine:
         Decode is strict: a vocabulary coverage miss raises at export rather
         than silently dropping facts."""
         self._clear_stale_checkpoint()
-        self._setup_ph = {}
-        _t = [time.time()]
-
-        def _mark0(name: str) -> None:
-            now = time.time()
-            self._setup_ph[name] = round(now - _t[0], 4)
-            _t[0] = now
-
+        self._setup_ph, self._setup_t = {}, time.time()
         asserted_ids = asserted_ids.select(*TRIPLE_COLS)
         n_in: Optional[int] = row_hint
         if n_in is None and self.pred_partitioned == "auto":
             n_in = asserted_ids.count()
-            _mark0("input_count")
+            self._mark0("input_count")
         use_store = self._resolve_store(n_in)
         ctx = self._ctx_for_salt(salt)
         self._write_meta(ids=True, salt=salt)
         facts_ids = asserted_ids.distinct()
-        stats0 = None
+        counts = None
         if not use_store:
             facts_ids, _, stats0 = self._stage0_checkpoint(facts_ids, ctx)
-            _mark0("stage0_distinct")
+            counts = self._fresh_counts(facts_ids, ctx, stats0)
+            self._mark0("stage0_distinct")
         raw = self._run(
             facts_ids, facts_ids, round0=0, prior_metrics=[], derivations=None,
-            ctx=ctx, use_store=use_store, stats0=stats0,
+            ctx=ctx, use_store=use_store, counts=counts,
         )
         return self._wrap_ids(raw, term_dict, salt, strict=True)
 
@@ -1119,17 +1123,14 @@ class FixpointEngine:
         salt: int,
         strict: bool = False,
     ) -> FixpointResult:
-        return FixpointResult(
+        return replace(
+            raw,
             facts=decode_ids(raw.facts, term_dict, strict=strict),
             asserted=decode_ids(raw.asserted, term_dict, strict=strict),
-            rounds=raw.rounds,
-            metrics=raw.metrics,
-            derivations=raw.derivations,
             facts_ids=raw.facts,
             asserted_ids=raw.asserted,
             term_dict=term_dict,
             salt=salt,
-            facts_store=raw.facts_store,
             strict_decode=strict,
         )
 
@@ -1213,19 +1214,16 @@ class FixpointEngine:
         delta against an ALREADY-materialized store — the reuse pattern the
         reference's Rete gives for free (new triples re-enter the same
         network, README.md:9; SURVEY §2.6 streaming note). Semi-naive rounds
-        then close the gap; unchanged facts are never recomputed."""
+        then close the gap; unchanged facts are never recomputed, nor
+        re-counted: the run continues from ``prev``'s exact gate counts and
+        TBox-slice cache (see FixpointResult.gate_counts)."""
         spo = list(TRIPLE_COLS)
         # checkpoint the incoming batch so the result never holds micro-batch
         # lineage (a foreachBatch DataFrame is only valid inside its batch);
         # the Observation folds the batch-size count into the checkpoint job
-        obs_new = Observation()
-        new_strings = (
-            new_triples.select(*spo)
-            .distinct()
-            .observe(obs_new, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        new_strings, _, n_new = self._observed_checkpoint(
+            new_triples.select(*spo).distinct(), self._gate_obs_aggs(None)
         )
-        n_new = obs_new.get["n"]
         id_mode = prev.facts_ids is not None
         if id_mode:
             salt = prev.salt
@@ -1249,16 +1247,27 @@ class FixpointEngine:
             prev_asserted = prev.asserted
         # seed delta: new triples the store doesn't have. Small batches (the
         # streaming norm) stream the full facts store map-only via the
-        # two-pass broadcast; the Observation folds the delta count into the
-        # checkpoint job (VERDICT r3 next-round #7)
-        obs_d = Observation()
-        delta = (
-            self._anti_small(new_enc, prev_facts, n_new, spo)
-            .observe(obs_d, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        # two-pass broadcast; the Observation folds the delta's count and
+        # gate counts into the checkpoint job (VERDICT r3 next-round #7)
+        delta, delta_preds, d = self._observed_checkpoint(
+            self._anti_small(new_enc, prev_facts, n_new, spo),
+            self._gate_obs_aggs(ctx),
         )
-        d = obs_d.get["n"]
         base = prev.facts_count + d
+        # EXACT: the seed delta is anti-joined against prev_facts (disjoint),
+        # so facts' counts are prev's plus the delta's. A prev with another
+        # gate-key signature (rule set or salt) costs one aggregate pass.
+        if prev.gate_sig == ctx.sig and prev.gate_counts is not None:
+            prev_counts, slices = prev.gate_counts, dict(prev.slice_cache or {})
+        else:
+            (prev_counts, _), slices = self._gate_pass(prev_facts, ctx), {}
+        totals = dict(prev_counts)
+        for kk, cnt in delta_preds.items():
+            totals[kk] = totals.get(kk, 0) + cnt
+        counts = _Counts(
+            delta_preds, d, totals, base, prev_counts, prev.facts_count,
+            slices=slices,
+        )
         use_store = self._resolve_store(base)
         if use_store and self.checkpoint_dir:
             # compaction happens HERE — after the seed delta is materialized
@@ -1277,16 +1286,22 @@ class FixpointEngine:
             ):
                 self._store_compact(sd)
                 prev_facts = self._store_read(sd, prev_round).select(*spo)
-        facts_u = prev_facts.unionByName(delta)
-        # store mode replaces `facts` with the store read inside _run (the
-        # union is only the rebuild fallback), so the O(|facts|) per-batch
-        # re-checkpoint is pure waste there; both inputs are already
-        # checkpointed, keeping lineage bounded either way
-        facts = facts_u if use_store else facts_u.localCheckpoint(eager=True)
         # continue round numbering after the previous run so a shared
         # checkpoint_dir accumulates a consistent delta sequence (no
         # overwrites) and the seed delta itself is persisted for resume()
         round0 = prev.metrics[-1].round + 1 if prev.metrics else 1
+        # the seed extends facts like any round: a zero-cost re-aliasing
+        # projection of the checkpointed delta (see the round loop), no
+        # O(|facts|) copy, refreshed on the loop's absolute cadence — the
+        # seed also stands in for the previous batch's final round, which
+        # the loop never refreshes on. (In store mode _run reads the store;
+        # the union is only its rebuild fallback.)
+        facts = prev_facts.unionByName(
+            delta.select(*[F.col(c).alias(c) for c in spo])
+        )
+        every = self.facts_refresh
+        if not use_store and 0 in (round0 % every, (round0 - 1) % every):
+            facts = facts.localCheckpoint(eager=True)
         m0 = RoundMetrics(round0, 0, d, base, 0.0, 0, 0, [])
         # the seed round is committed inside _run (commit_seed=True), after
         # the store append it depends on in store mode
@@ -1313,6 +1328,7 @@ class FixpointEngine:
             ctx=ctx,
             use_store=use_store,
             commit_seed=True,
+            counts=counts,
         )
         if id_mode:
             return self._wrap_ids(raw, term_dict, salt)
@@ -1388,24 +1404,11 @@ class FixpointEngine:
             # delta (worst case it replays round-0 semantics), it never
             # under-derives.
             last = rounds[-1]
-            sdf = self.spark.read.parquet(sd)
-            facts = (
-                sdf.filter(F.col("__rnd") <= last)
-                .select(*TRIPLE_COLS)
-                .localCheckpoint(eager=True)
-            )
-            delta_last = (
-                sdf.filter(F.col("__rnd") == last)
-                .select(*TRIPLE_COLS)
-                .localCheckpoint(eager=True)
-            )
-            facts_old = (
-                sdf.filter(F.col("__rnd") < last)
-                .select(*TRIPLE_COLS)
-                .localCheckpoint(eager=True)
-                if len(rounds) > 1
-                else _empty_like(facts)
-            )
+            stamp = F.col("__rnd")
+            sdf = self.spark.read.parquet(sd).filter(stamp <= last)
+            facts_p = sdf.select(*TRIPLE_COLS)
+            delta_p = sdf.filter(stamp == last).select(*TRIPLE_COLS)
+            old_p = sdf.filter(stamp < last).select(*TRIPLE_COLS)
         else:
             deltas = [
                 self.spark.read.parquet(
@@ -1414,17 +1417,17 @@ class FixpointEngine:
                 .select(*TRIPLE_COLS)
                 for r in rounds
             ]
-            facts = reduce(DataFrame.unionByName, deltas).localCheckpoint(eager=True)
-            delta_last = deltas[-1].localCheckpoint(eager=True)
-            facts_old = (
-                reduce(DataFrame.unionByName, deltas[:-1]).localCheckpoint(eager=True)
-                if len(deltas) > 1
-                else _empty_like(facts)
-            )
-        n_facts: Optional[int] = (
-            facts.count()
-            if id_mode or self.pred_partitioned == "auto"
-            else None
+            facts_p, delta_p = reduce(DataFrame.unionByName, deltas), deltas[-1]
+            old_p = deltas[:-1] and reduce(DataFrame.unionByName, deltas[:-1])
+        # the three eager checkpoints (facts, last delta, facts_old) carry
+        # their exact gate counts and row counts on their own jobs
+        aggs = self._gate_obs_aggs(ctx)
+        facts, facts_preds, n_facts = self._observed_checkpoint(facts_p, aggs)
+        delta_last, delta_preds, n_delta = self._observed_checkpoint(delta_p, aggs)
+        facts_old, old_preds, n_old = (
+            self._observed_checkpoint(old_p, aggs)
+            if len(rounds) > 1
+            else (_empty_like(facts), {}, 0)
         )
         if id_mode:
             # decode coverage gate: every resumed id must be in the rebuilt
@@ -1483,6 +1486,9 @@ class FixpointEngine:
             facts_old0=facts_old,
             ctx=ctx,
             use_store=self._resolve_store(n_facts),
+            counts=_Counts(
+                delta_preds, n_delta, facts_preds, n_facts, old_preds, n_old
+            ),
         )
         if id_mode:
             return self._wrap_ids(raw, term_dict, salt)
@@ -1580,7 +1586,10 @@ class FixpointEngine:
         round0: int,
         delta0: Optional[DataFrame],
         expect_rows: Optional[int] = None,
-    ) -> DataFrame:
+        obs_aggs: Optional[tuple[list, list]] = None,
+    ) -> tuple[DataFrame, Optional[tuple]]:
+        """The store read at ``round0`` and, given ``obs_aggs``, the
+        (gate counts, rows, lineage) the fresh-run rebuild write observed."""
         fresh_run = round0 == 0 and delta0 is None
         rebuild = not os.path.isdir(store_dir) or fresh_run
         if not rebuild and delta0 is not None and expect_rows is not None:
@@ -1598,8 +1607,10 @@ class FixpointEngine:
             # removes the store first and lands here too. On the incremental
             # rebuild path `facts` already includes delta0, so stamping
             # everything with round0 is exact for all `__rnd <= rnd` reads.
+            obs = Observation()
             (
-                facts.withColumn("__rnd", F.lit(round0))
+                (facts.observe(obs, *obs_aggs[0]) if obs_aggs else facts)
+                .withColumn("__rnd", F.lit(round0))
                 .withColumn("__pb", _pb_write_col(facts))
                 .write.partitionBy("__pb")
                 .mode("overwrite")
@@ -1610,7 +1621,10 @@ class FixpointEngine:
             # at the incremental() batch boundary, where the caller can swap
             # its store-backed relations to the compacted files)
             self._store_append(delta0, store_dir, round0)
-        return self._store_read(store_dir, round0)
+        written = None
+        if rebuild and obs_aggs:
+            written = (*self._gate_vals(obs.get, obs_aggs[1]), [])
+        return self._store_read(store_dir, round0), written
 
     def _write_round(
         self, rnd: int, delta: DataFrame, m: RoundMetrics, delta_to_disk: bool = True
@@ -1646,13 +1660,18 @@ class FixpointEngine:
         facts_old0: Optional[DataFrame] = None,
         use_store: Optional[bool] = None,
         commit_seed: bool = False,
-        stats0: Optional[tuple] = None,
+        counts: Optional[_Counts] = None,
     ) -> FixpointResult:
+        """Semi-naive rounds from ``counts``, the caller's exact counts of
+        the first delta, facts and facts_old (see _Counts). Only a fresh
+        store run passes None: its store write counts the input as it
+        materializes it (or, under lineage tracking, the grouped job does)."""
         spark = self.spark
         spo = list(TRIPLE_COLS)
         delta = delta0 if delta0 is not None else facts
         facts_old = facts_old0 if facts_old0 is not None else _empty_like(facts)
         store_dir = None
+        gate_obs = self._gate_obs_aggs(ctx)
         if use_store is None:
             use_store = self.pred_partitioned is True
         if use_store:
@@ -1667,9 +1686,13 @@ class FixpointEngine:
             )
             facts_in = facts
             _t0 = time.time()
-            facts = self._store_init(
-                facts, store_dir, round0, delta0, expect_rows=expect
+            count_write = counts is None and not self.track_lineage
+            facts, written = self._store_init(
+                facts, store_dir, round0, delta0, expect_rows=expect,
+                obs_aggs=gate_obs if count_write else None,
             )
+            if counts is None:
+                counts = self._fresh_counts(facts, ctx, written)
             ph0 = getattr(self, "_setup_ph", None)
             if ph0 is not None:
                 ph0["store_init"] = round(time.time() - _t0, 4)
@@ -1687,32 +1710,14 @@ class FixpointEngine:
             self._write_round(
                 round0, delta, prior_metrics[-1], delta_to_disk=not use_store
             )
-        # one aggregation job per delta yields total count, per-predicate counts
-        # (variant skipping) and per-partition lineage (metrics) together —
-        # unless the caller already collected them off the stage-0
-        # checkpoint's own Observation (stats0), in which case round 0 costs
-        # no job here at all
-        _t0 = time.time()
-        if stats0 is not None and round0 == 0 and delta0 is None:
-            delta_preds, delta_total, delta_lineage = stats0
-        else:
-            delta_preds, delta_total, delta_lineage = self._delta_stats(
-                delta, ctx
-            )
-        ph0 = getattr(self, "_setup_ph", None)
-        if ph0 is not None and round0 == 0:
-            ph0["stats0"] = round(time.time() - _t0, 4)
-        facts_count = (
-            prior_metrics[-1].facts_total
-            if prior_metrics
-            else (delta_total if round0 == 0 and delta0 is None else facts.count())
-        )
+        delta_preds, delta_total = counts.delta, counts.delta_total
+        facts_count = counts.facts_total
         if round0 == 0 and not prior_metrics:
             # round-0 "phases" carry the pre-loop setup jobs (input sizing,
-            # dictionary build, encode/stage, store init, first stats pass) —
-            # the infer-time-outside-rounds that scaling analysis needs
+            # dictionary build, encode/stage, store init) — the
+            # infer-time-outside-rounds that scaling analysis needs
             m0 = RoundMetrics(
-                0, 0, delta_total, facts_count, 0.0, 0, 0, delta_lineage,
+                0, 0, delta_total, facts_count, 0.0, 0, 0, counts.lineage,
                 phases=dict(getattr(self, "_setup_ph", None) or {}),
             )
             prior_metrics = [m0]
@@ -1740,19 +1745,12 @@ class FixpointEngine:
                 ),
             )
 
-        # driver-side alpha counts for facts (whole-rule skip, O5/R7/R8)
-        if round0 == 0 and delta0 is None:
-            totals: dict = dict(delta_preds)
-        else:
-            totals, _, _ = self._delta_stats(facts, ctx)
-        # facts-as-of-previous-round counts (variant pruning): in the first
-        # round facts_old is empty, so only the last delta variant of every
-        # rule can produce anything
-        if facts_old0 is None:
-            totals_old: dict = {}
-            facts_old_total = 0
-        else:
-            totals_old, facts_old_total, _ = self._delta_stats(facts_old, ctx)
+        # driver-side alpha counts for facts (whole-rule skip, O5/R7/R8) and
+        # for facts-as-of-previous-round (variant pruning: in a fresh run's
+        # first round facts_old is empty, so only the last delta variant of
+        # every rule can produce anything)
+        totals = dict(counts.facts)
+        totals_old, facts_old_total = counts.old, counts.old_total
 
         # value-level alpha propagation state: per-rule var-predicate
         # constraint shapes (static), the collected TBox-slice value cache
@@ -1770,7 +1768,7 @@ class FixpointEngine:
         has_vp = any(
             bool(cons) for per_rule in vp_cons for cons in per_rule.values()
         )
-        slice_cache: dict = {}
+        slice_cache = dict(counts.slices)
         delta_pvals: Optional[frozenset] = (
             self._delta_pred_values(delta, delta_total)
             if has_vp and delta_total < facts_count
@@ -1787,166 +1785,203 @@ class FixpointEngine:
         vp = f"__arachne_{os.getpid()}_{id(self) & 0xFFFFFF:x}"
         views = (f"{vp}_facts", f"{vp}_delta", f"{vp}_fold")
         view_sessions: set = set()
-        gate_obs = self._gate_obs_aggs(ctx)
 
         # budget is rounds executed THIS call — a long-lived incremental
         # store whose cumulative round numbering exceeds max_rounds must
         # still close the new batch's fixpoint
         rnd = round0
-        while rnd < round0 + self.max_rounds:
-            rnd += 1
-            t0 = time.time()
-            ph: dict = {}
-            _t = t0
+        try:
+            while rnd < round0 + self.max_rounds:
+                rnd += 1
+                t0 = time.time()
+                ph: dict = {}
+                _t = t0
 
-            def _mark(name: str) -> None:
-                # cumulative wall per phase (a phase can run more than once
-                # per round, e.g. dedup_semi under the derivations path)
-                nonlocal _t
-                now = time.time()
-                ph[name] = round(ph.get(name, 0.0) + (now - _t), 4)
-                _t = now
+                def _mark(name: str) -> None:
+                    # cumulative wall per phase (a phase can run more than once
+                    # per round, e.g. dedup_semi under the derivations path)
+                    nonlocal _t
+                    now = time.time()
+                    ph[name] = round(ph.get(name, 0.0) + (now - _t), 4)
+                    _t = now
 
-            delta_in = delta_total
+                delta_in = delta_total
 
-            # Size-adaptive delta joins: localCheckpointed deltas carry no
-            # size statistics, so Catalyst cannot auto-broadcast them and
-            # plans a SortMergeJoin that shuffles the ENTIRE facts relation
-            # even when the delta is 600 rows (the late-fixpoint norm — at
-            # 80M facts that round measured 9-45 s of pure shuffle). The
-            # driver knows |delta| exactly from the stats job, so hint the
-            # broadcast itself: every delta-variant join then streams the
-            # facts/store side map-only, no Exchange on the 10^8-row side.
-            # One shared object so beta-prefix sharing keys stay stable.
-            delta_rel = (
-                F.broadcast(delta)
-                if 0 < delta_total <= self.broadcast_rows
-                else delta
-            )
-            broadcast_delta = 0 < delta_total <= self.broadcast_rows
-            # createOrReplaceTempView registers in the DATAFRAME's session,
-            # which inside foreachBatch is a per-batch session clone — the
-            # engine's self.spark would not see those views. Run the round's
-            # SQL on the relations' own session; a round whose relations
-            # span DIFFERENT sessions (streaming-incremental unions of a
-            # prior result with a new micro-batch) falls back to the
-            # DataFrame compiler, which is session-agnostic.
-            round_sql = use_sql and (
-                facts.sparkSession is delta.sparkSession
-                is facts_old.sparkSession
-            )
-            if round_sql:
-                sql_sess = facts.sparkSession
-                facts.createOrReplaceTempView(views[0])
-                delta.createOrReplaceTempView(views[1])
-                facts_old.createOrReplaceTempView(views[2])
-                view_sessions.add(sql_sess)
-                rel_pb = (
-                    "__pb" in facts.columns,
-                    "__pb" in delta.columns,
-                    "__pb" in facts_old.columns,
+                # Size-adaptive delta joins: localCheckpointed deltas carry no
+                # size statistics, so Catalyst cannot auto-broadcast them and
+                # plans a SortMergeJoin that shuffles the ENTIRE facts relation
+                # even when the delta is 600 rows (the late-fixpoint norm — at
+                # 80M facts that round measured 9-45 s of pure shuffle). The
+                # driver knows |delta| exactly from the stats job, so hint the
+                # broadcast itself: every delta-variant join then streams the
+                # facts/store side map-only, no Exchange on the 10^8-row side.
+                # One shared object so beta-prefix sharing keys stay stable.
+                delta_rel = (
+                    F.broadcast(delta)
+                    if 0 < delta_total <= self.broadcast_rows
+                    else delta
                 )
-            sql_parts: list[str] = []
+                broadcast_delta = 0 < delta_total <= self.broadcast_rows
+                # createOrReplaceTempView registers in the DATAFRAME's session,
+                # which inside foreachBatch is a per-batch session clone — the
+                # engine's self.spark would not see those views. Run the round's
+                # SQL on the relations' own session; a round whose relations
+                # span DIFFERENT sessions (streaming-incremental unions of a
+                # prior result with a new micro-batch) falls back to the
+                # DataFrame compiler, which is session-agnostic.
+                round_sql = use_sql and (
+                    facts.sparkSession is delta.sparkSession
+                    is facts_old.sparkSession
+                )
+                if round_sql:
+                    sql_sess = facts.sparkSession
+                    facts.createOrReplaceTempView(views[0])
+                    delta.createOrReplaceTempView(views[1])
+                    facts_old.createOrReplaceTempView(views[2])
+                    view_sessions.add(sql_sess)
+                    rel_pb = (
+                        "__pb" in facts.columns,
+                        "__pb" in delta.columns,
+                        "__pb" in facts_old.columns,
+                    )
+                sql_parts: list[str] = []
 
-            cache: dict = {}
-            # one-pass warm of the TBox-slice value cache (round 1 does the
-            # single job; later rounds see unchanged counts and skip it)
-            self._warm_slice_cache(facts, vp_cons, totals, slice_cache)
-            derived_parts: list[DataFrame] = []
-            derived_meta_parts: list[DataFrame] = []
-            rules_skipped = 0
-            variants_skipped = 0
-            # driver-known superset of the round's derived predicates (from
-            # fired CONST-predicate heads); None once any var-predicate head
-            # fires — _dedup_facts_side then probes dd at runtime instead
-            head_preds: Optional[set] = set()
-            restrict_cache: dict = {}
-            for rule_idx, rule in enumerate(ctx.rules):
-                keys = self._rule_keys(rule)
-                # whole-rule skip: an alpha memory (const p / const (p,o) atom)
-                # with zero matching facts overall. EXACT: `totals` holds
-                # per-gate-key counts over ALL accumulated facts — seeded by
-                # one exact _delta_stats aggregate and maintained by adding
-                # new_preds, whose delta is anti-joined against facts first
-                # (disjoint, so no double counting) — a 0 is a true empty
-                # alpha slice, never a proxy (the r4 R8 lesson).
-                if any(kk is not None and totals.get(kk, 0) == 0 for kk in keys):
-                    rules_skipped += 1
-                    continue
-                k = len(rule.body)
-                rule_fired = False
-                for i in range(k):
-                    kk = keys[i]
-                    # delta-variant gate skip. EXACT: delta_preds is this
-                    # round's _delta_stats aggregate over the checkpointed
-                    # delta itself — atom i is joined against exactly that
-                    # relation, so a 0 count proves the variant empty.
-                    if kk is not None and delta_preds.get(kk, 0) == 0:
-                        variants_skipped += 1
+                cache: dict = {}
+                # one-pass warm of the TBox-slice value cache (round 1 does the
+                # single job; later rounds see unchanged counts and skip it)
+                self._warm_slice_cache(facts, vp_cons, totals, slice_cache)
+                derived_parts: list[DataFrame] = []
+                derived_meta_parts: list[DataFrame] = []
+                rules_skipped = 0
+                variants_skipped = 0
+                # driver-known superset of the round's derived predicates (from
+                # fired CONST-predicate heads); None once any var-predicate head
+                # fires — _dedup_facts_side then probes dd at runtime instead
+                head_preds: Optional[set] = set()
+                restrict_cache: dict = {}
+                for rule_idx, rule in enumerate(ctx.rules):
+                    keys = self._rule_keys(rule)
+                    # whole-rule skip: an alpha memory (const p / const (p,o) atom)
+                    # with zero matching facts overall. EXACT: `totals` holds
+                    # per-gate-key counts over ALL accumulated facts — seeded by
+                    # the caller's exact counts (_Counts) and maintained by adding
+                    # new_preds, whose delta is anti-joined against facts first
+                    # (disjoint, so no double counting) — a 0 is a true empty
+                    # alpha slice, never a proxy (the r4 R8 lesson).
+                    if any(kk is not None and totals.get(kk, 0) == 0 for kk in keys):
+                        rules_skipped += 1
                         continue
-                    # variant pruning against facts_old (positions j > i):
-                    # provably-empty slices mean the whole variant is empty.
-                    # EXACT: facts_old_total is the true |facts_old| row
-                    # count carried by the driver (prev_facts_count /
-                    # _delta_stats at loop entry — NOT the gate-pred proxy
-                    # that caused the r4 under-derivation), and totals_old
-                    # is the exact gate-count snapshot taken when facts_old
-                    # was the facts relation
-                    if i < k - 1 and (
-                        facts_old_total == 0
-                        or any(
-                            keys[j] is not None and totals_old.get(keys[j], 0) == 0
-                            for j in range(i + 1, k)
-                        )
-                    ):
-                        variants_skipped += 1
-                        continue
-                    # value-level pruning: resolve each var-predicate atom's
-                    # allowed predicate set from its TBox-slice constraints;
-                    # an empty set (or a delta whose predicates are disjoint
-                    # from the delta-position atom's set) proves the variant
-                    # empty WITHOUT a job, else the set narrows the scan
-                    restrict: dict[int, frozenset] = {}
-                    provably_empty = False
-                    for j, cons in vp_cons[rule_idx].items():
-                        if not cons:
+                    k = len(rule.body)
+                    rule_fired = False
+                    for i in range(k):
+                        kk = keys[i]
+                        # delta-variant gate skip. EXACT: delta_preds is this
+                        # round's exact gate aggregate over the checkpointed
+                        # delta itself — atom i is joined against exactly that
+                        # relation, so a 0 count proves the variant empty.
+                        if kk is not None and delta_preds.get(kk, 0) == 0:
+                            variants_skipped += 1
                             continue
-                        allowed = self._allowed_preds(
-                            facts, cons, totals, slice_cache
-                        )
-                        if allowed is None:
-                            continue
-                        if not allowed or (
-                            j == i
-                            and delta_pvals is not None
-                            and delta_pvals.isdisjoint(allowed)
-                        ):
-                            provably_empty = True
-                            break
-                        restrict[j] = allowed
-                    if provably_empty:
-                        variants_skipped += 1
-                        continue
-                    if round_sql:
-                        sql_parts.extend(
-                            variant_selects(
-                                rule,
-                                i,
-                                [
-                                    views[0] if j < i else (views[1] if j == i else views[2])
-                                    for j in range(k)
-                                ],
-                                [
-                                    rel_pb[0] if j < i else (rel_pb[1] if j == i else rel_pb[2])
-                                    for j in range(k)
-                                ],
-                                restrict,
-                                broadcast_delta,
-                                PB_BUCKETS,
-                                self.PRED_PB_CAP,
+                        # variant pruning against facts_old (positions j > i):
+                        # provably-empty slices mean the whole variant is empty.
+                        # EXACT: facts_old_total is the true |facts_old| row
+                        # count carried by the driver (prev_facts_count /
+                        # the caller's counts — NOT the gate-pred proxy
+                        # that caused the r4 under-derivation), and totals_old
+                        # is the exact gate-count snapshot taken when facts_old
+                        # was the facts relation
+                        if i < k - 1 and (
+                            facts_old_total == 0
+                            or any(
+                                keys[j] is not None and totals_old.get(keys[j], 0) == 0
+                                for j in range(i + 1, k)
                             )
+                        ):
+                            variants_skipped += 1
+                            continue
+                        # value-level pruning: resolve each var-predicate atom's
+                        # allowed predicate set from its TBox-slice constraints;
+                        # an empty set (or a delta whose predicates are disjoint
+                        # from the delta-position atom's set) proves the variant
+                        # empty WITHOUT a job, else the set narrows the scan
+                        restrict: dict[int, frozenset] = {}
+                        provably_empty = False
+                        for j, cons in vp_cons[rule_idx].items():
+                            if not cons:
+                                continue
+                            allowed = self._allowed_preds(
+                                cons, totals, slice_cache
+                            )
+                            if allowed is None:
+                                continue
+                            if not allowed or (
+                                j == i
+                                and delta_pvals is not None
+                                and delta_pvals.isdisjoint(allowed)
+                            ):
+                                provably_empty = True
+                                break
+                            restrict[j] = allowed
+                        if provably_empty:
+                            variants_skipped += 1
+                            continue
+                        if round_sql:
+                            sql_parts.extend(
+                                variant_selects(
+                                    rule,
+                                    i,
+                                    [
+                                        views[0] if j < i else (views[1] if j == i else views[2])
+                                        for j in range(k)
+                                    ],
+                                    [
+                                        rel_pb[0] if j < i else (rel_pb[1] if j == i else rel_pb[2])
+                                        for j in range(k)
+                                    ],
+                                    restrict,
+                                    broadcast_delta,
+                                    PB_BUCKETS,
+                                    self.PRED_PB_CAP,
+                                )
+                            )
+                            rule_fired = True
+                            if head_preds is not None:
+                                for ha in rule.head:
+                                    if _is_const(ha[1]):
+                                        head_preds.add(ha[1])
+                                    else:
+                                        head_preds = None
+                                        break
+                            continue
+                        dfs = [
+                            facts if j < i else (delta_rel if j == i else facts_old)
+                            for j in range(k)
+                        ]
+                        for j, allowed in restrict.items():
+                            rk = (id(dfs[j]), allowed)
+                            if rk not in restrict_cache:
+                                restrict_cache[rk] = self._pred_restrict(
+                                    dfs[j], allowed
+                                )
+                            dfs[j] = restrict_cache[rk]
+                        bound = self._compile_variant(
+                            cache, dfs, rule, with_triples=self.store_derivations
                         )
+                        heads = apply_head(bound, rule.head)
+                        derived_parts.append(heads)
+                        if self.variant_probe is not None:
+                            # debug-only (tools/smallround_probe.py): label each
+                            # union branch so the probe pass below can time and
+                            # attribute per-variant cost; adds extra jobs, never
+                            # on in benchmarks
+                            self._probe_parts.append((rnd, rule.name, i, heads))
                         rule_fired = True
+                        # SUPERSET (proof audit): every derived row comes from a
+                        # compiled variant's head atom, and skipped variants
+                        # derive nothing — so collecting const head predicates
+                        # over compiled variants only covers all of dd's
+                        # predicates; one var-predicate head → None (runtime
+                        # probe in _dedup_facts_side)
                         if head_preds is not None:
                             for ha in rule.head:
                                 if _is_const(ha[1]):
@@ -1954,262 +1989,224 @@ class FixpointEngine:
                                 else:
                                     head_preds = None
                                     break
-                        continue
-                    dfs = [
-                        facts if j < i else (delta_rel if j == i else facts_old)
-                        for j in range(k)
-                    ]
-                    for j, allowed in restrict.items():
-                        rk = (id(dfs[j]), allowed)
-                        if rk not in restrict_cache:
-                            restrict_cache[rk] = self._pred_restrict(
-                                dfs[j], allowed
+                        if self.store_derivations:
+                            derived_meta_parts.append(
+                                apply_head(
+                                    bound,
+                                    rule.head,
+                                    extra=[
+                                        F.array(
+                                            *[F.col(f"__t{j}") for j in range(k)]
+                                        ).alias("body"),
+                                        F.lit(rule.name or "").alias("rule_name"),
+                                    ],
+                                )
                             )
-                        dfs[j] = restrict_cache[rk]
-                    bound = self._compile_variant(
-                        cache, dfs, rule, with_triples=self.store_derivations
+                    if not rule_fired:
+                        rules_skipped += 1
+
+                _mark("compile")
+                if sql_parts:
+                    derived = sql_sess.sql("\nUNION ALL\n".join(sql_parts))
+                elif derived_parts:
+                    derived = reduce(DataFrame.unionByName, derived_parts)
+                if sql_parts or derived_parts:
+                    if self.debug_plan_sink is not None:
+                        self.debug_plan_sink.append(
+                            derived._jdf.queryExecution().executedPlan().toString()
+                        )
+                    # (A fully-fused round — distinct+anti+commit in one job —
+                    # was prototyped and reverted: a plan holding the derive
+                    # self-joins AND the facts anti side together trips Spark
+                    # 4.1's relation deduplication with "key not found: <attr>"
+                    # in InferFiltersFromConstraints, in shapes fresh-aliasing
+                    # does not fix. The two-job round below stands.)
+                    # Dedup new heads, then subtract known facts. The derived set
+                    # is distinct'd and checkpointed FIRST so the driver can pick
+                    # the anti-join physical by its actual size: small derived →
+                    # two broadcast passes that stream facts map-only (semi to
+                    # find already-known triples, anti against that small set)
+                    # instead of shuffling the entire facts store; large derived →
+                    # plain shuffled left_anti. Late fixpoint rounds have tiny
+                    # deltas, so this turns their cost from O(|facts| shuffle)
+                    # into O(|facts| scan).
+                    # Observation folds the row count into the checkpoint's own
+                    # job — one fewer scheduler round-trip per round, which is
+                    # exactly the fixed floor small-delta rounds are bound by
+                    obs = Observation()
+                    dd = (
+                        derived.distinct()
+                        .observe(obs, F.count(F.lit(1)).alias("n"))
+                        .localCheckpoint(eager=True)
                     )
-                    heads = apply_head(bound, rule.head)
-                    derived_parts.append(heads)
+                    n_dd = obs.get["n"]
+                    _mark("derive_distinct")
                     if self.variant_probe is not None:
-                        # debug-only (tools/smallround_probe.py): label each
-                        # union branch so the probe pass below can time and
-                        # attribute per-variant cost; adds extra jobs, never
-                        # on in benchmarks
-                        self._probe_parts.append((rnd, rule.name, i, heads))
-                    rule_fired = True
-                    # SUPERSET (proof audit): every derived row comes from a
-                    # compiled variant's head atom, and skipped variants
-                    # derive nothing — so collecting const head predicates
-                    # over compiled variants only covers all of dd's
-                    # predicates; one var-predicate head → None (runtime
-                    # probe in _dedup_facts_side)
-                    if head_preds is not None:
-                        for ha in rule.head:
-                            if _is_const(ha[1]):
-                                head_preds.add(ha[1])
-                            else:
-                                head_preds = None
-                                break
-                    if self.store_derivations:
-                        derived_meta_parts.append(
-                            apply_head(
-                                bound,
-                                rule.head,
-                                extra=[
-                                    F.array(
-                                        *[F.col(f"__t{j}") for j in range(k)]
-                                    ).alias("body"),
-                                    F.lit(rule.name or "").alias("rule_name"),
-                                ],
+                        # re-execute each branch separately to attribute the
+                        # fused union's cost (inputs are parquet/checkpointed,
+                        # so per-branch conditions match the union run)
+                        for prnd, rname, vi, part in self._probe_parts:
+                            _pt = time.time()
+                            pn = part.count()
+                            self.variant_probe.append(
+                                {
+                                    "round": prnd,
+                                    "rule": rname,
+                                    "variant": vi,
+                                    "rows": pn,
+                                    "seconds": round(time.time() - _pt, 4),
+                                }
                             )
+                        self._probe_parts = []
+                        _mark("probe")
+                    if n_dd == 0:
+                        # fixpoint reached: skip the anti-join AND stats jobs
+                        # entirely (an empty delta has trivially empty counts)
+                        new_delta = dd
+                        new_preds, delta_out, lineage = {}, 0, []
+                    else:
+                        # a facts row can only collide with dd on an (s,p,o) key
+                        # if its predicate occurs in dd, so the facts side of the
+                        # dedup join scans/shuffles ONLY the dd-predicate slice
+                        # (bucket-file-pruned in store mode) — see
+                        # _dedup_facts_side. The probe job only pays for itself
+                        # when the facts relation is large (or file-prunable):
+                        # small fixpoints skip it and scan facts whole.
+                        if store_dir or facts_count >= self.dedup_prune_rows:
+                            facts_side = self._dedup_facts_side(
+                                facts, dd, spo, static_preds=head_preds
+                            )
+                        else:
+                            facts_side = facts
+                        _mark("dedup_probe")
+                        if n_dd <= self.broadcast_rows:
+                            # ONE job, not two: `seen` stays a lazy plan whose
+                            # broadcast build executes the semi-join inline —
+                            # facts is still streamed map-only (no Exchange on
+                            # the big side), but the separate checkpoint job and
+                            # its scheduler round-trip are gone. |seen| <= |dd|
+                            # <= broadcast_rows, so the broadcast stays bounded.
+                            seen = facts_side.join(
+                                F.broadcast(dd), on=spo, how="left_semi"
+                            )
+                            nd_plan = dd.join(
+                                F.broadcast(seen), on=spo, how="left_anti"
+                            )
+                        else:
+                            nd_plan = dd.join(facts_side, on=spo, how="left_anti")
+                        new_delta, new_preds, delta_out, lineage = (
+                            self._commit_delta(nd_plan, ctx, gate_obs)
                         )
-                if not rule_fired:
-                    rules_skipped += 1
-
-            _mark("compile")
-            if sql_parts:
-                derived = sql_sess.sql("\nUNION ALL\n".join(sql_parts))
-            elif derived_parts:
-                derived = reduce(DataFrame.unionByName, derived_parts)
-            if sql_parts or derived_parts:
-                if self.debug_plan_sink is not None:
-                    self.debug_plan_sink.append(
-                        derived._jdf.queryExecution().executedPlan().toString()
-                    )
-                # (A fully-fused round — distinct+anti+commit in one job —
-                # was prototyped and reverted: a plan holding the derive
-                # self-joins AND the facts anti side together trips Spark
-                # 4.1's relation deduplication with "key not found: <attr>"
-                # in InferFiltersFromConstraints, in shapes fresh-aliasing
-                # does not fix. The two-job round below stands.)
-                # Dedup new heads, then subtract known facts. The derived set
-                # is distinct'd and checkpointed FIRST so the driver can pick
-                # the anti-join physical by its actual size: small derived →
-                # two broadcast passes that stream facts map-only (semi to
-                # find already-known triples, anti against that small set)
-                # instead of shuffling the entire facts store; large derived →
-                # plain shuffled left_anti. Late fixpoint rounds have tiny
-                # deltas, so this turns their cost from O(|facts| shuffle)
-                # into O(|facts| scan).
-                # Observation folds the row count into the checkpoint's own
-                # job — one fewer scheduler round-trip per round, which is
-                # exactly the fixed floor small-delta rounds are bound by
-                obs = Observation()
-                dd = (
-                    derived.distinct()
-                    .observe(obs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
-                n_dd = obs.get["n"]
-                _mark("derive_distinct")
-                if self.variant_probe is not None:
-                    # re-execute each branch separately to attribute the
-                    # fused union's cost (inputs are parquet/checkpointed,
-                    # so per-branch conditions match the union run)
-                    for prnd, rname, vi, part in self._probe_parts:
-                        _pt = time.time()
-                        pn = part.count()
-                        self.variant_probe.append(
-                            {
-                                "round": prnd,
-                                "rule": rname,
-                                "variant": vi,
-                                "rows": pn,
-                                "seconds": round(time.time() - _pt, 4),
-                            }
-                        )
-                    self._probe_parts = []
-                    _mark("probe")
-                if n_dd == 0:
-                    # fixpoint reached: skip the anti-join AND stats jobs
-                    # entirely (an empty delta has trivially empty counts)
-                    new_delta = dd
-                    new_preds, delta_out, lineage = {}, 0, []
+                        _mark("dedup_anti")
                 else:
-                    # a facts row can only collide with dd on an (s,p,o) key
-                    # if its predicate occurs in dd, so the facts side of the
-                    # dedup join scans/shuffles ONLY the dd-predicate slice
-                    # (bucket-file-pruned in store mode) — see
-                    # _dedup_facts_side. The probe job only pays for itself
-                    # when the facts relation is large (or file-prunable):
-                    # small fixpoints skip it and scan facts whole.
-                    if store_dir or facts_count >= self.dedup_prune_rows:
-                        facts_side = self._dedup_facts_side(
-                            facts, dd, spo, static_preds=head_preds
-                        )
-                    else:
-                        facts_side = facts
-                    _mark("dedup_probe")
-                    if n_dd <= self.broadcast_rows:
-                        # ONE job, not two: `seen` stays a lazy plan whose
-                        # broadcast build executes the semi-join inline —
-                        # facts is still streamed map-only (no Exchange on
-                        # the big side), but the separate checkpoint job and
-                        # its scheduler round-trip are gone. |seen| <= |dd|
-                        # <= broadcast_rows, so the broadcast stays bounded.
-                        seen = facts_side.join(
-                            F.broadcast(dd), on=spo, how="left_semi"
-                        )
-                        nd_plan = dd.join(
-                            F.broadcast(seen), on=spo, how="left_anti"
-                        )
-                    else:
-                        nd_plan = dd.join(facts_side, on=spo, how="left_anti")
-                    new_delta, new_preds, delta_out, lineage = (
-                        self._commit_delta(nd_plan, ctx, gate_obs)
-                    )
-                    _mark("dedup_anti")
-            else:
-                new_delta = _empty_like(facts).localCheckpoint(eager=True)
-                new_preds, delta_out, lineage = {}, 0, []
-            _mark("stats")
-            # next round's (a)-skip input: the new delta's predicate set —
-            # one bounded job over the just-checkpointed delta (no job at
-            # fixpoint, where delta_out == 0, and none at all when no rule
-            # has a constrained var-predicate atom to consume it)
-            delta_pvals = (
-                self._delta_pred_values(new_delta, delta_out) if has_vp else None
-            )
-            _mark("pred_values")
-
-            if self.store_derivations and delta_out > 0 and derived_meta_parts:
-                meta = reduce(DataFrame.unionByName, derived_meta_parts)
-                # ONE derivation per new fact, chosen deterministically —
-                # the reference stores only the first firing
-                # (RuleEngine.scala:74-78); determinism beats agenda order.
-                w = Window.partitionBy(*spo).orderBy("rule_name", F.col("body"))
-                round_derivs = (
-                    meta.join(new_delta, on=spo, how="left_semi")
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                    .withColumn("round", F.lit(rnd))
-                ).localCheckpoint(eager=True)
-                # provenance survives a crash: the per-round derivation
-                # records checkpoint alongside the per-round delta, and
-                # resume() reloads them (R12/R14 continuity)
-                if self.checkpoint_dir:
-                    round_derivs.write.mode("overwrite").parquet(
-                        os.path.join(self.checkpoint_dir, f"derivs={rnd:04d}")
-                    )
-                derivations = derivations.unionByName(round_derivs).localCheckpoint(
-                    eager=True
+                    new_delta = _empty_like(facts).localCheckpoint(eager=True)
+                    new_preds, delta_out, lineage = {}, 0, []
+                _mark("stats")
+                # next round's (a)-skip input: the new delta's predicate set —
+                # one bounded job over the just-checkpointed delta (no job at
+                # fixpoint, where delta_out == 0, and none at all when no rule
+                # has a constrained var-predicate atom to consume it)
+                delta_pvals = (
+                    self._delta_pred_values(new_delta, delta_out) if has_vp else None
                 )
-                _mark("derivations")
+                _mark("pred_values")
 
-            prev_facts_count = facts_count
-            facts_count += delta_out
-            if store_dir and delta_out > 0:
-                # append BEFORE the metrics line commits the round: a crash
-                # between the two leaves an orphan __rnd partition that
-                # resume's __rnd <= last-complete-round filters exclude
-                self._store_append(new_delta, store_dir, rnd, n_rows=delta_out)
-                _mark("store_append")
-            m = RoundMetrics(
-                round=rnd,
-                delta_in=delta_in,
-                delta_out=delta_out,
-                facts_total=facts_count,
-                seconds=round(time.time() - t0, 4),
-                rules_skipped=rules_skipped,
-                variants_skipped=variants_skipped,
-                partition_lineage=lineage,
-                phases=ph,
-            )
-            metrics.append(m)
-            self._write_round(rnd, new_delta, m, delta_to_disk=store_dir is None)
+                if self.store_derivations and delta_out > 0 and derived_meta_parts:
+                    meta = reduce(DataFrame.unionByName, derived_meta_parts)
+                    # ONE derivation per new fact, chosen deterministically —
+                    # the reference stores only the first firing
+                    # (RuleEngine.scala:74-78); determinism beats agenda order.
+                    w = Window.partitionBy(*spo).orderBy("rule_name", F.col("body"))
+                    round_derivs = (
+                        meta.join(new_delta, on=spo, how="left_semi")
+                        .withColumn("__rn", F.row_number().over(w))
+                        .filter(F.col("__rn") == 1)
+                        .drop("__rn")
+                        .withColumn("round", F.lit(rnd))
+                    ).localCheckpoint(eager=True)
+                    # provenance survives a crash: the per-round derivation
+                    # records checkpoint alongside the per-round delta, and
+                    # resume() reloads them (R12/R14 continuity)
+                    if self.checkpoint_dir:
+                        round_derivs.write.mode("overwrite").parquet(
+                            os.path.join(self.checkpoint_dir, f"derivs={rnd:04d}")
+                        )
+                    derivations = derivations.unionByName(round_derivs).localCheckpoint(
+                        eager=True
+                    )
+                    _mark("derivations")
 
-            if delta_out == 0:
-                break
-
-            totals_old = dict(totals)
-            # EXACT |facts as of the previous round| (== next round's
-            # facts_old): the driver already tracks it as facts_count before
-            # this round's delta was added. The previous gate-pred sum
-            # (sum of tag=="p" entries) was only a LOWER BOUND — rule sets
-            # whose body atoms all have variable predicates produce no "p"
-            # entries, so the proxy read 0 on a non-empty facts_old and the
-            # i < k-1 variant skip silently under-derived (wrong fixpoint;
-            # hypothesis-falsified round 4, minimized to
-            # (?y ?x ?x) ∧ (<p0> ?x ?x) → (<c0> <p0> ?y) over (<p0> <p0> <p0>)).
-            facts_old_total = prev_facts_count
-            for kk, cnt in new_preds.items():
-                totals[kk] = totals.get(kk, 0) + cnt
-            delta_preds, delta_total = new_preds, delta_out
-
-            facts_old = facts
-            if store_dir:
-                # the delta was appended above (O(|delta|), partitioned); the
-                # re-read is a fresh parquet relation, so no LogicalRDD
-                # aliasing with the delta
-                facts = self._store_read(store_dir, rnd)
-            else:
-                # The delta must not appear as the SAME LogicalRDD both
-                # inside the facts union and as the join-side delta relation
-                # — that trips Spark 4.1's relation deduplication ("key not
-                # found: attr") on var-predicate rule shapes. A zero-cost
-                # re-aliasing projection (Project with fresh Alias exprIds
-                # over the checkpointed delta) gives the union branch its own
-                # attribute ids without the O(|delta|) copy job the previous
-                # second localCheckpoint paid every round; the underlying
-                # LogicalRDD is shared, which DeduplicateRelations handles
-                # (regression-covered by the var-predicate property suite).
-                # Every `facts_refresh` rounds the union itself is
-                # re-checkpointed to bound plan width on deep fixpoints.
-                facts = facts.unionByName(
-                    new_delta.select(*[F.col(c).alias(c) for c in spo])
+                prev_facts_count = facts_count
+                facts_count += delta_out
+                if store_dir and delta_out > 0:
+                    # append BEFORE the metrics line commits the round: a crash
+                    # between the two leaves an orphan __rnd partition that
+                    # resume's __rnd <= last-complete-round filters exclude
+                    self._store_append(new_delta, store_dir, rnd, n_rows=delta_out)
+                    _mark("store_append")
+                m = RoundMetrics(
+                    round=rnd,
+                    delta_in=delta_in,
+                    delta_out=delta_out,
+                    facts_total=facts_count,
+                    seconds=round(time.time() - t0, 4),
+                    rules_skipped=rules_skipped,
+                    variants_skipped=variants_skipped,
+                    partition_lineage=lineage,
+                    phases=ph,
                 )
-                if (rnd - round0) % self.facts_refresh == 0:
-                    facts = facts.localCheckpoint(eager=True)
-            delta = new_delta
+                metrics.append(m)
+                self._write_round(rnd, new_delta, m, delta_to_disk=store_dir is None)
 
-        for sess in view_sessions:
-            for v in views:
-                try:
+                if delta_out == 0:
+                    break
+
+                totals_old = dict(totals)
+                # EXACT |facts as of the previous round| (== next round's
+                # facts_old): the driver already tracks it as facts_count before
+                # this round's delta was added. The previous gate-pred sum
+                # (sum of tag=="p" entries) was only a LOWER BOUND — rule sets
+                # whose body atoms all have variable predicates produce no "p"
+                # entries, so the proxy read 0 on a non-empty facts_old and the
+                # i < k-1 variant skip silently under-derived (wrong fixpoint;
+                # hypothesis-falsified round 4, minimized to
+                # (?y ?x ?x) ∧ (<p0> ?x ?x) → (<c0> <p0> ?y) over (<p0> <p0> <p0>)).
+                facts_old_total = prev_facts_count
+                for kk, cnt in new_preds.items():
+                    totals[kk] = totals.get(kk, 0) + cnt
+                delta_preds, delta_total = new_preds, delta_out
+
+                facts_old = facts
+                if store_dir:
+                    # the delta was appended above (O(|delta|), partitioned); the
+                    # re-read is a fresh parquet relation, so no LogicalRDD
+                    # aliasing with the delta
+                    facts = self._store_read(store_dir, rnd)
+                else:
+                    # The delta must not appear as the SAME LogicalRDD both
+                    # inside the facts union and as the join-side delta relation
+                    # — that trips Spark 4.1's relation deduplication ("key not
+                    # found: attr") on var-predicate rule shapes. A zero-cost
+                    # re-aliasing projection (Project with fresh Alias exprIds
+                    # over the checkpointed delta) gives the union branch its own
+                    # attribute ids without the O(|delta|) copy job the previous
+                    # second localCheckpoint paid every round; the underlying
+                    # LogicalRDD is shared, which DeduplicateRelations handles
+                    # (regression-covered by the var-predicate property suite).
+                    # Every `facts_refresh` rounds (absolute numbers, which
+                    # continue across incremental batches) the union itself
+                    # is re-checkpointed to bound plan width.
+                    facts = facts.unionByName(
+                        new_delta.select(*[F.col(c).alias(c) for c in spo])
+                    )
+                    if rnd % self.facts_refresh == 0:
+                        facts = facts.localCheckpoint(eager=True)
+                delta = new_delta
+        finally:
+            # exception-safe: a failing round must not leak its views
+            for sess in view_sessions:
+                for v in views:
                     sess.catalog.dropTempView(v)
-                except Exception:
-                    pass
         return FixpointResult(
             facts=facts.select(*spo) if store_dir else facts,
             asserted=asserted,
@@ -2217,6 +2214,9 @@ class FixpointEngine:
             metrics=metrics,
             derivations=derivations,
             facts_store=facts if store_dir else None,
+            gate_counts=totals,
+            gate_sig=ctx.sig,
+            slice_cache=slice_cache,
         )
 
     def _compile_variant(
