@@ -545,7 +545,8 @@ class FixpointEngine:
     def _delta_stats(
         self, delta: DataFrame, ctx: _CompiledRules
     ) -> tuple[dict, int, list[int]]:
-        """One job -> (alpha counts, total, per-partition lineage).
+        """One job -> (alpha counts, total, per-partition lineage). Runs only
+        under lineage tracking; otherwise Observations take the same counts.
 
         Alpha counts drive rule/variant skipping — the Rete left/right
         unlinking analogue (O5/R7/R8, ReteNodes.scala:88-93,153-158): a key
@@ -560,8 +561,7 @@ class FixpointEngine:
         predicates / (p,o) gate pairs, so collect size is
         O(partitions x |rule consts|) regardless of the data's predicate
         vocabulary — open RDF with millions of distinct p collects the same
-        handful of rows.
-        """
+        handful of rows."""
         if ctx.gate_pairs:
             gate = reduce(
                 lambda a, b: a | b,
