@@ -1286,22 +1286,18 @@ class FixpointEngine:
             ):
                 self._store_compact(sd)
                 prev_facts = self._store_read(sd, prev_round).select(*spo)
+        facts_u = prev_facts.unionByName(delta)
+        # store mode replaces `facts` with the store read inside _run (the
+        # union is only the rebuild fallback), so the O(|facts|) per-batch
+        # re-checkpoint is pure waste there; both inputs are already
+        # checkpointed, keeping lineage bounded either way. In memory the
+        # copy pays for itself: rounds over a lazy union of every delta
+        # since the last refresh measured slower (BENCH.md)
+        facts = facts_u if use_store else facts_u.localCheckpoint(eager=True)
         # continue round numbering after the previous run so a shared
         # checkpoint_dir accumulates a consistent delta sequence (no
         # overwrites) and the seed delta itself is persisted for resume()
         round0 = prev.metrics[-1].round + 1 if prev.metrics else 1
-        # the seed extends facts like any round: a zero-cost re-aliasing
-        # projection of the checkpointed delta (see the round loop), no
-        # O(|facts|) copy, refreshed on the loop's absolute cadence — the
-        # seed also stands in for the previous batch's final round, which
-        # the loop never refreshes on. (In store mode _run reads the store;
-        # the union is only its rebuild fallback.)
-        facts = prev_facts.unionByName(
-            delta.select(*[F.col(c).alias(c) for c in spo])
-        )
-        every = self.facts_refresh
-        if not use_store and 0 in (round0 % every, (round0 - 1) % every):
-            facts = facts.localCheckpoint(eager=True)
         m0 = RoundMetrics(round0, 0, d, base, 0.0, 0, 0, [])
         # the seed round is committed inside _run (commit_seed=True), after
         # the store append it depends on in store mode
@@ -2193,13 +2189,12 @@ class FixpointEngine:
                     # second localCheckpoint paid every round; the underlying
                     # LogicalRDD is shared, which DeduplicateRelations handles
                     # (regression-covered by the var-predicate property suite).
-                    # Every `facts_refresh` rounds (absolute numbers, which
-                    # continue across incremental batches) the union itself
-                    # is re-checkpointed to bound plan width.
+                    # Every `facts_refresh` rounds the union itself is
+                    # re-checkpointed to bound plan width on deep fixpoints.
                     facts = facts.unionByName(
                         new_delta.select(*[F.col(c).alias(c) for c in spo])
                     )
-                    if rnd % self.facts_refresh == 0:
+                    if (rnd - round0) % self.facts_refresh == 0:
                         facts = facts.localCheckpoint(eager=True)
                 delta = new_delta
         finally:
