@@ -315,7 +315,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q1_instances_store(spark, sf_dir):
         """Q1 over a pred_partitioned run via Reasoner.from_result: the
         facade's const-predicate scans read the bucketed store with __pb
-        partition pruning (facade.py _po_store; VERDICT r3 next-round #10).
+        partition pruning (facade.py Reasoner._match; VERDICT r3 next-round #10).
         Customers typed by segment + (seg:BUILDING subClassOf seg:ANY)
         through OWL-RL; instances('seg:ANY') over the STORE must equal the
         plain SQL answer."""

@@ -68,17 +68,28 @@ def decode_ids(
     coverage is a contract rather than a construction): left joins plus a
     per-row assert_true, so a term missing from the dictionary raises at
     scan time instead of silently dropping the fact."""
-    out = ids
-    for c in TRIPLE_COLS:
+    return decode_cols(ids, term_dict, TRIPLE_COLS, strict).select(*TRIPLE_COLS)
+
+
+def decode_cols(
+    df: DataFrame, term_dict: DataFrame, cols, strict: bool = False
+) -> DataFrame:
+    """Decode the id columns ``cols`` of ``df`` to term strings, one
+    dictionary join each (inner, or left + raise_error when ``strict``);
+    every other column passes through, and the column order is kept."""
+    out = df
+    for c in cols:
         m = term_dict.select(
             F.col("id").alias(c), F.col("term").alias(f"__{c}_term")
         )
         out = out.join(m, on=c, how="left" if strict else "inner")
-    if strict:
-        cols = [
-            F.when(
-                F.col(f"__{c}_term").isNotNull(), F.col(f"__{c}_term")
-            )
+
+    def term(c):
+        t = F.col(f"__{c}_term")
+        if not strict:
+            return t.alias(c)
+        return (
+            F.when(t.isNotNull(), t)
             .otherwise(
                 F.raise_error(
                     F.concat(
@@ -92,10 +103,9 @@ def decode_ids(
                 )
             )
             .alias(c)
-            for c in TRIPLE_COLS
-        ]
-        return out.select(*cols)
-    return out.select(*[F.col(f"__{c}_term").alias(c) for c in TRIPLE_COLS])
+        )
+
+    return out.select(*[term(c) if c in cols else F.col(c) for c in df.columns])
 
 
 def build_term_dict(

@@ -1307,12 +1307,6 @@ class FixpointEngine:
         asserted_next = prev_asserted.unionByName(
             self._anti_small(new_enc, prev_asserted, n_new, spo)
         )
-        # bound the asserted plan's depth across long incremental histories:
-        # each batch wraps another union + anti, so every facts_refresh
-        # batches the chain is collapsed into one checkpoint (same cadence
-        # as the facts-union refresh in the round loop)
-        if len(prev.metrics) % max(1, self.facts_refresh) == 0:
-            asserted_next = asserted_next.localCheckpoint(eager=True)
         raw = self._run(
             facts,
             asserted_next,
@@ -1326,6 +1320,14 @@ class FixpointEngine:
             commit_seed=True,
             counts=counts,
         )
+        # bound the asserted plan's depth across long incremental histories:
+        # each batch wraps another union + anti, so the chain is collapsed
+        # into one checkpoint whenever a batch's metrics cross a multiple of
+        # facts_refresh (a batch adds 2+ metrics, so it can step over every
+        # exact multiple)
+        k = max(1, self.facts_refresh)
+        if len(raw.metrics) // k > len(prev.metrics) // k:
+            raw = replace(raw, asserted=raw.asserted.localCheckpoint(eager=True))
         if id_mode:
             return self._wrap_ids(raw, term_dict, salt)
         return raw

@@ -7,12 +7,20 @@ calls with SPARQL (flush, ArachneOWLReasoner.scala:49-58). Here the facts are
 already a DataFrame; every facade call is a Catalyst plan over it. All term
 arguments and results use the *encoded* term strings (model.py); helpers that
 take raw IRIs encode them.
+
+On a dictionary-encoded result (``Reasoner.from_result``) the calls run in
+the result's representation, as the fixpoint loop does: each query constant
+becomes its foldable id literal ``xxhash64(term[, salt])`` (no lookup, no
+job), selection, distinct and anti-joins run on the long-id relation, and
+only the answer columns of the matching rows are decoded through the term
+dictionary, as the last step. An all-constant ask decodes nothing.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Iterable, Optional, Sequence
+from operator import and_
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,8 +37,16 @@ from arachne_spark.model import (
     encode_iri,
     encode_resource,
 )
-from arachne_spark.plans.compiler import apply_head, compile_body
-from arachne_spark.rules import Atom
+from arachne_spark.dictionary import decode_cols, encode_ids, term_id_col
+from arachne_spark.engine import PB_BUCKETS, _pb_of_const
+from arachne_spark.plans.compiler import (
+    alpha_filter,
+    apply_head,
+    bind_vars,
+    join_chain,
+    var_col,
+)
+from arachne_spark.rules import ANY, Atom, atom_vars
 
 _TYPE = encode_iri(RDF_TYPE)
 _SCO = encode_iri(RDFS_SUBCLASSOF)
@@ -41,15 +57,21 @@ _NOTHING = encode_iri(OWL_NOTHING)
 _NAMED = encode_iri(OWL_NAMED_INDIVIDUAL)
 
 
+def _is_iri(c: str):
+    """FILTER(isIRI(?c)) over an encoded term column."""
+    return F.col(c).startswith("<")
+
+
 def transitive_closure(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 64
 ) -> DataFrame:
     """Distributed transitive closure by iterative doubling — O(log depth)
-    rounds. The facade's property-path evaluator (Q4/Q5
-    `rdfs:subClassOf+`, ArachneOWLReasoner.scala:179). Each round joins the
-    closure-so-far with itself, so a path of length 2^k exists after k rounds.
+    rounds: the GLOBAL all-pairs closure of an edge relation. Each round
+    joins the closure-so-far with itself, so a path of length 2^k exists
+    after k rounds. The facade's anchored Q4/Q5 `rdfs:subClassOf+` queries
+    (ArachneOWLReasoner.scala:179) never need it: they walk the seed's
+    broadcast cone (:meth:`Reasoner._anchored_closure`).
     """
-    spark = edges.sparkSession
     closure = edges.select(src, dst).distinct().localCheckpoint(eager=True)
     n = closure.count()
     for _ in range(max_iter):
@@ -69,111 +91,111 @@ def transitive_closure(
 class Reasoner:
     """Query facade over materialized facts (encoded 3-column schema).
 
-    Memoized structures (subClassOf edges, closure, cones) are tied to the
-    FACTS SNAPSHOT passed at construction — DataFrames are immutable, so
-    there is no staleness within one snapshot. After ``incremental()``
-    produces a new result, either build a fresh ``Reasoner(new_result.facts)``
-    or call :meth:`invalidate` with the new facts (the reference re-flushes
-    its caches on ontology change the same way,
-    ref ArachneOWLReasoner.scala:28-39)."""
+    The constructor decides once which relation every call selects from:
+    the bucketed store of a ``pred_partitioned`` run (a constant predicate
+    prunes the scan to its ``__pb`` bucket files), else the long-id facts of
+    a dictionary-encoded run, else ``facts``. Over ids, answers are decoded
+    through ``term_dict`` — strictly (left join + raise_error, as
+    ``decode_ids(strict=True)``) when ``strict_decode`` is set, so a
+    caller-vocabulary coverage miss raises instead of dropping a row.
+
+    Memoized structures (subClassOf edges, cones) are tied to the FACTS
+    SNAPSHOT passed at construction — DataFrames are immutable, so there is
+    no staleness within one snapshot. After ``incremental()`` produces a new
+    result, either build a fresh ``Reasoner.from_result(new_result)`` or call
+    :meth:`invalidate` with the new facts (the reference re-flushes its
+    caches on ontology change the same way, ref
+    ArachneOWLReasoner.scala:28-39)."""
 
     def __init__(
         self,
         facts: DataFrame,
         *,
+        facts_ids: Optional[DataFrame] = None,
         facts_store: Optional[DataFrame] = None,
         term_dict: Optional[DataFrame] = None,
         salt: int = 0,
+        strict_decode: bool = False,
     ):
         self.facts = facts
         # pred_partitioned runs: the raw bucketed store (with __pb), in the
-        # run's representation — const-predicate facade scans then prune to
-        # the predicate's bucket files (VERDICT r3 next-round #10)
+        # run's representation (VERDICT r3 next-round #10)
         self._store = facts_store
         self._term_dict = term_dict
         self._salt = salt
+        self._strict = strict_decode
+        if facts_store is not None:
+            self._rel = facts_store
+        elif facts_ids is not None and term_dict is not None:
+            self._rel = facts_ids
+        else:
+            self._rel = facts
+        self._ids = term_dict is not None and self._rel is not facts
         self._sco_edges_df: Optional[DataFrame] = None
-        self._sco_clo_df: Optional[DataFrame] = None
         self._cone_cache: dict[tuple[str, bool], DataFrame] = {}
 
     @classmethod
     def from_result(cls, res) -> "Reasoner":
-        """Facade over a FixpointResult, store-aware: when the result came
-        from a ``pred_partitioned`` run, const-predicate queries (closure/
-        cone scans included) read the bucketed store and prune to the
-        predicate's __pb partition instead of scanning all facts."""
+        """Facade over a FixpointResult in its own representation: long ids
+        (decoding only the answers) for a dictionary-encoded result, and the
+        bucketed store for a ``pred_partitioned`` run."""
         return cls(
             res.facts,
+            facts_ids=res.facts_ids,
             facts_store=res.facts_store,
             term_dict=res.term_dict,
             salt=res.salt,
+            strict_decode=res.strict_decode,
         )
 
     def invalidate(self, facts: Optional[DataFrame] = None) -> "Reasoner":
         """Drop memoized closure/cone structures, optionally swapping in a
-        new facts snapshot (e.g. an incremental() result). Returns self."""
+        new (string) facts snapshot, e.g. an incremental() result's
+        ``facts``. A new snapshot also drops the ids, store and dictionary,
+        so new facts are never paired with stale ids. Returns self."""
         if facts is not None:
-            self.facts = facts
-            self._store = None
+            self.__init__(facts)
+            return self
         self._sco_edges_df = None
-        self._sco_clo_df = None
         self._cone_cache = {}
         return self
 
     # -- helpers -----------------------------------------------------------
     def _term_key(self, t: str):
-        """The store-representation key for an encoded term: a foldable
-        xxhash64 literal in id mode (constant-folds, so the __pb comparison
+        """The selection-relation key for an encoded term: a foldable
+        xxhash64 literal over ids (constant-folds, so the __pb comparison
         prunes partitions at planning time), the string itself otherwise."""
-        from arachne_spark.dictionary import term_id_col
-
-        if self._term_dict is not None:
+        if self._ids:
             return term_id_col(F.lit(t), self._salt)
         return F.lit(t)
 
-    def _po_store(self, p: str, o: Optional[str]) -> DataFrame:
-        """Const-predicate selection over the bucketed store: filter to the
-        predicate's __pb bucket (partition pruning — 1/PB_BUCKETS of the
-        files) + the predicate key, then decode back to encoded strings."""
-        from arachne_spark.engine import PB_BUCKETS, _pb_of_const
-
-        pk = self._term_key(p)
-        bucket = (
-            F.pmod(pk, F.lit(PB_BUCKETS))
-            if self._term_dict is not None
-            else _pb_of_const(p)
-        )
-        sel = self._store.filter(
-            (F.col("__pb") == bucket) & (F.col("p") == pk)
-        )
-        if o is not None:
-            sel = sel.filter(F.col("o") == self._term_key(o))
-        if self._term_dict is None:
-            return sel.select(*TRIPLE_COLS)
-        d = self._term_dict
-        out = sel.join(
-            d.select(F.col("id").alias("s"), F.col("term").alias("__s")), on="s"
-        )
-        if o is None:
-            out = out.join(
-                d.select(F.col("id").alias("o"), F.col("term").alias("__o")),
-                on="o",
-            ).select(
-                F.col("__s").alias("s"), F.lit(p).alias("p"), F.col("__o").alias("o")
+    def _match(
+        self, s: Optional[str] = None, p: Optional[str] = None,
+        o: Optional[str] = None,
+    ) -> DataFrame:
+        """Triples whose given positions equal the given encoded terms,
+        projected to the free positions (columns named s/p/o, in the
+        selection relation's representation — ids until :meth:`_decode`).
+        On the bucketed store a constant predicate also filters ``__pb``, so
+        the scan prunes to 1/PB_BUCKETS of the files."""
+        given = {c: t for c, t in zip(TRIPLE_COLS, (s, p, o)) if t is not None}
+        conds = [F.col(c) == self._term_key(t) for c, t in given.items()]
+        if self._store is not None and p is not None:
+            bucket = (
+                F.pmod(self._term_key(p), F.lit(PB_BUCKETS))
+                if self._ids
+                else _pb_of_const(p)
             )
-        else:
-            out = out.select(
-                F.col("__s").alias("s"), F.lit(p).alias("p"), F.lit(o).alias("o")
-            )
-        return out
+            conds.insert(0, F.col("__pb") == bucket)
+        rel = self._rel.filter(reduce(and_, conds)) if conds else self._rel
+        return rel.select(*[c for c in TRIPLE_COLS if c not in given])
 
-    def _po(self, p: str, o: Optional[str] = None) -> DataFrame:
-        if self._store is not None:
-            return self._po_store(p, o)
-        df = self.facts.filter(F.col("p") == p)
-        if o is not None:
-            df = df.filter(F.col("o") == o)
-        return df
+    def _decode(self, df: DataFrame) -> DataFrame:
+        """Every column of a selection-relation result as encoded term
+        strings: one dictionary join per column over ids, nothing otherwise."""
+        if not self._ids:
+            return df
+        return decode_cols(df, self._term_dict, df.columns, self._strict)
 
     # -- Q1/Q2: getInstances (ArachneOWLReasoner.scala:74-101) --------------
     def instances(self, cls: str, direct: bool = False) -> DataFrame:
@@ -181,56 +203,37 @@ class Reasoner:
         individuals that hold the indirect_type marker for the class (Q2,
         FILTER NOT EXISTS -> left_anti)."""
         c = encode_iri(cls)
-        inst = (
-            self._po(_TYPE, c)
-            .filter(F.col("s").startswith("<"))  # FILTER(isIRI(?s))
-            .select("s")
-            .distinct()
-        )
+        inst = self._match(p=_TYPE, o=c).distinct()
         if direct:
-            indirect = self._po(_IND, c).select("s")
-            inst = inst.join(indirect, on="s", how="left_anti")
-        return inst
+            inst = inst.join(self._match(p=_IND, o=c), on="s", how="left_anti")
+        return self._decode(inst).filter(_is_iri("s"))  # FILTER(isIRI(?s))
 
     # -- Q3: getTypes (ArachneOWLReasoner.scala:245-276) --------------------
     def types(self, ind: str, direct: bool = False) -> DataFrame:
         i = encode_resource(ind)
         t = (
-            self._po(_TYPE).filter(F.col("s") == i)
-            .filter(F.col("o").startswith("<"))  # FILTER(isIRI(?o)) (:254)
-            .filter(F.col("o") != _NAMED)  # FILTER(?o != owl:NamedIndividual)
+            self._match(s=i, p=_TYPE)
+            # FILTER(?o != owl:NamedIndividual)
+            .filter(F.col("o") != self._term_key(_NAMED))
             .select(F.col("o").alias("cls"))
             .distinct()
         )
         if direct:
-            ind_types = (
-                self._po(_IND).filter(F.col("s") == i)
-                .select(F.col("o").alias("cls"))
-            )
+            ind_types = self._match(s=i, p=_IND).select(F.col("o").alias("cls"))
             t = t.join(ind_types, on="cls", how="left_anti")
-        return t
+        return self._decode(t).filter(_is_iri("cls"))  # FILTER(isIRI(?o)) (:254)
 
     # -- Q4/Q5: sub/superclass property paths (ArachneOWLReasoner.scala:159-223)
     def _sco_edges(self) -> DataFrame:
         """subClassOf edge relation, materialized once per facade instance."""
         if self._sco_edges_df is None:
             self._sco_edges_df = (
-                self._po(_SCO)
+                self._match(p=_SCO)
                 .select(F.col("s").alias("src"), F.col("o").alias("dst"))
                 .distinct()
                 .localCheckpoint(eager=True)
             )
         return self._sco_edges_df
-
-    def _sco_closure(self) -> DataFrame:
-        """GLOBAL closure of the whole subClassOf graph — memoized; only for
-        callers that genuinely need all pairs. The anchored facade queries
-        (subclasses/superclasses) never compute this."""
-        if self._sco_clo_df is None:
-            self._sco_clo_df = transitive_closure(self._sco_edges()).localCheckpoint(
-                eager=True
-            )
-        return self._sco_clo_df
 
     def _anchored_closure(self, seed: str, *, reverse: bool) -> DataFrame:
         """Seed-anchored reachability cone over subClassOf edges — the shape
@@ -242,18 +245,21 @@ class Reasoner:
         doubling-closure, which is quadratic-ish in the whole class graph.
         reverse=True walks edges dst->src (descendants); False walks src->dst
         (ancestors). Results are memoized per (seed, direction).
-        Returns one `cls` column (seed excluded)."""
+        Returns one `cls` column (seed excluded), in the selection
+        relation's representation."""
         key = (seed, reverse)
         if key in self._cone_cache:
             return self._cone_cache[key]
         edges = self._sco_edges()
         probe, out = ("dst", "src") if reverse else ("src", "dst")
-        spark = self.facts.sparkSession
-        visited = spark.createDataFrame([(seed,)], "cls string").localCheckpoint(
-            eager=True
+        seed_key = self._term_key(seed)
+        visited = (
+            self.facts.sparkSession.range(1, numPartitions=1)
+            .select(seed_key.alias("cls"))
+            .localCheckpoint(eager=True)
         )
         frontier = visited
-        while not frontier.isEmpty():
+        while True:
             hop = (
                 edges.join(
                     F.broadcast(frontier), on=edges[probe] == frontier["cls"]
@@ -271,11 +277,15 @@ class Reasoner:
         # (mutual-subClassOf cycle) — the `+` path semantics the global
         # closure gave; one bounded broadcast probe.
         seed_back = (
-            edges.filter(F.col(out) == seed)
+            edges.filter(F.col(out) == seed_key)
             .join(F.broadcast(visited), on=edges[probe] == visited["cls"], how="left_semi")
             .limit(1)
         )
-        cone = visited if not seed_back.isEmpty() else visited.filter(F.col("cls") != seed)
+        cone = (
+            visited
+            if not seed_back.isEmpty()
+            else visited.filter(F.col("cls") != seed_key)
+        )
         cone = cone.localCheckpoint(eager=True)
         self._cone_cache[key] = cone
         return cone
@@ -283,114 +293,102 @@ class Reasoner:
     def subclasses(self, cls: str, direct: bool = False) -> DataFrame:
         c = encode_iri(cls)
         if direct:
-            return (
-                self._po(_SCO, c)
-                .filter(F.col("s").startswith("<"))  # FILTER(isIRI) (:169,:204)
-                .select(F.col("s").alias("cls"))
-                .distinct()
-            )
-        return (
-            self._anchored_closure(c, reverse=True)
-            .filter(F.col("cls").startswith("<"))
-        )
+            sub = self._match(p=_SCO, o=c).select(F.col("s").alias("cls")).distinct()
+        else:
+            sub = self._anchored_closure(c, reverse=True)
+        return self._decode(sub).filter(_is_iri("cls"))  # FILTER(isIRI) (:169,:204)
 
     def superclasses(self, cls: str, direct: bool = False) -> DataFrame:
         c = encode_iri(cls)
         if direct:
-            return (
-                self._po(_SCO).filter(F.col("s") == c)
-                .filter(F.col("o").startswith("<"))  # FILTER(isIRI) (:180)
-                .select(F.col("o").alias("cls"))
-                .distinct()
-            )
-        return (
-            self._anchored_closure(c, reverse=False)
-            .filter(F.col("cls").startswith("<"))
-        )
+            sup = self._match(s=c, p=_SCO).select(F.col("o").alias("cls")).distinct()
+        else:
+            sup = self._anchored_closure(c, reverse=False)
+        return self._decode(sup).filter(_is_iri("cls"))  # FILTER(isIRI) (:180)
 
     # -- Q6: getObjectPropertyValues (incl. inverse, :103-118) --------------
     def object_property_values(
         self, ind: str, prop: str, inverse: bool = False
     ) -> DataFrame:
         i, p = encode_resource(ind), encode_iri(prop)
-        if inverse:
-            # inverse path ^<p>: values are subjects with (?v p ind)
-            return (
-                self._po(p, i)
-                .filter(F.col("s").startswith("<"))  # FILTER(isIRI(?s)) (:113)
-                .select(F.col("s").alias("value"))
-                .distinct()
-            )
-        return (
-            self._po(p).filter(F.col("s") == i)
-            .filter(F.col("o").startswith("<"))
-            .select(F.col("o").alias("value"))
-            .distinct()
-        )
+        # inverse path ^<p>: values are subjects with (?v p ind)
+        vals = self._match(p=p, o=i) if inverse else self._match(s=i, p=p)
+        vals = vals.select(F.col(vals.columns[0]).alias("value")).distinct()
+        return self._decode(vals).filter(_is_iri("value"))  # FILTER(isIRI) (:113)
 
     # -- Q7: getDataPropertyValues (FILTER isLiteral, :120-137) --------------
     def data_property_values(self, ind: str, prop: str) -> DataFrame:
         i, p = encode_resource(ind), encode_iri(prop)
-        return (
-            self._po(p).filter(F.col("s") == i)
-            .filter(F.col("o").startswith('"'))  # FILTER(isLiteral(?o))
-            .select(F.col("o").alias("value"))
-            .distinct()
-        )
+        vals = self._match(s=i, p=p).select(F.col("o").alias("value")).distinct()
+        # FILTER(isLiteral(?o))
+        return self._decode(vals).filter(F.col("value").startswith('"'))
 
     # -- Q8: getSameIndividuals (unioned with self, :145-157) ---------------
     def same_individuals(self, ind: str) -> DataFrame:
         i = encode_resource(ind)
-        spark = self.facts.sparkSession
-        selfdf = spark.createDataFrame([(i,)], "ind string")
-        sames = (
-            self._po(_SAME).filter(F.col("s") == i)
-            .filter(F.col("o").startswith("<"))  # FILTER(isIRI) (:152)
-            .select(F.col("o").alias("ind"))
-        )
+        selfdf = self.facts.sparkSession.createDataFrame([(i,)], "ind string")
+        sames = self._decode(
+            self._match(s=i, p=_SAME).select(F.col("o").alias("ind"))
+        ).filter(_is_iri("ind"))  # FILTER(isIRI) (:152)
         return sames.unionByName(selfdf).distinct()
 
     # -- Q9: getDifferentIndividuals (:60-72) --------------------------------
     def different_individuals(self, ind: str) -> DataFrame:
         i = encode_resource(ind)
-        return (
-            self._po(_DIFF).filter(F.col("s") == i)
-            .filter(F.col("o").startswith("<"))  # FILTER(isIRI) (:67)
-            .select(F.col("o").alias("ind"))
-            .distinct()
-        )
+        diff = self._match(s=i, p=_DIFF).select(F.col("o").alias("ind")).distinct()
+        return self._decode(diff).filter(_is_iri("ind"))  # FILTER(isIRI) (:67)
 
     # -- Q10: isConsistent (ASK ?s type owl:Nothing, negated; :280-291) ------
     def is_consistent(self) -> bool:
-        return self._po(_TYPE, _NOTHING).limit(1).isEmpty()
+        return self._match(p=_TYPE, o=_NOTHING).limit(1).isEmpty()
 
     # -- Q11/Q12: isEntailed (:293-315) ---------------------------------------
     def is_entailed(self, s: str, p: str, o: str) -> bool:
-        """Exact encoded triple present? (ASK)"""
-        return not (
-            self._po(p, o).filter(F.col("s") == s).limit(1).isEmpty()
-        )
+        """Exact encoded triple present? (ASK; over ids nothing is decoded)"""
+        return not self._match(s=s, p=p, o=o).limit(1).isEmpty()
 
     def all_entailed(self, axioms: DataFrame) -> bool:
         """Set version as ONE query (the reference's TODO at :315): anti-join
-        the axiom triples against facts; entailed iff no survivor."""
-        return axioms.select(*TRIPLE_COLS).join(
-            self.facts, on=list(TRIPLE_COLS), how="left_anti"
+        the axiom triples against facts; entailed iff no survivor. Over ids
+        the axioms are encoded (a projection) and the anti-join runs on ids."""
+        axioms = axioms.select(*TRIPLE_COLS)
+        if self._ids:
+            axioms = encode_ids(axioms, self._salt)
+        return axioms.join(
+            self._rel.select(*TRIPLE_COLS), on=list(TRIPLE_COLS), how="left_anti"
         ).limit(1).isEmpty()
 
     # -- Q13: generic query runners (:319-338) --------------------------------
+    def _bindings(self, patterns: Sequence[Atom]) -> DataFrame:
+        """BGP solutions in the selection relation's representation: one
+        :meth:`_match` per pattern (its constants as keys), the
+        repeated-variable guards, and the rule-body join chain; columns are
+        ``var_col`` names."""
+        rels = []
+        for atom in patterns:
+            rel = self._match(
+                **{c: t for c, t in zip(TRIPLE_COLS, atom) if isinstance(t, str)}
+            )
+            # constants were matched as keys: only the repeated-variable
+            # guards of the atom are left to apply
+            guards = tuple(ANY if isinstance(t, str) else t for t in atom)
+            rels.append(bind_vars(alpha_filter(rel, guards), atom))
+        return join_chain(rels, list(patterns))
+
     def select_bgp(self, patterns: Sequence[Atom]) -> DataFrame:
-        """SPARQL basic-graph-pattern SELECT: self-joins of the facts view via
-        the rule-body compiler; result columns are the variable names."""
-        return compile_body([self.facts] * len(patterns), list(patterns))
+        """SPARQL basic-graph-pattern SELECT: self-joins of the facts via the
+        rule-body join chain; result columns are the variable names."""
+        return self._decode(self._bindings(patterns))
 
     def ask_bgp(self, patterns: Sequence[Atom]) -> bool:
-        return not self.select_bgp(patterns).limit(1).isEmpty()
+        return not self._bindings(patterns).limit(1).isEmpty()
 
     def construct_bgp(
         self, where: Sequence[Atom], template: Sequence[Atom]
     ) -> DataFrame:
-        bound = self.select_bgp(where)
+        used = {var_col(v) for a in template for v in atom_vars(a)}
+        bound = self._bindings(where)
+        bound = self._decode(bound.select(*[c for c in bound.columns if c in used]))
         return apply_head(bound, list(template)).distinct()
 
     def sparql(self, query: str):

@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _union_find_components(rows: list, spark) -> DataFrame:
-    """Driver-side union-find for broadcast-scale graphs — same output
-    contract as the iterative path (component = lexicographic min member)."""
+def _union_find(rows: list):
+    """Driver-side union-find over an edge list; returns ``find``, which maps
+    a vertex to its component's lexicographic-min member (union by min keeps
+    the representative deterministic, as the distributed path's min label)."""
     parent: dict = {}
 
     def find(x: str) -> str:
@@ -37,9 +38,15 @@ def _union_find_components(rows: list, spark) -> DataFrame:
     for a, b in rows:
         ra, rb = find(a), find(b)
         if ra != rb:
-            # union by lexicographic min keeps the representative deterministic
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
+    return find
+
+
+def _union_find_components(rows: list, spark) -> DataFrame:
+    """Driver-side union-find for broadcast-scale graphs — same output
+    contract as the iterative path (component = lexicographic min member)."""
+    find = _union_find(rows)
     verts = {v for e in rows for v in e}
     out = [(v, find(v)) for v in sorted(verts)]
     return spark.createDataFrame(out, "vertex string, component string")
@@ -142,21 +149,7 @@ def canonicalize(
             # namespaces apart) — identical connectivity to the distributed
             # path; representative = min IRI within the component
             rows = [("a:" + r["alias"], "i:" + r["canonical_iri"]) for r in head]
-            parent: dict = {}
-
-            def find(x: str) -> str:
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in rows:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
+            find = _union_find(rows)
             iris = sorted({b[2:] for _, b in rows})
             rep: dict = {}
             for iri in iris:

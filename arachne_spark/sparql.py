@@ -6,8 +6,9 @@ executeAsk take a Query parsed from text). The repo's native surface is the
 BGP-atom API (facade.select_bgp/ask_bgp/construct_bgp) plus spark.sql over
 create_view(); this module closes the porting gap by parsing the SPARQL
 subset those users actually run against a reasoner — basic graph patterns —
-into the SAME atom API, so the whole execution path (alpha sharing, join
-chain, store pruning) is reused unchanged.
+into the SAME atom API, so the whole execution path (id-literal constants
+on dictionary-encoded results, join chain, store pruning) is reused
+unchanged.
 
 Supported subset (documented, checked — anything else raises
 NotImplementedError naming the construct):
@@ -41,7 +42,7 @@ from pyspark.sql import functions as F
 
 from arachne_spark.model import RDF_TYPE, encode_iri, encode_literal
 from arachne_spark.plans.compiler import var_col
-from arachne_spark.rules import Atom, Var
+from arachne_spark.rules import Atom, Var, atom_vars
 from arachne_spark.sources.turtle import _unescape
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -99,6 +100,7 @@ class ParsedQuery:
     distinct: bool = False
     template: List[Atom] = field(default_factory=list)
     filters: List[Callable[[DataFrame], Column]] = field(default_factory=list)
+    filter_vars: List[str] = field(default_factory=list)  # vars FILTERs read
     order_by: List[Tuple[str, bool]] = field(default_factory=list)  # (var, desc)
     limit: Optional[int] = None
     offset: Optional[int] = None
@@ -265,7 +267,9 @@ class _Parser:
                 if not filters_allowed:
                     raise ValueError("SPARQL: FILTER not allowed here")
                 self._next()
-                q.filters.append(self._filter())
+                fn, names = self._filter()
+                q.filters.append(fn)
+                q.filter_vars += names
             else:
                 self._check_supported(v.upper() if k == "keyword" else "")
                 self._triples_same_subject(q)
@@ -290,7 +294,7 @@ class _Parser:
                 continue
             break
 
-    def _filter(self) -> Callable[[DataFrame], Column]:
+    def _filter(self) -> Tuple[Callable[[DataFrame], Column], List[str]]:
         self._expect("(")
         k, v = self._peek()
         if k == "keyword" and v.upper() == "REGEX":
@@ -319,7 +323,7 @@ class _Parser:
             def _regex(df: DataFrame, col=col, rx=rx) -> Column:
                 return _term_text(F.col(col)).rlike(rx)
 
-            return _regex
+            return _regex, [var[1][1:]]
         left = self._term(self._next())
         op = self._next()[1]
         if op not in ("=", "!="):
@@ -337,7 +341,7 @@ class _Parser:
             c = _side(l) == _side(r)
             return c if op == "=" else ~c
 
-        return _cmp
+        return _cmp, [t.name for t in (left, right) if isinstance(t, Var)]
 
     def _modifiers(self, q: ParsedQuery) -> None:
         while True:
@@ -395,13 +399,32 @@ def execute_sparql(reasoner, query: str) -> Union[DataFrame, bool]:
 
     SELECT -> DataFrame whose columns are the projected variable names;
     CONSTRUCT -> (s,p,o) DataFrame of distinct instantiated triples;
-    ASK -> bool. Execution reuses the BGP atom path (facade.select_bgp),
-    so every plan property of the native API (alpha sharing, broadcast
-    hints, store pruning) applies to text queries identically."""
+    ASK -> bool. Execution reuses the BGP atom path (the reasoner's
+    ``_bindings``, as select_bgp/ask_bgp/construct_bgp), so every plan
+    property of the native API (id-literal constants on dictionary-encoded
+    results, store pruning) applies to text queries identically. Only the
+    variables the answer or a FILTER reads are decoded; FILTERs run on the
+    decoded terms."""
     q = parse_sparql(query)
     if not q.where:
         raise ValueError("SPARQL: empty graph pattern")
-    bound = reasoner.select_bgp(q.where)
+    seen = dict.fromkeys(t.name for a in q.where for t in a if isinstance(t, Var))
+    if q.kind == "ask":
+        names = []
+    elif q.kind == "construct":
+        names = [v.name for a in q.template for v in atom_vars(a)]
+    else:
+        names = q.select_vars if q.select_vars is not None else list(seen)
+        missing = [n for n in names if n not in seen]
+        if missing:
+            raise ValueError(
+                f"SPARQL: projected variables not in pattern: {missing}"
+            )
+    keep = set(names) | set(q.filter_vars)
+    ids = reasoner._bindings(q.where)
+    bound = reasoner._decode(
+        ids.select(*[var_col(Var(v)) for v in seen if v in keep])
+    )
     for f in q.filters:
         bound = bound.filter(f(bound))
     if q.kind == "ask":
@@ -414,14 +437,6 @@ def execute_sparql(reasoner, query: str) -> Union[DataFrame, bool]:
             out = out.limit(q.limit)
         return out
     # select
-    all_vars = [t.name for a in q.where for t in a if isinstance(t, Var)]
-    seen: dict = {}
-    for v in all_vars:
-        seen.setdefault(v, None)
-    names = q.select_vars if q.select_vars is not None else list(seen)
-    missing = [n for n in names if n not in seen]
-    if missing:
-        raise ValueError(f"SPARQL: projected variables not in pattern: {missing}")
     out = bound.select(*[F.col(var_col(Var(n))).alias(n) for n in names])
     if q.distinct:
         out = out.distinct()

@@ -270,8 +270,177 @@ def test_facade_over_bucketed_store(spark, tmp_path, dict_encode):
 
     # plan-level: the cone-scan edge relation carries a __pb partition filter
     plan = (
-        r_store._po(SCO)._jdf.queryExecution().executedPlan().toString()
+        r_store._match(p=SCO)._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters" in plan, plan
     pf = plan.split("PartitionFilters")[1].split("]")[0]
     assert "__pb" in pf, plan
+
+
+# -- id mode: calls select on ids and decode only their answers -------------
+
+_ID_TBOX = [(e("B"), SCO, e("A")), (e("C"), SCO, e("B"))]
+_ID_ABOX = [
+    (e("i1"), TYPE, e("C")),
+    (e("i2"), TYPE, e("B")),
+    (e("i1"), TYPE, NAMED),
+    ("_:anon", TYPE, e("C")),
+    (e("i1"), e("knows"), e("i2")),
+    (e("i2"), e("knows"), e("i3")),
+    ("_:b1", e("knows"), e("i2")),
+    (e("i1"), e("label"), encode_literal("one")),
+    (e("i1"), SAME, e("i1b")),
+    (e("i1"), DIFF, e("i9")),
+]
+
+
+def _id_result(spark, tmp_path, kind):
+    """A dictionary-encoded fixpoint of the facade fixture graph: in memory,
+    in the predicate-bucketed store, or over a caller vocabulary (strict
+    decode)."""
+    strict = strict_superclass_triples([(s, o) for s, _, o in _ID_TBOX])
+    rules = RuleSet(list(owl_rl_core()) + [indirect_type_rule()])
+    triples = _ID_TBOX + _ID_ABOX + strict
+    opts = {"dict_encode": True}
+    if kind == "store":
+        opts.update(checkpoint_dir=str(tmp_path / "ck"), pred_partitioned=True)
+    eng = FixpointEngine(spark, rules, **opts)
+    vocab = None
+    if kind == "vocab":
+        terms = sorted({t for tr in triples for t in tr})
+        vocab = spark.createDataFrame([(t,) for t in terms], "term string")
+    res = eng.materialize(triples_df(spark, triples), vocab=vocab)
+    assert res.facts_ids is not None
+    assert (res.facts_store is not None) == (kind == "store")
+    assert res.strict_decode == (kind == "vocab")
+    return eng, res
+
+
+@pytest.mark.parametrize("kind", ["memory", "store", "vocab"])
+def test_id_mode_facade_and_sparql_parity(spark, tmp_path, kind):
+    """Every facade call and SPARQL form on a from_result reasoner (which
+    selects on ids) answers exactly as the string-mode facade over the same
+    result's decoded facts."""
+    _, res = _id_result(spark, tmp_path, kind)
+    r_id, r_str = Reasoner.from_result(res), Reasoner(res.facts)
+    assert r_id._ids and not r_str._ids
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    x, y = Var("x"), Var("y")
+    frames = [
+        lambda r: r.instances(EX + "A"),
+        lambda r: r.instances(EX + "B", direct=True),
+        lambda r: r.types(EX + "i1"),
+        lambda r: r.types(EX + "i1", direct=True),
+        lambda r: r.subclasses(EX + "A"),
+        lambda r: r.subclasses(EX + "A", direct=True),
+        lambda r: r.superclasses(EX + "C"),
+        lambda r: r.superclasses(EX + "C", direct=True),
+        lambda r: r.object_property_values(EX + "i1", EX + "knows"),
+        lambda r: r.object_property_values(EX + "i2", EX + "knows", inverse=True),
+        lambda r: r.data_property_values(EX + "i1", EX + "label"),
+        lambda r: r.same_individuals(EX + "i1"),
+        lambda r: r.different_individuals(EX + "i1"),
+        lambda r: r.select_bgp([(x, TYPE, e("C")), (x, e("knows"), y)]),
+        lambda r: r.construct_bgp(
+            [(x, TYPE, e("B"))], [(x, e("inferredType"), e("B"))]
+        ),
+        lambda r: r.sparql(
+            "PREFIX ex: <http://example.org/> SELECT DISTINCT ?x ?y WHERE "
+            "{ ?x ex:knows ?y . ?y a ?c . FILTER(?x != ex:i2) "
+            'FILTER(REGEX(?y, "i[0-9]$")) } ORDER BY ?x ?y LIMIT 5'
+        ),
+        lambda r: r.sparql(
+            "PREFIX ex: <http://example.org/> CONSTRUCT { ?y ex:knownBy ?x } "
+            "WHERE { ?x ex:knows ?y }"
+        ),
+    ]
+    for i, f in enumerate(frames):
+        got, want = rows(f(r_id)), rows(f(r_str))
+        assert got == want, (i, got, want)
+        assert got or i == 12, i  # every call but differentFrom answers
+    asks = [
+        lambda r: r.is_consistent(),
+        lambda r: r.is_entailed(e("i1"), TYPE, e("A")),
+        lambda r: r.is_entailed(e("i1"), TYPE, e("Zzz")),
+        lambda r: r.all_entailed(
+            triples_df(spark, [(e("i1"), TYPE, e("A")), (e("i2"), TYPE, e("A"))])
+        ),
+        lambda r: r.all_entailed(triples_df(spark, [(e("i1"), TYPE, e("Zzz"))])),
+        lambda r: r.ask_bgp([(x, TYPE, e("C")), (x, e("knows"), e("i2"))]),
+        lambda r: r.ask_bgp([(x, e("knows"), x)]),
+        lambda r: r.sparql("PREFIX ex: <http://example.org/> ASK { ex:i1 a ex:A }"),
+        lambda r: r.sparql(
+            "PREFIX ex: <http://example.org/> ASK { ?x ex:knows ?y . "
+            "FILTER(?y = ex:i9) }"
+        ),
+    ]
+    got = [f(r_id) for f in asks]
+    assert got == [f(r_str) for f in asks]
+    assert got == [True, True, False, True, False, True, False, True, False]
+
+
+def _joins(df) -> int:
+    """Join operators in a DataFrame's optimized logical plan."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count("Join ")
+
+
+def test_id_mode_plans_decode_only_answers(spark, tmp_path, monkeypatch):
+    """An all-constant is_entailed runs on ids with no dictionary join at
+    all; instances joins the dictionary once (its one answer column)."""
+    _, res = _id_result(spark, tmp_path, "memory")
+    r = Reasoner.from_result(res)
+    asked = []
+    cls = type(res.facts_ids)
+    orig = cls.isEmpty
+    monkeypatch.setattr(cls, "isEmpty", lambda df: asked.append(df) or orig(df))
+    assert r.is_entailed(e("i1"), TYPE, e("A"))
+    (df,) = asked
+    assert _joins(df) == 0, df._jdf.queryExecution().optimizedPlan().toString()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert e("A") not in plan  # the constant is an id literal
+    assert _joins(r.instances(EX + "A")) == 1
+    assert _joins(r.instances(EX + "B", direct=True)) == 2  # anti + decode
+    # the string-mode facade over the decoded facts pays the 3-join decode
+    assert _joins(Reasoner(res.facts).instances(EX + "A")) == 3
+
+
+def test_id_mode_strict_decode_miss_raises(spark, tmp_path):
+    """Over a caller-vocabulary (strict) result, an answer id missing from
+    the dictionary raises at collect; it is never silently dropped."""
+    _, res = _id_result(spark, tmp_path, "vocab")
+    holed = res.term_dict.filter(res.term_dict["term"] != e("i2"))
+
+    def reasoner(strict):
+        return Reasoner(
+            res.facts, facts_ids=res.facts_ids, term_dict=holed,
+            salt=res.salt, strict_decode=strict,
+        )
+
+    with pytest.raises(Exception, match="decode miss"):
+        reasoner(True).instances(EX + "A").collect()
+    # the inner-join decode of a non-strict result would drop the row
+    got = {r["s"] for r in reasoner(False).instances(EX + "A").collect()}
+    assert e("i2") not in got and e("i1") in got
+
+
+def test_invalidate_from_result_drops_id_state(spark, tmp_path):
+    """invalidate(res2.facts) on a from_result reasoner answers from the new
+    string facts: the old ids, store and dictionary are dropped with the
+    memoized cones, never paired with the new snapshot."""
+    eng, res = _id_result(spark, tmp_path, "memory")
+    r = Reasoner.from_result(res)
+    assert {x["cls"] for x in r.subclasses(EX + "A").collect()} == {e("B"), e("C")}
+    res2 = eng.incremental(
+        res, triples_df(spark, [(e("D"), SCO, e("C")), (e("i7"), TYPE, e("D"))])
+    )
+    assert r.invalidate(res2.facts) is r
+    assert not r._ids and r._rel is res2.facts and r._term_dict is None
+    assert not r._cone_cache and r._sco_edges_df is None
+    assert {x["cls"] for x in r.subclasses(EX + "A").collect()} == {
+        e("B"), e("C"), e("D")
+    }
+    assert e("i7") in {x["s"] for x in r.instances(EX + "A").collect()}
+    assert r.is_entailed(e("i7"), TYPE, e("B"))

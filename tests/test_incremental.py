@@ -223,3 +223,31 @@ def test_round_views_dropped_when_a_round_fails(spark, monkeypatch):
     assert any("__arachne_" in t for t in during)
     left = [t.name for t in spark.catalog.listTables() if "__arachne_" in t.name]
     assert left == []
+
+
+@pytest.mark.parametrize("dict_encode", [True, False])
+def test_asserted_plan_depth_bounded_across_batches(spark, dict_encode):
+    """Each batch wraps the asserted relation in another union; the chain
+    is collapsed whenever a batch's metrics cross a multiple of
+    facts_refresh, so it stays shallow even though no batch leaves the
+    metric count on an exact multiple."""
+    eng = FixpointEngine(
+        spark, load_rules_json(RULES), dict_encode=dict_encode, facts_refresh=8
+    )
+    base = _tbox() + [(_iri(EX + "i0"), _iri(TYPE), _iri(EX + "C0"))]
+    res = eng.materialize(triples_df(spark, base))
+    lens = [len(res.metrics)]
+    for k in range(12):
+        # a typing with no subclass above it: one productive-free round
+        batch = [(_iri(f"{EX}j{k}"), _iri(TYPE), _iri(EX + "C1"))]
+        res = eng.incremental(res, triples_df(spark, batch))
+        lens.append(len(res.metrics))
+    # every batch adds two metrics from an odd start: no count is ever an
+    # exact multiple, so only a crossing refreshes
+    assert all(n % 8 for n in lens) and lens[-1] > 3 * 8, lens
+    asserted = res.asserted_ids if dict_encode else res.asserted
+    plan = asserted._jdf.queryExecution().logical().toString()
+    assert plan.count("Union") <= eng.facts_refresh + 1, plan
+    assert spo_set(res.asserted) == set(base) | {
+        (_iri(f"{EX}j{k}"), _iri(TYPE), _iri(EX + "C1")) for k in range(12)
+    }

@@ -176,3 +176,35 @@ def test_unicode_escape_sequences_still_work(unicode_reasoner):
 def test_non_ascii_regex(unicode_reasoner):
     q = PFX + 'SELECT ?x WHERE { ?x ex:label ?l . FILTER(REGEX(?l, "δοκιμή")) }'
     assert {r["x"] for r in unicode_reasoner.sparql(q).collect()} == {e("i2")}
+
+
+def test_id_mode_decodes_only_answer_and_filter_vars(spark):
+    """On a dictionary-encoded result, a text query joins the dictionary
+    once per variable it projects or filters on — an unprojected variable
+    stays an id — and answers as the string-mode facade does."""
+    abox = [
+        (e("i1"), e("knows"), e("i2")),
+        (e("i2"), e("knows"), e("i3")),
+        (e("i1"), TYPE, e("A")),
+    ]
+    res = FixpointEngine(spark, RuleSet([]), dict_encode=True).materialize(
+        triples_df(spark, abox)
+    )
+    r_id, r_str = Reasoner.from_result(res), Reasoner(res.facts)
+    assert r_id._ids
+
+    def joins(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("Join ")
+
+    for q, n in [
+        ("SELECT ?x WHERE { ?x ex:knows ?y }", 1),
+        ("SELECT ?x WHERE { ?x ex:knows ?y . FILTER(REGEX(?y, \"i3$\")) }", 2),
+        ("SELECT ?y WHERE { ?x ex:knows ?y . ?x a ex:A }", 2),  # 1 BGP + 1 decode
+        ("CONSTRUCT { ex:i1 ex:met ?y } WHERE { ?x ex:knows ?y }", 1),
+    ]:
+        got = r_id.sparql(PFX + q)
+        assert joins(got) == n, q
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, r_str.sparql(PFX + q).collect())
+        ), q
+    assert r_id.sparql(PFX + "ASK { ?x ex:knows ?y . ?y ex:knows ?z }") is True

@@ -240,7 +240,7 @@ def main() -> int:
         from arachne_spark.model import RDFS_SUBCLASSOF, encode_iri
 
         r = Reasoner.from_result(res)
-        fp = plan_of(r._po(encode_iri(RDFS_SUBCLASSOF)))
+        fp = plan_of(r._match(p=encode_iri(RDFS_SUBCLASSOF)))
         if verbose:
             print(fp)
         fpf = (
@@ -256,6 +256,31 @@ def main() -> int:
                 [],
             )
         )
+
+    # 8. facade over a dictionary-encoded result: a from_result query
+    # selects on the long-id facts with id-literal constants (no string
+    # compare) and decodes only its one answer column — one dictionary
+    # join, never the 3-join decode of all facts
+    res = _FE(spark, tcr, dict_encode=True).materialize(
+        spark.createDataFrame(
+            [(f"<n{i}>", "<http://ex/r>", f"<n{i+1}>") for i in range(6)],
+            TRIPLE_SCHEMA,
+        )
+    )
+    q = Reasoner.from_result(res).object_property_values("n0", "http://ex/r")
+    p = plan_of(q)
+    if verbose:
+        print(p)
+    tree = p.split("\n\n")[0]  # the operator tree, before the details
+    n_joins = sum("Join" in line for line in tree.splitlines())
+    results.append(
+        check(
+            "facade over ids: id-literal filters, one answer-column decode",
+            p + f"\njoins={n_joins}",
+            ["joins=1", "Scan ExistingRDD"],
+            ["<n0>", "<http://ex/r>"],
+        )
+    )
 
     n_bad = results.count(False)
     print(f"\n{len(results) - n_bad}/{len(results)} plan checks passed")
