@@ -14,6 +14,9 @@ becomes its foldable id literal ``xxhash64(term[, salt])`` (no lookup, no
 job), selection, distinct and anti-joins run on the long-id relation, and
 only the answer columns of the matching rows are decoded through the term
 dictionary, as the last step. An all-constant ask decodes nothing.
+
+The subClassOf cones of Q4/Q5 are walked on the driver, one collect per hop;
+driver keys cross into the JVM as one Arrow batch, never as pickled rows.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from functools import reduce
 from operator import and_
 from typing import Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,7 +74,7 @@ def transitive_closure(
     joins the closure-so-far with itself, so a path of length 2^k exists
     after k rounds. The facade's anchored Q4/Q5 `rdfs:subClassOf+` queries
     (ArachneOWLReasoner.scala:179) never need it: they walk the seed's
-    broadcast cone (:meth:`Reasoner._anchored_closure`).
+    cone from the driver (:meth:`Reasoner._anchored_closure`).
     """
     closure = edges.select(src, dst).distinct().localCheckpoint(eager=True)
     n = closure.count()
@@ -99,7 +103,12 @@ class Reasoner:
     ``decode_ids(strict=True)``) when ``strict_decode`` is set, so a
     caller-vocabulary coverage miss raises instead of dropping a row.
 
-    Memoized structures (subClassOf edges, cones) are tied to the FACTS
+    ``from_result`` relations are treated as sets (the engine deduplicates
+    facts every round), so a call that projects one constant-bound pattern
+    to its single free position skips the ``distinct``; a caller's
+    DataFrame passed to the constructor keeps it.
+
+    Memoized structures (subClassOf cones) are tied to the FACTS
     SNAPSHOT passed at construction — DataFrames are immutable, so there is
     no staleness within one snapshot. After ``incremental()`` produces a new
     result, either build a fresh ``Reasoner.from_result(new_result)`` or call
@@ -131,15 +140,16 @@ class Reasoner:
         else:
             self._rel = facts
         self._ids = term_dict is not None and self._rel is not facts
-        self._sco_edges_df: Optional[DataFrame] = None
-        self._cone_cache: dict[tuple[str, bool], DataFrame] = {}
+        self._set = False  # is the selection relation known to be a set?
+        self._cone_cache: dict[tuple[str, bool], frozenset] = {}
 
     @classmethod
     def from_result(cls, res) -> "Reasoner":
         """Facade over a FixpointResult in its own representation: long ids
         (decoding only the answers) for a dictionary-encoded result, and the
-        bucketed store for a ``pred_partitioned`` run."""
-        return cls(
+        bucketed store for a ``pred_partitioned`` run. A result's facts are
+        a set."""
+        r = cls(
             res.facts,
             facts_ids=res.facts_ids,
             facts_store=res.facts_store,
@@ -147,6 +157,8 @@ class Reasoner:
             salt=res.salt,
             strict_decode=res.strict_decode,
         )
+        r._set = True
+        return r
 
     def invalidate(self, facts: Optional[DataFrame] = None) -> "Reasoner":
         """Drop memoized closure/cone structures, optionally swapping in a
@@ -156,7 +168,6 @@ class Reasoner:
         if facts is not None:
             self.__init__(facts)
             return self
-        self._sco_edges_df = None
         self._cone_cache = {}
         return self
 
@@ -197,13 +208,19 @@ class Reasoner:
             return df
         return decode_cols(df, self._term_dict, df.columns, self._strict)
 
+    def _distinct(self, df: DataFrame, *, anti: bool = False) -> DataFrame:
+        """A one-free-position :meth:`_match` as a set: already one over a
+        known set. Before an anti-join (``anti``) the distinct stays, else
+        Catalyst pushes the join into each branch of a lazy facts union."""
+        return df if self._set and not anti else df.distinct()
+
     # -- Q1/Q2: getInstances (ArachneOWLReasoner.scala:74-101) --------------
     def instances(self, cls: str, direct: bool = False) -> DataFrame:
         """Named individuals of class `cls` (raw IRI). direct=True filters out
         individuals that hold the indirect_type marker for the class (Q2,
         FILTER NOT EXISTS -> left_anti)."""
         c = encode_iri(cls)
-        inst = self._match(p=_TYPE, o=c).distinct()
+        inst = self._distinct(self._match(p=_TYPE, o=c), anti=direct)
         if direct:
             inst = inst.join(self._match(p=_IND, o=c), on="s", how="left_anti")
         return self._decode(inst).filter(_is_iri("s"))  # FILTER(isIRI(?s))
@@ -211,12 +228,12 @@ class Reasoner:
     # -- Q3: getTypes (ArachneOWLReasoner.scala:245-276) --------------------
     def types(self, ind: str, direct: bool = False) -> DataFrame:
         i = encode_resource(ind)
-        t = (
+        t = self._distinct(
             self._match(s=i, p=_TYPE)
             # FILTER(?o != owl:NamedIndividual)
             .filter(F.col("o") != self._term_key(_NAMED))
-            .select(F.col("o").alias("cls"))
-            .distinct()
+            .select(F.col("o").alias("cls")),
+            anti=direct,
         )
         if direct:
             ind_types = self._match(s=i, p=_IND).select(F.col("o").alias("cls"))
@@ -224,76 +241,48 @@ class Reasoner:
         return self._decode(t).filter(_is_iri("cls"))  # FILTER(isIRI(?o)) (:254)
 
     # -- Q4/Q5: sub/superclass property paths (ArachneOWLReasoner.scala:159-223)
-    def _sco_edges(self) -> DataFrame:
-        """subClassOf edge relation, materialized once per facade instance."""
-        if self._sco_edges_df is None:
-            self._sco_edges_df = (
-                self._match(p=_SCO)
-                .select(F.col("s").alias("src"), F.col("o").alias("dst"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        return self._sco_edges_df
+    def _keys_frame(self, keys) -> DataFrame:
+        """Selection-relation keys as a one-column ``cls`` frame: one Arrow
+        batch (whatever the session conf), no pickled rows or per-key py4j."""
+        typ = pa.int64() if self._ids else pa.string()
+        return self.facts.sparkSession.createDataFrame(
+            pa.table({"cls": pa.array(list(keys), typ)})
+        )
+
+    def _cone_hop(self, frontier: DataFrame, *, reverse: bool) -> DataFrame:
+        """The far ends (``cls``) of the subClassOf edges whose near end is
+        in the broadcast frontier: the edges are scanned, never shuffled."""
+        near, far = ("o", "s") if reverse else ("s", "o")
+        edges = self._match(p=_SCO)
+        return edges.join(
+            F.broadcast(frontier), on=edges[near] == frontier["cls"]
+        ).select(edges[far].alias("cls"))
 
     def _anchored_closure(self, seed: str, *, reverse: bool) -> DataFrame:
         """Seed-anchored reachability cone over subClassOf edges — the shape
         of the reference query (`?s rdfs:subClassOf+ <C>` is anchored at C,
-        ArachneOWLReasoner.scala:179). The frontier/visited sets are
-        cone-sized and BROADCAST into each hop join, so the edge relation is
-        scanned (map-side) but never shuffled, and only the cone reachable
-        from the seed is ever materialized — unlike a global
-        doubling-closure, which is quadratic-ish in the whole class graph.
-        reverse=True walks edges dst->src (descendants); False walks src->dst
-        (ancestors). Results are memoized per (seed, direction).
-        Returns one `cls` column (seed excluded), in the selection
-        relation's representation."""
+        ArachneOWLReasoner.scala:179). A breadth-first walk on the driver,
+        one collect per hop, until a hop adds nothing new: the first hop
+        selects on the seed's key, later ones join the new frontier. Paths
+        have length >= 1, so the seed is in its cone iff a cycle returns to
+        it. reverse=True walks o->s (descendants), False s->o (ancestors).
+        Keys are memoized per (seed, direction); returns one `cls` column in
+        the selection relation's representation."""
         key = (seed, reverse)
-        if key in self._cone_cache:
-            return self._cone_cache[key]
-        edges = self._sco_edges()
-        probe, out = ("dst", "src") if reverse else ("src", "dst")
-        seed_key = self._term_key(seed)
-        visited = (
-            self.facts.sparkSession.range(1, numPartitions=1)
-            .select(seed_key.alias("cls"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = visited
-        while True:
-            hop = (
-                edges.join(
-                    F.broadcast(frontier), on=edges[probe] == frontier["cls"]
-                )
-                .select(F.col(out).alias("cls"))
-                .distinct()
-            )
-            frontier = hop.join(
-                F.broadcast(visited), on="cls", how="left_anti"
-            ).localCheckpoint(eager=True)
-            if frontier.isEmpty():
-                break
-            visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-        # seed ⊑+ seed holds iff an edge leaves the seed back into the cone
-        # (mutual-subClassOf cycle) — the `+` path semantics the global
-        # closure gave; one bounded broadcast probe.
-        seed_back = (
-            edges.filter(F.col(out) == seed_key)
-            .join(F.broadcast(visited), on=edges[probe] == visited["cls"], how="left_semi")
-            .limit(1)
-        )
-        cone = (
-            visited
-            if not seed_back.isEmpty()
-            else visited.filter(F.col("cls") != seed_key)
-        )
-        cone = cone.localCheckpoint(eager=True)
-        self._cone_cache[key] = cone
-        return cone
+        if key not in self._cone_cache:
+            near = "o" if reverse else "s"
+            hop = self._match(p=_SCO, **{near: seed}).toDF("cls")
+            cone: set = set()
+            while new := {row[0] for row in hop.collect()} - cone:
+                cone |= new
+                hop = self._cone_hop(self._keys_frame(new), reverse=reverse)
+            self._cone_cache[key] = frozenset(cone)
+        return self._keys_frame(self._cone_cache[key])
 
     def subclasses(self, cls: str, direct: bool = False) -> DataFrame:
         c = encode_iri(cls)
         if direct:
-            sub = self._match(p=_SCO, o=c).select(F.col("s").alias("cls")).distinct()
+            sub = self._distinct(self._match(p=_SCO, o=c).toDF("cls"))
         else:
             sub = self._anchored_closure(c, reverse=True)
         return self._decode(sub).filter(_is_iri("cls"))  # FILTER(isIRI) (:169,:204)
@@ -301,7 +290,7 @@ class Reasoner:
     def superclasses(self, cls: str, direct: bool = False) -> DataFrame:
         c = encode_iri(cls)
         if direct:
-            sup = self._match(s=c, p=_SCO).select(F.col("o").alias("cls")).distinct()
+            sup = self._distinct(self._match(s=c, p=_SCO).toDF("cls"))
         else:
             sup = self._anchored_closure(c, reverse=False)
         return self._decode(sup).filter(_is_iri("cls"))  # FILTER(isIRI) (:180)
@@ -313,20 +302,23 @@ class Reasoner:
         i, p = encode_resource(ind), encode_iri(prop)
         # inverse path ^<p>: values are subjects with (?v p ind)
         vals = self._match(p=p, o=i) if inverse else self._match(s=i, p=p)
-        vals = vals.select(F.col(vals.columns[0]).alias("value")).distinct()
+        vals = self._distinct(vals.toDF("value"))
         return self._decode(vals).filter(_is_iri("value"))  # FILTER(isIRI) (:113)
 
     # -- Q7: getDataPropertyValues (FILTER isLiteral, :120-137) --------------
     def data_property_values(self, ind: str, prop: str) -> DataFrame:
         i, p = encode_resource(ind), encode_iri(prop)
-        vals = self._match(s=i, p=p).select(F.col("o").alias("value")).distinct()
+        vals = self._distinct(self._match(s=i, p=p).toDF("value"))
         # FILTER(isLiteral(?o))
         return self._decode(vals).filter(F.col("value").startswith('"'))
 
     # -- Q8: getSameIndividuals (unioned with self, :145-157) ---------------
     def same_individuals(self, ind: str) -> DataFrame:
         i = encode_resource(ind)
-        selfdf = self.facts.sparkSession.createDataFrame([(i,)], "ind string")
+        # the self row is built in the JVM: no pickled Python rows
+        selfdf = self.facts.sparkSession.range(1, numPartitions=1).select(
+            F.lit(i).alias("ind")
+        )
         sames = self._decode(
             self._match(s=i, p=_SAME).select(F.col("o").alias("ind"))
         ).filter(_is_iri("ind"))  # FILTER(isIRI) (:152)
@@ -335,7 +327,7 @@ class Reasoner:
     # -- Q9: getDifferentIndividuals (:60-72) --------------------------------
     def different_individuals(self, ind: str) -> DataFrame:
         i = encode_resource(ind)
-        diff = self._match(s=i, p=_DIFF).select(F.col("o").alias("ind")).distinct()
+        diff = self._distinct(self._match(s=i, p=_DIFF).toDF("ind"))
         return self._decode(diff).filter(_is_iri("ind"))  # FILTER(isIRI) (:67)
 
     # -- Q10: isConsistent (ASK ?s type owl:Nothing, negated; :280-291) ------

@@ -6,7 +6,7 @@ from arachne_spark.engine import FixpointEngine
 from arachne_spark.facade import Reasoner, transitive_closure
 from arachne_spark.model import encode_iri, encode_literal
 from arachne_spark.owlrl import owl_rl_core, indirect_type_rule, strict_superclass_triples
-from arachne_spark.rules import RuleSet, Var
+from arachne_spark.rules import RuleSet, Var, load_rules_json
 from tests.conftest import spo_set, triples_df
 
 EX = "http://example.org/"
@@ -84,6 +84,13 @@ def test_q6_q7_property_values(reasoner):
 def test_q8_q9_same_different(reasoner):
     same = {r["ind"] for r in reasoner.same_individuals(EX + "i1").collect()}
     assert same == {e("i1"), e("i1b")}  # unioned with self (:156)
+    # the self row is built in the JVM: no pickled Python RDD under its branch
+    node = reasoner.same_individuals(EX + "i1")._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() != "Union":
+        node = node.children().apply(0)
+    self_branch = node.children().apply(1).toString()
+    assert "Range" in self_branch, self_branch
+    assert "LogicalRDD" not in self_branch and "ExistingRDD" not in self_branch
     diff = {r["ind"] for r in reasoner.different_individuals(EX + "i1").collect()}
     assert diff == {e("i9")}
 
@@ -438,9 +445,181 @@ def test_invalidate_from_result_drops_id_state(spark, tmp_path):
     )
     assert r.invalidate(res2.facts) is r
     assert not r._ids and r._rel is res2.facts and r._term_dict is None
-    assert not r._cone_cache and r._sco_edges_df is None
+    assert not r._cone_cache
     assert {x["cls"] for x in r.subclasses(EX + "A").collect()} == {
         e("B"), e("C"), e("D")
     }
     assert e("i7") in {x["s"] for x in r.instances(EX + "A").collect()}
     assert r.is_entailed(e("i7"), TYPE, e("B"))
+
+
+# -- cone walk and job counts ------------------------------------------------
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched, read from the
+    status store by a job tag (as ``perfbench/tracing.py`` counts them)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"facade-test-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None).iterator()
+    n = 0
+    while jobs.hasNext():
+        n += jobs.next().jobTags().contains(tag)
+    return out, n
+
+
+def _sco_dag(n):
+    """A seeded random subClassOf graph: each class gets up to two random
+    superclasses among the classes before it, plus 2-cycles and a
+    self-loop."""
+    import random
+
+    rnd = random.Random(7)
+    edges = {(i, j) for i in range(1, n) for j in rnd.sample(range(i), min(i, 2))
+             if rnd.random() < 0.7}
+    edges |= {(3, 40), (40, 3), (120, 121), (121, 120), (77, 77)}
+    return sorted(edges)
+
+
+def _bfs(edges, seed, reverse):
+    """Oracle: classes reachable from ``seed`` by a path of length >= 1."""
+    nxt: dict = {}
+    for a, b in edges:
+        x, y = (b, a) if reverse else (a, b)
+        nxt.setdefault(x, set()).add(y)
+    seen, todo = set(), [seed]
+    while todo:
+        for y in nxt.get(todo.pop(), ()):
+            if y not in seen:
+                seen.add(y)
+                todo.append(y)
+    return seen
+
+
+@pytest.mark.parametrize("kind", ["plain", "memory", "store", "vocab"])
+def test_cone_walk_matches_bfs_oracle(spark, tmp_path, kind):
+    """subclasses/superclasses of a random subClassOf graph (with 2-cycles
+    and a self-loop) equal a BFS oracle, over a caller's DataFrame and over
+    id-mode results in memory, in the bucketed store and over a strict
+    caller vocabulary. Each hop is a Spark job or two, so the classes
+    checked are the cycle members, the self-loop, the first and last class
+    and a seeded sample, not all 200."""
+    import random
+
+    n = 200
+    edges = _sco_dag(n)
+    triples = [(e(f"k{a}"), SCO, e(f"k{b}")) for a, b in edges]
+    if kind == "plain":
+        r = Reasoner(triples_df(spark, triples).localCheckpoint())
+    else:
+        # a rule that never fires: the fixpoint is the asserted graph
+        rules = load_rules_json(
+            [{"name": "none", "body": [["?x", EX + "never", "?y"]],
+              "head": [["?y", EX + "never", "?x"]]}]
+        )
+        opts = {"dict_encode": True}
+        if kind == "store":
+            opts.update(checkpoint_dir=str(tmp_path / "ck"), pred_partitioned=True)
+        vocab = None
+        if kind == "vocab":
+            terms = sorted({t for tr in triples for t in tr})
+            vocab = spark.createDataFrame([(t,) for t in terms], "term string")
+        res = FixpointEngine(spark, rules, **opts).materialize(
+            triples_df(spark, triples), vocab=vocab
+        )
+        r = Reasoner.from_result(res)
+        assert r._ids and r._set
+    picks = {0, 3, 40, 77, 120, 121, n - 1} | set(random.Random(11).sample(range(n), 5))
+    for k in sorted(picks):
+        for reverse, call in ((True, r.subclasses), (False, r.superclasses)):
+            got = {x["cls"] for x in call(EX + f"k{k}").collect()}
+            want = {e(f"k{j}") for j in _bfs(edges, k, reverse)}
+            assert got == want, (kind, k, reverse)
+
+
+def test_cone_walk_jobs_per_hop(spark):
+    """subclasses(root) of a 4,095-class complete binary tree returns its
+    4,094 descendants in at most two jobs per hop (12 hops, the last one
+    empty) plus two for the answer: no per-key py4j call, no pickled rows."""
+    from pyspark.sql import functions as F
+
+    def node(c):
+        return F.concat(F.lit(f"<{EX}t"), c.cast("string"), F.lit(">"))
+
+    tree = spark.range(1, 4095).select(
+        node(F.col("id")).alias("s"), F.lit(SCO).alias("p"),
+        node(F.floor((F.col("id") - 1) / 2)).alias("o"),
+    )
+    r = Reasoner(tree.localCheckpoint())
+    n, jobs = _jobs(spark, lambda: r.subclasses(EX + "t0").count())
+    assert n == 4094
+    depth = 11
+    assert jobs <= 2 * (depth + 1) + 2, jobs
+
+
+def test_from_result_call_job_counts(spark):
+    """On a string-mode result, superclasses of a 2-level class runs in at
+    most 5 jobs and instances in at most 2 (no distinct shuffle)."""
+    strict = strict_superclass_triples([(s, o) for s, _, o in _ID_TBOX])
+    rules = RuleSet(list(owl_rl_core()) + [indirect_type_rule()])
+    res = FixpointEngine(spark, rules, dict_encode=False).materialize(
+        triples_df(spark, _ID_TBOX + _ID_ABOX + strict)
+    )
+    r = Reasoner.from_result(res)
+    assert not r._ids and r._set
+    sups, jobs = _jobs(spark, lambda: r.superclasses(EX + "C").count())
+    assert sups == 2 and jobs <= 5, jobs
+    insts, jobs = _jobs(spark, lambda: r.instances(EX + "A").count())
+    assert insts == 3 and jobs <= 2, jobs
+
+
+@pytest.mark.parametrize("mode", ["string", "ids", "store"])
+def test_result_relations_are_sets(spark, tmp_path, mode):
+    """The facade skips ``distinct`` over a from_result relation, so facts,
+    facts_ids and the store projection must hold each triple once: after
+    materialize, after each of 3 incremental() batches (each re-asserting a
+    known triple), and after resume() of the store."""
+    t, sco, same = (iri[1:-1] for iri in (TYPE, SCO, SAME))
+    rules = load_rules_json([
+        {"name": "sco", "body": [["?a", sco, "?b"], ["?b", sco, "?c"]],
+         "head": [["?a", sco, "?c"]]},
+        {"name": "cax", "body": [["?x", t, "?a"], ["?a", sco, "?b"]],
+         "head": [["?x", t, "?b"]]},
+        {"name": "sym", "body": [["?x", same, "?y"]], "head": [["?y", same, "?x"]]},
+    ])
+    opts = {"dict_encode": mode != "string"}
+    if mode == "store":
+        opts.update(checkpoint_dir=str(tmp_path / "ck"), pred_partitioned=True)
+    eng = FixpointEngine(spark, rules, **opts)
+    asserted = _ID_TBOX + _ID_ABOX
+
+    def assert_sets(res):
+        rels = [res.facts, res.facts_ids]
+        if res.facts_store is not None:
+            rels.append(res.facts_store.select("s", "p", "o"))
+        for rel in rels:
+            if rel is not None:
+                assert rel.count() == rel.distinct().count()
+        assert (res.facts_ids is not None) == (mode != "string")
+        assert (res.facts_store is not None) == (mode == "store")
+
+    res = eng.materialize(triples_df(spark, asserted))
+    assert_sets(res)
+    for b in range(3):
+        batch = [asserted[b], (e(f"n{b}"), TYPE, e("C")), (e(f"n{b}"), SAME, e("i2"))]
+        res = eng.incremental(res, triples_df(spark, batch))
+        asserted += batch[1:]
+        assert_sets(res)
+    if mode == "store":
+        n = res.facts.count()
+        again = FixpointEngine(spark, rules, **opts).resume(triples_df(spark, asserted))
+        assert_sets(again)
+        assert again.facts.count() == n
