@@ -38,9 +38,12 @@ Scale design (the reason this exists):
   pruned on the store) — a derived triple can only collide with a fact that
   shares its predicate, so the late-round dedup cost is O(|derivable-pred
   facts|), not O(|facts|).
-- alpha sharing (C2/O4): atom relations are memoized per (relation, blanked-
-  pattern signature) within a round, so rules sharing a selection share the
-  plan subtree.
+- one compile path: each round's surviving variants compile to ONE SQL
+  statement (plans/sqlgen.py) over the round's facts/delta/facts_old views,
+  registered as global temp views so streaming micro-batches, whose
+  relations live in per-batch session clones, resolve them too. Alpha
+  selections (C2/O4) are WHERE conditions pushed into those scans; Catalyst
+  reuses identical exchanges and subqueries across union branches.
 - nonlinear rules (e.g. transitivity written r(x,y) ^ r(y,z) -> r(x,z)) double
   reachable path length per round, so rounds = O(log depth) out of the box.
 - AQE (incl. skew-join splitting) is expected ON; hot-key skew on rdf:type /
@@ -48,8 +51,9 @@ Scale design (the reason this exists):
   are small and broadcast (SURVEY O12).
 
 Provenance (R12/R14): with ``store_derivations=True`` each NEW fact records
-exactly one derivation — (rule, supporting body triples) — matching the
-reference, which records only the FIRST derivation of a fact
+exactly one derivation — (rule, supporting body triples), emitted by a
+second SQL statement over the same round views whose SELECTs also carry each
+body atom's matched triple — matching the reference, which records only the FIRST derivation of a fact
 (RuleEngine.scala:74-78 gates on ``memory.facts.add``), so recursive
 expansion terminates. ``FixpointResult.explain_full`` reproduces
 WorkingMemory.explain (WorkingMemory.scala:21-48): recursively expand derived
@@ -88,14 +92,6 @@ from arachne_spark.dictionary import (
     rule_constants,
 )
 from arachne_spark.model import TRIPLE_COLS
-from arachne_spark.plans.compiler import (
-    alpha_filter,
-    apply_head,
-    atom_signature,
-    bind_vars,
-    join_chain,
-    shared_join_chain,
-)
 from arachne_spark.plans.sqlgen import variant_selects
 from arachne_spark.rules import Any_, Rule, RuleSet, Var
 
@@ -448,7 +444,6 @@ class FixpointEngine:
         pred_partitioned: bool | str = "auto",
         store_threshold: int = 10_000_000,
         store_max_files: int = 2_048,
-        sql_compile: bool = True,
         track_lineage: bool = False,
     ) -> None:
         self.spark = spark
@@ -481,14 +476,6 @@ class FixpointEngine:
         )
         self.store_threshold = store_threshold
         self.store_max_files = store_max_files
-        # compile each round's surviving variants to ONE SQL statement
-        # (plans/sqlgen.py): a single py4j call + one JVM analysis pass
-        # replaces ~150-200 eagerly-analyzed DataFrame ops per round —
-        # measured 0.4-0.7 s/round of driver time on the OWL-RL rule set.
-        # The DataFrame compiler remains for provenance (needs __t structs),
-        # the per-variant probe, and as the differential baseline
-        # (sql_compile=False).
-        self.sql_compile = sql_compile
         # per-round partition-lineage histograms need a grouped aggregate
         # job per round; with tracking off (default) the round's exact total
         # + gate counts ride the dedup job's Observation instead — one fewer
@@ -503,12 +490,6 @@ class FixpointEngine:
         # e.g. a small delta losing its broadcast hint — only show up in
         # the physical join, never in the optimized plan)
         self.debug_plan_sink: Optional[list] = None
-        # debug-only per-variant timing channel: set to a list and every
-        # round's union branches are ALSO counted one-by-one (extra jobs!)
-        # with (round, rule, variant, rows, seconds) appended — the
-        # small-delta-round decomposition tool reads it
-        self.variant_probe: Optional[list] = None
-        self._probe_parts: list = []
 
     def _ctx_for_salt(self, salt: int) -> _CompiledRules:
         """Compiled rules with long-id constants for a given dictionary salt.
@@ -521,26 +502,6 @@ class FixpointEngine:
                 encode_ruleset(self.ruleset, const_ids)
             )
         return self._id_ctx_cache[salt]
-
-    # -- alpha sharing (C2/O4): memoize the FILTER stage per (df, blanked
-    # signature); the variable projection is applied per atom, mirroring the
-    # reference where AlphaNodes share selections but bindings are per-pattern.
-    @staticmethod
-    def _atom_rel(
-        cache: dict, df: DataFrame, atom, triple_as: Optional[str] = None
-    ) -> DataFrame:
-        key = (id(df), atom_signature(atom))
-        if key not in cache:
-            rel = df
-            if "__pb" in df.columns:
-                # predicate-bucketed store: a const-predicate atom prunes to
-                # its bucket's files before the alpha filter (SURVEY O1);
-                # var-predicate atoms scan all buckets, as they must
-                if _is_const(atom[1]):
-                    rel = rel.filter(F.col("__pb") == _pb_of_const(atom[1]))
-                rel = rel.select(*TRIPLE_COLS)
-            cache[key] = alpha_filter(rel, atom)
-        return bind_vars(cache[key], atom, triple_as)
 
     def _delta_stats(
         self, delta: DataFrame, ctx: _CompiledRules
@@ -870,21 +831,6 @@ class FixpointEngine:
         if len(rows) > self.PRED_SET_CAP:
             return None
         return frozenset(r[0] for r in rows)
-
-    @staticmethod
-    def _pred_restrict(df: DataFrame, allowed: frozenset) -> DataFrame:
-        """`p IN (allowed)` pushed onto a facts-side relation; on the
-        __pb-bucketed store the matching bucket literals partition-prune the
-        scan (an OR-chain of foldable bucket expressions, capped — beyond
-        PRED_PB_CAP buckets most files are touched anyway)."""
-        out = df.filter(F.col("p").isin(list(allowed)))
-        if "__pb" in df.columns and 0 < len(allowed) <= FixpointEngine.PRED_PB_CAP:
-            pb = reduce(
-                lambda a, b: a | b,
-                [F.col("__pb") == _pb_of_const(p) for p in allowed],
-            )
-            out = out.filter(pb)
-        return out
 
     def _mark0(self, name: str) -> None:
         """Record one setup phase's wall seconds for round 0's metrics."""
@@ -1773,16 +1719,15 @@ class FixpointEngine:
             else None
         )
 
-        # SQL-text round compilation (plans/sqlgen.py): per-run view names so
-        # concurrent engines on one session never clobber each other
-        use_sql = (
-            self.sql_compile
-            and not self.store_derivations
-            and self.variant_probe is None
-        )
+        # every round compiles to SQL text over three views (plans/sqlgen.py).
+        # They are GLOBAL temp views: inside foreachBatch the batch's
+        # relations belong to a per-batch session clone, whose session temp
+        # views the engine's session cannot see. Per-run names so concurrent
+        # engines never clobber each other.
         vp = f"__arachne_{os.getpid()}_{id(self) & 0xFFFFFF:x}"
         views = (f"{vp}_facts", f"{vp}_delta", f"{vp}_fold")
-        view_sessions: set = set()
+        gdb = spark.conf.get("spark.sql.globalTempDatabase")
+        qviews = tuple(f"{gdb}.{v}" for v in views)
 
         # budget is rounds executed THIS call — a long-lived incremental
         # store whose cumulative round numbering exceeds max_rounds must
@@ -1813,50 +1758,23 @@ class FixpointEngine:
                 # driver knows |delta| exactly from the stats job, so hint the
                 # broadcast itself: every delta-variant join then streams the
                 # facts/store side map-only, no Exchange on the 10^8-row side.
-                # One shared object so beta-prefix sharing keys stay stable.
-                delta_rel = (
-                    F.broadcast(delta)
-                    if 0 < delta_total <= self.broadcast_rows
-                    else delta
-                )
                 broadcast_delta = 0 < delta_total <= self.broadcast_rows
-                # createOrReplaceTempView registers in the DATAFRAME's session,
-                # which inside foreachBatch is a per-batch session clone — the
-                # engine's self.spark would not see those views. Run the round's
-                # SQL on the relations' own session; a round whose relations
-                # span DIFFERENT sessions (streaming-incremental unions of a
-                # prior result with a new micro-batch) falls back to the
-                # DataFrame compiler, which is session-agnostic.
-                round_sql = use_sql and (
-                    facts.sparkSession is delta.sparkSession
-                    is facts_old.sparkSession
-                )
-                if round_sql:
-                    sql_sess = facts.sparkSession
-                    facts.createOrReplaceTempView(views[0])
-                    delta.createOrReplaceTempView(views[1])
-                    facts_old.createOrReplaceTempView(views[2])
-                    view_sessions.add(sql_sess)
-                    rel_pb = (
-                        "__pb" in facts.columns,
-                        "__pb" in delta.columns,
-                        "__pb" in facts_old.columns,
-                    )
+                rels = (facts, delta, facts_old)
+                for v, rel in zip(views, rels):
+                    rel.createOrReplaceGlobalTempView(v)
+                rel_pb = tuple("__pb" in rel.columns for rel in rels)
                 sql_parts: list[str] = []
+                meta_parts: list[str] = []
 
-                cache: dict = {}
                 # one-pass warm of the TBox-slice value cache (round 1 does the
                 # single job; later rounds see unchanged counts and skip it)
                 self._warm_slice_cache(facts, vp_cons, totals, slice_cache)
-                derived_parts: list[DataFrame] = []
-                derived_meta_parts: list[DataFrame] = []
                 rules_skipped = 0
                 variants_skipped = 0
                 # driver-known superset of the round's derived predicates (from
                 # fired CONST-predicate heads); None once any var-predicate head
                 # fires — _dedup_facts_side then probes dd at runtime instead
                 head_preds: Optional[set] = set()
-                restrict_cache: dict = {}
                 for rule_idx, rule in enumerate(ctx.rules):
                     keys = self._rule_keys(rule)
                     # whole-rule skip: an alpha memory (const p / const (p,o) atom)
@@ -1923,56 +1841,24 @@ class FixpointEngine:
                         if provably_empty:
                             variants_skipped += 1
                             continue
-                        if round_sql:
-                            sql_parts.extend(
-                                variant_selects(
-                                    rule,
-                                    i,
-                                    [
-                                        views[0] if j < i else (views[1] if j == i else views[2])
-                                        for j in range(k)
-                                    ],
-                                    [
-                                        rel_pb[0] if j < i else (rel_pb[1] if j == i else rel_pb[2])
-                                        for j in range(k)
-                                    ],
-                                    restrict,
-                                    broadcast_delta,
-                                    PB_BUCKETS,
-                                    self.PRED_PB_CAP,
-                                )
-                            )
-                            rule_fired = True
-                            if head_preds is not None:
-                                for ha in rule.head:
-                                    if _is_const(ha[1]):
-                                        head_preds.add(ha[1])
-                                    else:
-                                        head_preds = None
-                                        break
-                            continue
-                        dfs = [
-                            facts if j < i else (delta_rel if j == i else facts_old)
-                            for j in range(k)
-                        ]
-                        for j, allowed in restrict.items():
-                            rk = (id(dfs[j]), allowed)
-                            if rk not in restrict_cache:
-                                restrict_cache[rk] = self._pred_restrict(
-                                    dfs[j], allowed
-                                )
-                            dfs[j] = restrict_cache[rk]
-                        bound = self._compile_variant(
-                            cache, dfs, rule, with_triples=self.store_derivations
+                        # atom j reads facts (j < i), the delta (j == i)
+                        # or facts_old (j > i)
+                        src = [0 if j < i else (1 if j == i else 2) for j in range(k)]
+                        args = (
+                            rule,
+                            i,
+                            [qviews[x] for x in src],
+                            [rel_pb[x] for x in src],
+                            restrict,
+                            broadcast_delta,
+                            PB_BUCKETS,
+                            self.PRED_PB_CAP,
                         )
-                        heads = apply_head(bound, rule.head)
-                        derived_parts.append(heads)
-                        if self.variant_probe is not None:
-                            # debug-only (tools/smallround_probe.py): label each
-                            # union branch so the probe pass below can time and
-                            # attribute per-variant cost; adds extra jobs, never
-                            # on in benchmarks
-                            self._probe_parts.append((rnd, rule.name, i, heads))
+                        sql_parts.extend(variant_selects(*args))
+                        if self.store_derivations:
+                            meta_parts.extend(
+                                variant_selects(*args, provenance=rule.name or "")
+                            )
                         rule_fired = True
                         # SUPERSET (proof audit): every derived row comes from a
                         # compiled variant's head atom, and skipped variants
@@ -1987,28 +1873,12 @@ class FixpointEngine:
                                 else:
                                     head_preds = None
                                     break
-                        if self.store_derivations:
-                            derived_meta_parts.append(
-                                apply_head(
-                                    bound,
-                                    rule.head,
-                                    extra=[
-                                        F.array(
-                                            *[F.col(f"__t{j}") for j in range(k)]
-                                        ).alias("body"),
-                                        F.lit(rule.name or "").alias("rule_name"),
-                                    ],
-                                )
-                            )
                     if not rule_fired:
                         rules_skipped += 1
 
                 _mark("compile")
                 if sql_parts:
-                    derived = sql_sess.sql("\nUNION ALL\n".join(sql_parts))
-                elif derived_parts:
-                    derived = reduce(DataFrame.unionByName, derived_parts)
-                if sql_parts or derived_parts:
+                    derived = spark.sql("\nUNION ALL\n".join(sql_parts))
                     if self.debug_plan_sink is not None:
                         self.debug_plan_sink.append(
                             derived._jdf.queryExecution().executedPlan().toString()
@@ -2039,24 +1909,6 @@ class FixpointEngine:
                     )
                     n_dd = obs.get["n"]
                     _mark("derive_distinct")
-                    if self.variant_probe is not None:
-                        # re-execute each branch separately to attribute the
-                        # fused union's cost (inputs are parquet/checkpointed,
-                        # so per-branch conditions match the union run)
-                        for prnd, rname, vi, part in self._probe_parts:
-                            _pt = time.time()
-                            pn = part.count()
-                            self.variant_probe.append(
-                                {
-                                    "round": prnd,
-                                    "rule": rname,
-                                    "variant": vi,
-                                    "rows": pn,
-                                    "seconds": round(time.time() - _pt, 4),
-                                }
-                            )
-                        self._probe_parts = []
-                        _mark("probe")
                     if n_dd == 0:
                         # fixpoint reached: skip the anti-join AND stats jobs
                         # entirely (an empty delta has trivially empty counts)
@@ -2109,8 +1961,9 @@ class FixpointEngine:
                 )
                 _mark("pred_values")
 
-                if self.store_derivations and delta_out > 0 and derived_meta_parts:
-                    meta = reduce(DataFrame.unionByName, derived_meta_parts)
+                if self.store_derivations and delta_out > 0:
+                    # the same views, still registered: this round's bodies
+                    meta = spark.sql("\nUNION ALL\n".join(meta_parts))
                     # ONE derivation per new fact, chosen deterministically —
                     # the reference stores only the first firing
                     # (RuleEngine.scala:74-78); determinism beats agenda order.
@@ -2201,9 +2054,8 @@ class FixpointEngine:
                 delta = new_delta
         finally:
             # exception-safe: a failing round must not leak its views
-            for sess in view_sessions:
-                for v in views:
-                    sess.catalog.dropTempView(v)
+            for v in views:
+                spark.catalog.dropGlobalTempView(v)
         return FixpointResult(
             facts=facts.select(*spo) if store_dir else facts,
             asserted=asserted,
@@ -2215,20 +2067,3 @@ class FixpointEngine:
             gate_sig=ctx.sig,
             slice_cache=slice_cache,
         )
-
-    def _compile_variant(
-        self, cache: dict, dfs, rule: Rule, with_triples: bool = False
-    ) -> DataFrame:
-        if with_triples:
-            # provenance structs (__t0..) are rule-specific — no prefix
-            # sharing on the derivations path (off in benchmarks, matching
-            # the reference CLI default storeDerivations=false)
-            rels = [
-                self._atom_rel(cache, df, a, f"__t{i}")
-                for i, (df, a) in enumerate(zip(dfs, rule.body))
-            ]
-            return join_chain(rels, rule.body)
-        # C3 beta-prefix sharing: rules whose leading body atoms blank to the
-        # same pattern over the same delta-variant relations share ONE joined
-        # intermediate this round (ReteNodes JoinNodeSpec sharing analogue)
-        return shared_join_chain(cache, self._atom_rel, dfs, rule.body)

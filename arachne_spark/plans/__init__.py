@@ -3,7 +3,6 @@ from arachne_spark.plans.compiler import (
     apply_head,
     apply_rule_once,
     atom_relation,
-    atom_signature,
     bind_vars,
     compile_body,
     join_chain,
@@ -14,7 +13,6 @@ __all__ = [
     "apply_head",
     "apply_rule_once",
     "atom_relation",
-    "atom_signature",
     "bind_vars",
     "compile_body",
     "join_chain",

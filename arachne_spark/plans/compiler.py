@@ -1,7 +1,10 @@
-"""Compile triple patterns and rule bodies to Catalyst plans.
+"""Compile triple patterns and rule bodies to DataFrame plans.
 
-This module replaces the reference's Rete network construction and runtime
-(ReteNodes.scala, RuleEngine.scala:8-48) with declarative DataFrame plans:
+The fixpoint engine compiles its rounds to SQL text (`sqlgen.py`); this
+module compiles basic graph patterns for the query facade and SPARQL, and a
+single naive rule pass for tests and tooling. It replaces the reference's
+Rete network construction (ReteNodes.scala, RuleEngine.scala:8-48) with
+declarative DataFrame plans:
 
 - R1/R2 alpha selection  -> `facts.filter(const-position equalities)`; Catalyst
   pushes these to the scan (predicate pushdown), so the 8-way alpha dispatch
@@ -32,7 +35,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from arachne_spark.rules import ANY, Any_, Atom, Rule, Var, atom_vars
+from arachne_spark.rules import Any_, Atom, Rule, Var, atom_vars
 
 _POS = ("s", "p", "o")
 
@@ -40,26 +43,6 @@ _POS = ("s", "p", "o")
 def var_col(v: Var) -> str:
     """Variable -> stable, valid column name."""
     return "v_" + re.sub(r"\W", "_", v.name)
-
-
-def atom_signature(atom: Atom) -> tuple:
-    """The atom with variables blanked — the alpha-memory sharing key.
-
-    Patterns differing only in variable names share one selection
-    (RuleEngine.scala:20-21 keyed by TriplePattern.blankVariables,
-    Triple.scala:64-69). Repeated-variable structure is part of the key
-    because it changes the filter.
-    """
-    names: dict[Var, int] = {}
-    sig = []
-    for t in atom:
-        if isinstance(t, Var):
-            sig.append(("var", names.setdefault(t, len(names))))
-        elif isinstance(t, Any_):
-            sig.append(("any", None))
-        else:
-            sig.append(("const", t))
-    return tuple(sig)
 
 
 def atom_filter_condition(atom: Atom) -> Optional[Column]:
@@ -83,28 +66,19 @@ def atom_filter_condition(atom: Atom) -> Optional[Column]:
 
 
 def alpha_filter(triples: DataFrame, atom: Atom) -> DataFrame:
-    """The shareable alpha selection (R2): constants + repeated-var guards only.
-    Cacheable per blanked-pattern signature (C2) — projection to variable
-    names is NOT part of the shared node, exactly as in the reference where
-    AlphaNodes are keyed by `blankVariables` (RuleEngine.scala:20-21)."""
+    """The alpha selection (R2): constants + repeated-var guards only; the
+    projection to variable names is a separate step (`bind_vars`), as in the
+    reference where AlphaNodes select and bindings are per-pattern."""
     cond = atom_filter_condition(atom)
     return triples.filter(cond) if cond is not None else triples
 
 
-def bind_vars(
-    filtered: DataFrame, atom: Atom, triple_as: Optional[str] = None
-) -> DataFrame:
+def bind_vars(filtered: DataFrame, atom: Atom) -> DataFrame:
     """Binding extraction (R4): project pattern positions to variable columns.
 
     A constant-only atom (no variables) returns a zero-column, 0-or-1-row
     DataFrame acting as an existence gate (R6 corner: facts are a set, so at
     most one row can match).
-
-    With ``triple_as`` set, the matched source triple rides along as a struct
-    column of that name — the provenance hook (R12): the reference's
-    Derivation keeps the token's triples (WorkingMemory.scala:72,
-    ReteNodes.scala:232), and here each body atom's triple survives the join
-    chain so head rows know their supporting facts.
     """
     cols: list[Column] = []
     seen: set[Var] = set()
@@ -112,13 +86,8 @@ def bind_vars(
         if isinstance(t, Var) and t not in seen:
             seen.add(t)
             cols.append(F.col(c).alias(var_col(t)))
-    if triple_as is not None:
-        cols.append(F.struct(*_POS).alias(triple_as))
     if not cols:
         return filtered.limit(1).select()
-    if not any(isinstance(t, Var) for t in atom):
-        # constant-only existence gate still carries at most one row
-        return filtered.limit(1).select(*cols)
     return filtered.select(*cols)
 
 
@@ -185,79 +154,3 @@ def apply_rule_once(triples: DataFrame, rule: Rule) -> DataFrame:
     """Single naive pass of one rule over one facts relation (tests/tooling)."""
     bound = compile_body([triples] * len(rule.body), rule.body)
     return apply_head(bound, rule.head)
-
-
-# ---------------------------------------------------------------------------
-# C3: beta-node (body-prefix) sharing across rules within a round
-# (RuleEngine.scala:13,22-27 keys JoinNodes by JoinNodeSpec — the pattern
-# list up to this depth; two rules with identical leading patterns share the
-# join chain). Here: prefixes identical up to VARIABLE RENAMING and evaluated
-# against the same relation sequence share one joined intermediate per round;
-# variables are canonicalized to first-occurrence indices (the blankVariables
-# idea extended to whole prefixes), and each rule projects the canonical
-# columns back to its own names at the end — a free projection.
-# ---------------------------------------------------------------------------
-
-def _cv(idx: int) -> str:
-    return f"cv_{idx}"
-
-
-def prefix_signature(atoms: Sequence[Atom]) -> tuple[tuple, dict]:
-    """(blanked signature of the whole prefix, Var -> canonical index).
-    Variable numbering is FIRST-OCCURRENCE-GLOBAL across the prefix, so the
-    join structure (which positions share variables) is part of the key."""
-    names: dict[Var, int] = {}
-    sig = []
-    for atom in atoms:
-        s = []
-        for t in atom:
-            if isinstance(t, Var):
-                s.append(("var", names.setdefault(t, len(names))))
-            elif isinstance(t, Any_):
-                s.append(("any", None))
-            else:
-                s.append(("const", t))
-        sig.append(tuple(s))
-    return tuple(sig), names
-
-
-def shared_join_chain(
-    cache: dict,
-    atom_rel,
-    dfs: Sequence[DataFrame],
-    atoms: Sequence[Atom],
-) -> DataFrame:
-    """join_chain with per-prefix memoization. ``cache`` is the round-scoped
-    dict also used for alpha sharing; ``atom_rel(cache, df, atom)`` supplies
-    the bound atom relation. The cached intermediates carry canonical
-    column names (cv_0, cv_1, ...)."""
-    cur: Optional[DataFrame] = None
-    names: dict[Var, int] = {}
-    bound: set[Var] = set()
-    for i, (df, atom) in enumerate(zip(dfs, atoms)):
-        sig, names = prefix_signature(atoms[: i + 1])
-        key = ("beta", tuple(id(d) for d in dfs[: i + 1]), sig)
-        if key in cache:
-            cur = cache[key]
-            bound |= set(atom_vars(atom))
-            continue
-        rel = atom_rel(cache, df, atom)
-        avars = atom_vars(atom)
-        if avars:
-            rel = rel.select(
-                *[F.col(var_col(v)).alias(_cv(names[v])) for v in avars]
-            )
-        if cur is None:
-            cur = rel
-        else:
-            shared = sorted(names[v] for v in bound & set(avars))
-            if shared and avars:
-                cur = cur.join(rel, on=[_cv(ix) for ix in shared], how="inner")
-            else:
-                cur = cur.crossJoin(rel)
-        bound |= set(avars)
-        cache[key] = cur
-    assert cur is not None
-    # project canonical columns back to this rule's variable names
-    out_cols = [F.col(_cv(ix)).alias(var_col(v)) for v, ix in names.items()]
-    return cur.select(*out_cols) if out_cols else cur

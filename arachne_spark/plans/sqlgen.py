@@ -1,44 +1,43 @@
-"""SQL-text compilation of semi-naive rule variants (driver-overhead path).
+"""SQL-text compilation of semi-naive rule variants: the engine's one round
+compiler.
 
-Motivation (optimization guide §1.2 step 2 — per-task/driver work): the
-DataFrame-API variant compiler (`compiler.py` + `engine._compile_variant`)
-issues ~150-200 py4j calls per round, each of which EAGERLY re-analyzes its
-growing plan subtree in the JVM — measured 0.4-0.7 s of pure driver time per
-round on the OWL-RL rule set (cProfile: the time sits in socket round-trips
-under `DataFrame.select/join`). Emitting the whole round's derived union as
-ONE SQL string costs a single py4j call and a single JVM parse+analyze pass.
+Emitting a round's whole derived union as ONE SQL string costs a single
+py4j call and a single JVM parse+analyze pass. Building the same union with
+the DataFrame API issued ~150-200 py4j calls per round, each eagerly
+re-analyzing its growing plan subtree — measured 0.4-0.7 s of driver time
+per round on the OWL-RL rule set, against 0.02-0.06 s here
+(plans/r06/fixpoint_tc_rounds_{before,after}.txt: identical executed plans).
 
-Equivalence to `compiler.join_chain`/`apply_head` (the shapes are
-relationally identical and the property suite differential-tests both paths):
+The shapes mirror `compiler.join_chain`/`apply_head`, which still compile
+the facade's and SPARQL's BGPs:
 
 - alpha selection  -> constant equalities in WHERE (pushed to the scans);
 - repeated-var guards (R3) -> the same equalities via first-binding refs;
 - beta join (R5)   -> CROSS JOIN + WHERE var equalities; Catalyst's
-  PushPredicateThroughJoin turns these into the same inner equi-joins;
-- true cross products (R6) stay cartesian, exactly like `crossJoin`;
+  PushPredicateThroughJoin turns these into inner equi-joins;
+- true cross products (R6) stay cartesian;
 - const-only existence gates -> `(SELECT 1 FROM rel WHERE ... LIMIT 1)`
-  subqueries, the SQL analogue of `filtered.limit(1).select()`;
+  subqueries (facts are a set, so at most one row can match);
 - head construction (R10) -> one SELECT per head atom, UNION ALL across
-  variants (positionally s, p, o — same as `apply_head`).
+  variants (positionally s, p, o).
 - broadcast-sized deltas keep their driver-known hint via `/*+ BROADCAST */`.
 - `__pb` bucket pruning and `p IN (...)` value-level restriction are plain
   WHERE conditions (foldable bucket expressions still partition-prune).
+- provenance (R12): each body atom contributes its matched triple as a
+  `named_struct('s', .., 'p', .., 'o', ..)` — a gate subquery selects the
+  struct instead of 1 — and every head SELECT appends
+  `array(...) AS body, '<rule>' AS rule_name`.
 
-Beta-prefix sharing (C3) needs no analogue here: the DataFrame path's shared
-prefixes still execute once per union branch physically (Catalyst only reuses
-exchanges/subqueries), so repeating the join text is execution-identical —
-the sharing only ever saved plan-construction time, which this module saves
-more of.
-
-The provenance path (store_derivations) and the per-variant probe keep the
-DataFrame compiler: they need the __t struct columns / per-branch handles.
+Beta-prefix sharing across rules (C3) needs no analogue: a shared prefix
+still executes once per union branch physically (Catalyst only reuses
+exchanges/subqueries), so repeating the join text is execution-identical.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from arachne_spark.rules import Any_, Atom, Rule, Var
+from arachne_spark.rules import Any_, Rule, Var
 
 _POS = ("s", "p", "o")
 
@@ -67,6 +66,11 @@ def _pb_expr(p, pb_buckets: int) -> str:
     return f"pmod(xxhash64({sql_lit(p)}), {pb_buckets})"
 
 
+def _triple_struct(qual: str) -> str:
+    """The matched triple of one body atom, as a provenance struct."""
+    return "named_struct(" + ", ".join(f"'{c}', {qual}{c}" for c in _POS) + ")"
+
+
 def variant_selects(
     rule: Rule,
     variant: int,
@@ -76,16 +80,20 @@ def variant_selects(
     broadcast_delta: bool,
     pb_buckets: int,
     pred_pb_cap: int,
+    provenance: Optional[str] = None,
 ) -> list[str]:
     """One SELECT statement per head atom for rule-variant ``variant``.
 
     ``rel_views[j]`` is the registered view matching body atom j (facts /
     delta / facts_old per the semi-naive position rules); ``restrict[j]`` is
     the value-level allowed-predicate set for atom j's variable predicate.
+    With ``provenance`` (the rule name) set, each SELECT also yields the
+    matched body triples as ``body`` and the rule name as ``rule_name``.
     """
     bound: dict[Var, str] = {}
     from_parts: list[str] = []
     where: list[str] = []
+    body: list[str] = []
     delta_alias: Optional[str] = None
     for j, atom in enumerate(rule.body):
         alias = f"t{j}"
@@ -121,15 +129,18 @@ def variant_selects(
         if has_var:
             from_parts.append(f"{rel_views[j]} {alias}")
             where.extend(conds)
+            body.append(_triple_struct(qual))
             if j == variant:
                 delta_alias = alias
         else:
             # constant-only existence gate: 0-or-1 rows, conditions inside
             # the subquery so LIMIT applies after the filter
             inner = " WHERE " + " AND ".join(conds) if conds else ""
+            gate = "1" if provenance is None else _triple_struct("")
             from_parts.append(
-                f"(SELECT 1 AS __g{j} FROM {rel_views[j]}{inner} LIMIT 1) {alias}"
+                f"(SELECT {gate} AS __g{j} FROM {rel_views[j]}{inner} LIMIT 1) {alias}"
             )
+            body.append(f"{alias}.__g{j}")
     hint = (
         f"/*+ BROADCAST({delta_alias}) */ "
         if broadcast_delta and delta_alias is not None
@@ -145,6 +156,9 @@ def variant_selects(
                 cols.append(f"{bound[t]} AS {c}")
             else:
                 cols.append(f"{sql_lit(t)} AS {c}")
+        if provenance is not None:
+            cols.append(f"array({', '.join(body)}) AS body")
+            cols.append(f"{sql_lit(provenance)} AS rule_name")
         outs.append(
             f"SELECT {hint}{', '.join(cols)} FROM {from_sql}{where_sql}"
         )

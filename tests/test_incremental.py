@@ -212,17 +212,22 @@ def test_round_views_dropped_when_a_round_fails(spark, monkeypatch):
     base = _tbox() + [(_iri(EX + "i0"), _iri(EX + "p0"), _iri(EX + "i1"))]
     eng = FixpointEngine(spark, load_rules_json(RULES), dict_encode=False)
     during = []
+    gdb = spark.conf.get("spark.sql.globalTempDatabase")
+
+    def _views():
+        return [
+            t.name for t in spark.catalog.listTables(gdb) if "__arachne_" in t.name
+        ]
 
     def _fail(*a, **k):
-        during.extend(t.name for t in spark.catalog.listTables())
+        during.extend(_views())
         raise RuntimeError("injected mid-round failure")
 
     monkeypatch.setattr(eng, "_commit_delta", _fail)
     with pytest.raises(RuntimeError, match="injected"):
         eng.materialize(triples_df(spark, base))
-    assert any("__arachne_" in t for t in during)
-    left = [t.name for t in spark.catalog.listTables() if "__arachne_" in t.name]
-    assert left == []
+    assert during
+    assert _views() == []
 
 
 @pytest.mark.parametrize("dict_encode", [True, False])

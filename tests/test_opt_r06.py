@@ -1,13 +1,14 @@
-"""Round-6 optimization internals: SQL-text variant compilation must be
-result-identical to the DataFrame compiler, scan fan-out must be a pure
-repartition (same rows, no-op when already parallel), and canonicalize's
-driver fast path must equal the distributed CC path."""
+"""Round-6 optimization internals: SQL-text round compilation must reach
+the naive oracle's fixpoint in every representation, scan fan-out must be a
+pure repartition (same rows, no-op when already parallel), and
+canonicalize's driver fast path must equal the distributed CC path."""
 
-from pyspark.sql import functions as F
+import pytest
 
 from arachne_spark.engine import TRIPLE_SCHEMA, FixpointEngine
 from arachne_spark.functions._parallel import fan_out
 from arachne_spark.kg.canon import canonicalize
+from arachne_spark.oracle import naive_fixpoint
 from arachne_spark.rules import load_rules_json
 
 # shapes that exercise every sqlgen branch: symmetric 1-atom, var-predicate
@@ -39,40 +40,19 @@ _ROWS = [
 ]
 
 
-def test_sql_compile_matches_dataframe_compile(spark):
+@pytest.mark.parametrize("store", [False, True], ids=["memory", "store"])
+@pytest.mark.parametrize("enc", [False, True], ids=["string", "ids"])
+def test_sql_rounds_match_oracle(spark, tmp_path, enc, store):
+    """Every sqlgen branch, in strings and ids, in memory and on the
+    bucketed store (whose scans add the __pb pruning conditions)."""
     rules = load_rules_json(_RULES)
-    data = spark.createDataFrame(_ROWS, TRIPLE_SCHEMA)
-    base = None
-    for sql_mode in (False, True):
-        for enc in (False, True):
-            res = FixpointEngine(
-                spark, rules, dict_encode=enc, sql_compile=sql_mode
-            ).materialize(data)
-            got = sorted(tuple(r) for r in res.facts.collect())
-            if base is None:
-                base = got
-            assert got == base, (sql_mode, enc)
-    assert len(base) > len(_ROWS)  # rules actually fired
-
-
-def test_sql_compile_store_mode_matches(spark, tmp_path):
-    """__pb bucket-pruning conditions in generated SQL (store mode)."""
-    rules = load_rules_json(
-        [{"name": "tc", "body": [["?x", "p:up", "?y"], ["?y", "p:up", "?z"]],
-          "head": [["?x", "p:up", "?z"]]}]
+    kw = dict(checkpoint_dir=str(tmp_path), pred_partitioned=True) if store else {}
+    res = FixpointEngine(spark, rules, dict_encode=enc, **kw).materialize(
+        spark.createDataFrame(_ROWS, TRIPLE_SCHEMA)
     )
-    tree = spark.createDataFrame(
-        [(f"<n{i}>", "<p:up>", f"<n{i + 1}>") for i in range(8)], TRIPLE_SCHEMA
-    )
-    outs = []
-    for sql_mode in (False, True):
-        res = FixpointEngine(
-            spark, rules, dict_encode=True, sql_compile=sql_mode,
-            checkpoint_dir=str(tmp_path / f"cp{sql_mode}"),
-            pred_partitioned=True,
-        ).materialize(tree)
-        outs.append(sorted(tuple(r) for r in res.facts.collect()))
-    assert outs[0] == outs[1] and len(outs[0]) == 8 * 9 // 2
+    expect = naive_fixpoint(_ROWS, rules)
+    assert {tuple(r) for r in res.facts.collect()} == expect
+    assert len(expect) > len(_ROWS)  # rules actually fired
 
 
 def test_fan_out_repartitions_only_when_narrow(spark):

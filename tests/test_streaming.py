@@ -49,10 +49,17 @@ def test_streaming_foreachbatch(spark, tmp_path):
     triples_df(spark, batch1).write.mode("append").parquet(src)
     eng = FixpointEngine(spark, _rules())
     mat = IncrementalMaterializer(eng)
+    gdb = spark.conf.get("spark.sql.globalTempDatabase")
+
+    def _round_views():
+        # the rounds' global temp views, dropped when each run ends
+        return [t.name for t in spark.catalog.listTables(gdb) if "__arachne_" in t.name]
+
     q = mat.run(stream_triples(spark, src), checkpoint_location=ckpt)
     q.awaitTermination(120)
     first_facts = spo_set(mat.result.facts)
     assert first_facts == naive_fixpoint(batch1, _rules())
+    assert _round_views() == []
 
     # second micro-batch arrives; availableNow query restarts from checkpoint
     triples_df(spark, batch2).write.mode("append").parquet(src)
@@ -60,6 +67,7 @@ def test_streaming_foreachbatch(spark, tmp_path):
     q2.awaitTermination(120)
     assert spo_set(mat.result.facts) == naive_fixpoint(batch1 + batch2, _rules())
     assert mat.batches_processed == 2
+    assert _round_views() == []
 
 
 def test_sessionize_batch(spark):
