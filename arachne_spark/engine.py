@@ -50,6 +50,19 @@ Scale design (the reason this exists):
   subClassOf object sides is further mitigated because TBox-side atom slices
   are small and broadcast (SURVEY O12).
 
+One ingest pipeline: like the reference's single entry point for the first
+insert and every later one (processTriples, RuleEngine.scala:50-65),
+``materialize``, ``materialize_encoded`` and ``incremental`` all run
+``_ingest``; a fresh run is the first batch over no prior facts. It decides
+the representation (the prior result's, pre-encoded, or dict_encode/auto)
+and then the storage once; checkpoints the batch's string distinct only
+when a later step reads it again (the size decision, the dictionary, the
+anti-join); builds the dictionary (``build_term_dict``) or its delta
+(``dict_delta``); takes the seed delta (stage 0 itself, or the batch minus
+the prior facts); writes or appends it to the store; and commits the seed
+round's metrics line with the setup phases. ``_run`` only runs rounds;
+``resume`` rebuilds its relations from the round parquet and calls it too.
+
 Provenance (R12/R14): with ``store_derivations=True`` each NEW fact records
 exactly one derivation — (rule, supporting body triples), emitted by a
 second SQL statement over the same round views whose SELECTs also carry each
@@ -622,38 +635,6 @@ class FixpointEngine:
             return nd, preds, total, lineage
         return (*self._observed_checkpoint(plan, obs_aggs), [])
 
-    def _stage0_checkpoint(
-        self, distinct_plan: DataFrame, ctx: Optional[_CompiledRules]
-    ) -> tuple[DataFrame, int, Optional[tuple]]:
-        """Checkpoint the stage-0 distinct with the round-0 stats riding the
-        checkpoint's OWN job via an Observation — (facts, row count, stats0)
-        where stats0 = (gate counts, total, lineage) feeds _fresh_counts.
-        Count-only (stats0=None) for ``ctx=None`` — a caller that does not
-        yet know its representation — and under lineage tracking, which
-        keeps the grouped stats job (the per-partition histogram needs
-        grouping)."""
-        if self.track_lineage:
-            ctx = None
-        facts, preds, n = self._observed_checkpoint(
-            distinct_plan, self._gate_obs_aggs(ctx)
-        )
-        return facts, n, None if ctx is None else (preds, n, [])
-
-    def _fresh_counts(
-        self, facts: DataFrame, ctx: _CompiledRules, stats0: Optional[tuple]
-    ) -> _Counts:
-        """Round-0 counts of a fresh run, whose delta IS ``facts``: the
-        stage-0 Observation's ``stats0`` when it took them, else the grouped
-        histogram (lineage tracking) or one aggregate pass."""
-        if stats0 is None:
-            stats0 = (
-                self._delta_stats(facts, ctx)
-                if self.track_lineage
-                else (*self._gate_pass(facts, ctx), [])
-            )
-        preds, n, lineage = stats0
-        return _Counts(preds, n, preds, n, lineage=lineage)
-
     @staticmethod
     def _atom_key(atom) -> Optional[tuple]:
         """The alpha-count key this atom's emptiness can be checked against."""
@@ -832,12 +813,6 @@ class FixpointEngine:
             return None
         return frozenset(r[0] for r in rows)
 
-    def _mark0(self, name: str) -> None:
-        """Record one setup phase's wall seconds for round 0's metrics."""
-        now = time.time()
-        self._setup_ph[name] = round(now - self._setup_t, 4)
-        self._setup_t = now
-
     def _write_meta(self, *, ids: bool, salt: int = 0) -> None:
         """Record the checkpoint representation. The string path writes
         ids=false explicitly so a dir reused across modes can never resume
@@ -895,109 +870,7 @@ class FixpointEngine:
         high-cardinality fat-string shuffles); decode turns strict, so a
         coverage violation raises instead of dropping facts. Ignored in
         string mode."""
-        self._clear_stale_checkpoint()
-        self._setup_ph, self._setup_t = {}, time.time()
-        asserted = asserted.select(*TRIPLE_COLS)
-        use_ids = self.dict_encode
-        n_in: Optional[int] = row_hint
-        if (
-            use_ids == "auto"
-            and n_in is None
-            and self.pred_partitioned is False
-            and vocab is None
-        ):
-            # Size-unknown auto mode without a store: fold the sizing count
-            # into the stage-0 distinct's own job (Observation) instead of a
-            # separate count pass over the input — the distinct must run
-            # either way, and the threshold is a heuristic, so comparing the
-            # DISTINCT count against it is as principled as the raw count.
-            # Below the threshold the checkpointed distinct IS the string-
-            # mode facts relation (zero extra work); at/above it the
-            # dictionary builds from the (deduped, checkpointed) distinct —
-            # per-column vocab distincts over fewer rows than the raw input
-            # the old path scanned — and encode is a pure projection whose
-            # output is already distinct. Store-auto / forced-store runs
-            # keep the explicit count (the store write needs the distinct
-            # LAZY, and store sizing precedes it). It counts rows only: gate
-            # counts depend on the representation n decides. Below the
-            # threshold one pass over the small distinct takes the string
-            # ones; at/above it the encode checkpoint observes the id ones.
-            facts_str, n_in, _ = self._stage0_checkpoint(asserted.distinct(), None)
-            self._mark0("stage0_distinct")
-            if n_in < self.dict_threshold:
-                self._write_meta(ids=False)
-                counts = self._fresh_counts(facts_str, self._string_ctx, None)
-                self._mark0("stats0")
-                return self._run(
-                    facts_str, facts_str, round0=0, prior_metrics=[],
-                    derivations=None, ctx=self._string_ctx, use_store=False,
-                    counts=counts,
-                )
-            salt, term_dict = build_term_dict(
-                self.spark, facts_str, self._const_terms
-            )
-            self._mark0("dict_build")
-            ctx = self._ctx_for_salt(salt)
-            self._write_meta(ids=True, salt=salt)
-            # injectivity was verified by build_term_dict, so encoding the
-            # distinct string facts yields already-distinct id rows
-            facts_ids, _, stats0 = self._stage0_checkpoint(
-                encode_ids(facts_str, salt), ctx
-            )
-            self._mark0("encode")
-            raw = self._run(
-                facts_ids, facts_ids, round0=0, prior_metrics=[],
-                derivations=None, ctx=ctx, use_store=False,
-                counts=self._fresh_counts(facts_ids, ctx, stats0),
-            )
-            return self._wrap_ids(raw, term_dict, salt, strict=False)
-        if n_in is None and (use_ids == "auto" or self.pred_partitioned == "auto"):
-            # one count pass (cheap for parquet/checkpointed inputs) decides
-            # whether the dictionary's / bucketed store's fixed jobs amortize
-            n_in = asserted.count()
-            self._mark0("input_count")
-        if use_ids == "auto":
-            use_ids = n_in >= self.dict_threshold
-        use_store = self._resolve_store(n_in)
-        if not use_ids:
-            self._write_meta(ids=False)
-            # store mode: leave the distinct LAZY — _store_init executes it
-            # straight into the partitioned parquet write and _run rebinds
-            # facts/delta/asserted to the store read, so the input is
-            # materialized exactly once (no duplicate block-manager
-            # checkpoint of the full fact set — the r2-measured ~5x-cost
-            # write)
-            facts = asserted.distinct()
-            counts = None  # store mode: the store write counts itself
-            if not use_store:
-                # the result's `asserted` is the checkpointed distinct —
-                # self-contained outside foreachBatch at zero extra cost
-                facts, _, stats0 = self._stage0_checkpoint(
-                    facts, self._string_ctx
-                )
-                counts = self._fresh_counts(facts, self._string_ctx, stats0)
-                self._mark0("stage0_distinct")
-            return self._run(
-                facts, facts, round0=0, prior_metrics=[], derivations=None,
-                ctx=self._string_ctx, use_store=use_store, counts=counts,
-            )
-        salt, term_dict = build_term_dict(
-            self.spark, asserted, self._const_terms, vocab=vocab
-        )
-        self._mark0("dict_build")
-        ctx = self._ctx_for_salt(salt)
-        self._write_meta(ids=True, salt=salt)
-        facts_ids = encode_ids(asserted, salt).distinct()
-        counts = None
-        if not use_store:
-            facts_ids, _, stats0 = self._stage0_checkpoint(facts_ids, ctx)
-            counts = self._fresh_counts(facts_ids, ctx, stats0)
-            self._mark0("encode")
-        raw = self._run(
-            facts_ids, facts_ids, round0=0, prior_metrics=[], derivations=None,
-            ctx=ctx, use_store=use_store, counts=counts,
-        )
-        return self._wrap_ids(raw, term_dict, salt, strict=vocab is not None)
+        return self._ingest(None, asserted, n=row_hint, vocab=vocab)
 
     def build_dictionary(
         self, vocab: DataFrame, *, start_salt: int = 0
@@ -1040,27 +913,9 @@ class FixpointEngine:
 
         Decode is strict: a vocabulary coverage miss raises at export rather
         than silently dropping facts."""
-        self._clear_stale_checkpoint()
-        self._setup_ph, self._setup_t = {}, time.time()
-        asserted_ids = asserted_ids.select(*TRIPLE_COLS)
-        n_in: Optional[int] = row_hint
-        if n_in is None and self.pred_partitioned == "auto":
-            n_in = asserted_ids.count()
-            self._mark0("input_count")
-        use_store = self._resolve_store(n_in)
-        ctx = self._ctx_for_salt(salt)
-        self._write_meta(ids=True, salt=salt)
-        facts_ids = asserted_ids.distinct()
-        counts = None
-        if not use_store:
-            facts_ids, _, stats0 = self._stage0_checkpoint(facts_ids, ctx)
-            counts = self._fresh_counts(facts_ids, ctx, stats0)
-            self._mark0("stage0_distinct")
-        raw = self._run(
-            facts_ids, facts_ids, round0=0, prior_metrics=[], derivations=None,
-            ctx=ctx, use_store=use_store, counts=counts,
+        return self._ingest(
+            None, asserted_ids, n=row_hint, encoded=(term_dict, salt)
         )
-        return self._wrap_ids(raw, term_dict, salt, strict=True)
 
     def _wrap_ids(
         self,
@@ -1163,119 +1018,210 @@ class FixpointEngine:
         then close the gap; unchanged facts are never recomputed, nor
         re-counted: the run continues from ``prev``'s exact gate counts and
         TBox-slice cache (see FixpointResult.gate_counts)."""
+        return self._ingest(prev, new_triples)
+
+    def _ingest(
+        self,
+        prev: Optional[FixpointResult],
+        batch: DataFrame,
+        *,
+        n: Optional[int] = None,
+        vocab: Optional[DataFrame] = None,
+        encoded: Optional[tuple[DataFrame, int]] = None,
+    ) -> FixpointResult:
+        """The one ingest pipeline behind materialize, materialize_encoded
+        and incremental: a fresh run is the first batch over no prior facts
+        (``prev=None``). Prepare decides the representation (``prev``'s,
+        pre-encoded, or dict_encode/auto), then the storage; stage 0 is the
+        batch's distinct; the seed is that distinct on a fresh run and its
+        anti-join against ``prev``'s facts on a batch; the store step writes
+        or appends it; the seed round's metrics line, carrying the setup
+        phases, commits last. ``_run`` then only runs rounds."""
         spo = list(TRIPLE_COLS)
-        # checkpoint the incoming batch so the result never holds micro-batch
-        # lineage (a foreachBatch DataFrame is only valid inside its batch);
-        # the Observation folds the batch-size count into the checkpoint job
-        new_strings, _, n_new = self._observed_checkpoint(
-            new_triples.select(*spo).distinct(), self._gate_obs_aggs(None)
-        )
-        id_mode = prev.facts_ids is not None
-        if id_mode:
-            salt = prev.salt
-            new_dict_rows = dict_delta(prev.term_dict, new_strings, salt)
-            term_dict = prev.term_dict.unionByName(new_dict_rows)
-            if self.checkpoint_dir:
-                # persist the batch's NEW terms so resume() can decode facts
-                # whose terms never appear in the original asserted input
-                os.makedirs(self.checkpoint_dir, exist_ok=True)
-                new_dict_rows.write.mode("append").parquet(
-                    os.path.join(self.checkpoint_dir, "terms")
+        rows = batch.select(*spo)
+        count_only = self._gate_obs_aggs(None)
+        sd = os.path.join(self.checkpoint_dir or "", "facts_by_p")
+        ph: dict = {}
+        clock = [time.time()]
+
+        def mark(name: str) -> None:
+            """Record one setup phase's wall seconds for the seed round."""
+            now = time.time()
+            ph[name] = round(now - clock[0], 4)
+            clock[0] = now
+
+        if prev is not None:
+            # checkpoint the incoming batch so the result never holds
+            # micro-batch lineage (a foreachBatch DataFrame is only valid
+            # inside its batch); the dictionary delta and both anti-joins
+            # read it again
+            rows, _, n_new = self._observed_checkpoint(rows.distinct(), count_only)
+            mark("stage0_distinct")
+            ids, salt, strict = prev.facts_ids is not None, prev.salt, prev.strict_decode
+            if ids:
+                new_dict_rows = dict_delta(prev.term_dict, rows, salt)
+                term_dict = prev.term_dict.unionByName(new_dict_rows)
+                if self.checkpoint_dir:
+                    # persist the batch's NEW terms so resume() can decode
+                    # facts whose terms never appear in the original input
+                    os.makedirs(self.checkpoint_dir, exist_ok=True)
+                    new_dict_rows.write.mode("append").parquet(
+                        os.path.join(self.checkpoint_dir, "terms")
+                    )
+                mark("dict_build")
+                rows = encode_ids(rows, salt).localCheckpoint(eager=True)
+                mark("encode")
+                prev_facts, prev_asserted = prev.facts_ids, prev.asserted_ids
+            else:
+                prev_facts, prev_asserted = prev.facts, prev.asserted
+            ctx = self._ctx_for_salt(salt) if ids else self._string_ctx
+            # seed delta: new triples the store doesn't have. Small batches
+            # (the streaming norm) stream the full facts store map-only via
+            # the two-pass broadcast; the Observation folds the delta's count
+            # and gate counts into the checkpoint job, lineage tracking too
+            delta, delta_preds, d = self._observed_checkpoint(
+                self._anti_small(rows, prev_facts, n_new, spo),
+                self._gate_obs_aggs(ctx),
+            )
+            base = prev.facts_count + d
+            # EXACT: the seed delta is disjoint from prev_facts, so facts'
+            # counts are prev's plus the delta's. A prev with another gate-key
+            # signature (rule set or salt) costs one aggregate pass.
+            if prev.gate_sig == ctx.sig and prev.gate_counts is not None:
+                prev_counts, slices = prev.gate_counts, dict(prev.slice_cache or {})
+            else:
+                (prev_counts, _), slices = self._gate_pass(prev_facts, ctx), {}
+            totals = dict(prev_counts)
+            for kk, cnt in delta_preds.items():
+                totals[kk] = totals.get(kk, 0) + cnt
+            counts = _Counts(
+                delta_preds, d, totals, base, prev_counts, prev.facts_count,
+                slices=slices,
+            )
+            mark("seed")
+            store = self._resolve_store(base)
+            # continue round numbering after the previous run so a shared
+            # checkpoint_dir accumulates a consistent delta sequence
+            round0 = prev.metrics[-1].round + 1 if prev.metrics else 1
+            if store:
+                facts, prev_facts = self._store_batch(
+                    sd, round0, prev_facts, prev.facts_count, delta
                 )
-            ctx = self._ctx_for_salt(salt)
-            new_enc = encode_ids(new_strings, salt).localCheckpoint(eager=True)
-            prev_facts = prev.facts_ids
-            prev_asserted = prev.asserted_ids
+                mark("store_init")
+            else:
+                # in memory the copy pays for itself: rounds over a lazy
+                # union of every delta since the last refresh measured
+                # slower (BENCH.md)
+                facts = prev_facts.unionByName(delta).localCheckpoint(eager=True)
+                mark("facts_union")
+            # asserted stays a SET: drop re-asserted triples before the union
+            asserted = prev_asserted.unionByName(
+                self._anti_small(rows, prev_asserted, n_new, spo)
+            )
+            facts_old, metrics = prev_facts, list(prev.metrics)
         else:
-            ctx = self._string_ctx
-            new_enc = new_strings
-            prev_facts = prev.facts
-            prev_asserted = prev.asserted
-        # seed delta: new triples the store doesn't have. Small batches (the
-        # streaming norm) stream the full facts store map-only via the
-        # two-pass broadcast; the Observation folds the delta's count and
-        # gate counts into the checkpoint job (VERDICT r3 next-round #7)
-        delta, delta_preds, d = self._observed_checkpoint(
-            self._anti_small(new_enc, prev_facts, n_new, spo),
-            self._gate_obs_aggs(ctx),
+            self._clear_stale_checkpoint()
+            if encoded is not None:
+                (term_dict, salt), ids, strict = encoded, True, True
+            else:
+                term_dict, salt, ids = None, 0, self.dict_encode
+                strict = vocab is not None
+            staged = (
+                ids == "auto"
+                and n is None
+                and self.pred_partitioned is False
+                and vocab is None
+            )
+            if staged:
+                # Size-unknown auto mode without a store: fold the sizing
+                # count into the stage-0 distinct's own job (Observation)
+                # instead of a separate count pass — the distinct must run
+                # either way, and the threshold is a heuristic, so comparing
+                # the DISTINCT count against it is as principled as the raw
+                # count. Below the threshold the checkpointed distinct IS the
+                # string-mode facts relation; at/above it the dictionary
+                # builds from it — per-column distincts over fewer rows than
+                # the raw input — and encode is a pure projection whose
+                # output is already distinct. Gate counts wait for the
+                # representation n decides. Store runs keep the explicit
+                # count: the store write needs the distinct LAZY, and store
+                # sizing precedes it.
+                rows, _, n = self._observed_checkpoint(rows.distinct(), count_only)
+                mark("stage0_distinct")
+            elif n is None and "auto" in (ids, self.pred_partitioned):
+                # one count pass (cheap for parquet/checkpointed inputs)
+                # decides whether the dictionary's / bucketed store's fixed
+                # jobs amortize
+                n = rows.count()
+                mark("input_count")
+            if ids == "auto":
+                ids = n >= self.dict_threshold
+            store = self._resolve_store(n)
+            if ids and term_dict is None:
+                salt, term_dict = build_term_dict(
+                    self.spark, rows, self._const_terms, vocab=vocab
+                )
+                mark("dict_build")
+            ctx = self._ctx_for_salt(salt) if ids else self._string_ctx
+            self._write_meta(ids=bool(ids), salt=salt)
+            # stage 0 in the run's representation. Injectivity was verified
+            # by build_term_dict, so encoding a distinct string relation
+            # yields already-distinct id rows.
+            plan = encode_ids(rows, salt) if ids and encoded is None else rows
+            if not staged:
+                plan = plan.distinct()
+            # the seed's counts ride the job that materializes it (lineage
+            # tracking keeps the grouped job: its histogram needs grouping)
+            obs = self._gate_obs_aggs(None if self.track_lineage else ctx)
+            if store:
+                # the plan stays LAZY: the rebuild write executes it straight
+                # into the partitioned parquet, so the input is materialized
+                # exactly once (no duplicate block-manager checkpoint of the
+                # full fact set — the r2-measured ~5x-cost write)
+                written = self._store_write(plan, sd, 0, overwrite=True, obs_aggs=obs)
+                facts, phase = self._store_read(sd, 0), "store_init"
+            elif staged and not ids:
+                # the checkpointed distinct IS the facts relation
+                facts, written, phase = plan, None, "stats0"
+            else:
+                facts, *written = self._observed_checkpoint(plan, obs)
+                phase = "encode" if ids and encoded is None else "stage0_distinct"
+            if self.track_lineage:
+                preds, d, lineage = self._delta_stats(facts, ctx)
+            elif written:
+                preds, d, lineage = (*written, [])
+            else:
+                preds, d, lineage = (*self._gate_pass(facts, ctx), [])
+            mark(phase)
+            # the result's asserted relation is the materialized stage 0
+            asserted = facts.select(*spo) if store else facts
+            delta = facts
+            counts = _Counts(preds, d, preds, d, lineage=lineage)
+            round0, base, facts_old, metrics = 0, d, _empty_like(plan), []
+        # commit the seed round AFTER the store step, so a metrics line never
+        # claims a round the store doesn't hold yet; in store mode the store
+        # already holds the seed under its __rnd stamp
+        m0 = RoundMetrics(
+            round0, 0, d, base, 0.0, 0, 0, counts.lineage, phases=ph
         )
-        base = prev.facts_count + d
-        # EXACT: the seed delta is anti-joined against prev_facts (disjoint),
-        # so facts' counts are prev's plus the delta's. A prev with another
-        # gate-key signature (rule set or salt) costs one aggregate pass.
-        if prev.gate_sig == ctx.sig and prev.gate_counts is not None:
-            prev_counts, slices = prev.gate_counts, dict(prev.slice_cache or {})
-        else:
-            (prev_counts, _), slices = self._gate_pass(prev_facts, ctx), {}
-        totals = dict(prev_counts)
-        for kk, cnt in delta_preds.items():
-            totals[kk] = totals.get(kk, 0) + cnt
-        counts = _Counts(
-            delta_preds, d, totals, base, prev_counts, prev.facts_count,
-            slices=slices,
-        )
-        use_store = self._resolve_store(base)
-        if use_store and self.checkpoint_dir:
-            # compaction happens HERE — after the seed delta is materialized
-            # (nothing lazily references the old files any more) and before
-            # any relation for this batch is built over the store, so every
-            # store-backed plan this run scans sees only post-compaction
-            # files. Old FixpointResults' relations are invalidated by
-            # design (same as any non-snapshot table format); the count
-            # check guards against compacting a store that is not prev.facts.
-            sd = os.path.join(self.checkpoint_dir, "facts_by_p")
-            prev_round = prev.metrics[-1].round if prev.metrics else 0
-            if (
-                self._store_recover(sd)
-                and self._store_nfiles(sd) > self.store_max_files
-                and self._store_read(sd, prev_round).count() == prev.facts_count
-            ):
-                self._store_compact(sd)
-                prev_facts = self._store_read(sd, prev_round).select(*spo)
-        facts_u = prev_facts.unionByName(delta)
-        # store mode replaces `facts` with the store read inside _run (the
-        # union is only the rebuild fallback), so the O(|facts|) per-batch
-        # re-checkpoint is pure waste there; both inputs are already
-        # checkpointed, keeping lineage bounded either way. In memory the
-        # copy pays for itself: rounds over a lazy union of every delta
-        # since the last refresh measured slower (BENCH.md)
-        facts = facts_u if use_store else facts_u.localCheckpoint(eager=True)
-        # continue round numbering after the previous run so a shared
-        # checkpoint_dir accumulates a consistent delta sequence (no
-        # overwrites) and the seed delta itself is persisted for resume()
-        round0 = prev.metrics[-1].round + 1 if prev.metrics else 1
-        m0 = RoundMetrics(round0, 0, d, base, 0.0, 0, 0, [])
-        # the seed round is committed inside _run (commit_seed=True), after
-        # the store append it depends on in store mode
-        # asserted stays a SET: drop re-asserted triples before the union
-        # (facts/inferred_only were already safe; this keeps the exported
-        # asserted relation duplicate-free, matching materialize())
-        asserted_next = prev_asserted.unionByName(
-            self._anti_small(new_enc, prev_asserted, n_new, spo)
-        )
+        self._write_round(round0, delta, m0, delta_to_disk=not store)
         raw = self._run(
-            facts,
-            asserted_next,
-            round0=round0,
-            prior_metrics=list(prev.metrics) + [m0],
-            derivations=prev.derivations,
-            delta0=delta,
-            facts_old0=prev_facts,
-            ctx=ctx,
-            use_store=use_store,
-            commit_seed=True,
-            counts=counts,
+            facts, asserted, delta, facts_old,
+            round0=round0, counts=counts, metrics=metrics + [m0],
+            derivations=prev.derivations if prev else None,
+            ctx=ctx, store_dir=sd if store else None,
         )
-        # bound the asserted plan's depth across long incremental histories:
-        # each batch wraps another union + anti, so the chain is collapsed
-        # into one checkpoint whenever a batch's metrics cross a multiple of
-        # facts_refresh (a batch adds 2+ metrics, so it can step over every
-        # exact multiple)
-        k = max(1, self.facts_refresh)
-        if len(raw.metrics) // k > len(prev.metrics) // k:
-            raw = replace(raw, asserted=raw.asserted.localCheckpoint(eager=True))
-        if id_mode:
-            return self._wrap_ids(raw, term_dict, salt)
+        if prev is not None:
+            # bound the asserted plan's depth across long incremental
+            # histories: each batch wraps another union + anti, so the chain
+            # is collapsed into one checkpoint whenever a batch's metrics
+            # cross a multiple of facts_refresh (a batch adds 2+ metrics, so
+            # it can step over every exact multiple)
+            k = max(1, self.facts_refresh)
+            if len(raw.metrics) // k > len(prev.metrics) // k:
+                raw = replace(raw, asserted=raw.asserted.localCheckpoint(eager=True))
+        if ids:
+            return self._wrap_ids(raw, term_dict, salt, strict)
         return raw
 
     def resume(self, asserted: DataFrame) -> FixpointResult:
@@ -1420,40 +1366,52 @@ class FixpointEngine:
                         for d in deriv_dirs
                     ],
                 ).localCheckpoint(eager=True)
+        store_dir = sd if self._resolve_store(n_facts) else None
+        if store_dir:
+            self._store_write(facts, store_dir, rounds[-1], overwrite=True)
+            facts = self._store_read(store_dir, rounds[-1])
         raw = self._run(
-            facts,
-            asserted_run,
+            facts, asserted_run, delta_last, facts_old,
             round0=rounds[-1],
-            prior_metrics=metrics,
-            derivations=derivations,
-            delta0=delta_last,
-            facts_old0=facts_old,
-            ctx=ctx,
-            use_store=self._resolve_store(n_facts),
             counts=_Counts(
                 delta_preds, n_delta, facts_preds, n_facts, old_preds, n_old
             ),
+            metrics=metrics, derivations=derivations, ctx=ctx,
+            store_dir=store_dir,
         )
         if id_mode:
             return self._wrap_ids(raw, term_dict, salt)
         return raw
 
     # -- predicate-bucketed facts store (SURVEY O1) -------------------------
-    def _store_append(
-        self, delta: DataFrame, store_dir: str, rnd: int, n_rows: Optional[int] = None
-    ) -> None:
+    def _store_write(
+        self,
+        rel: DataFrame,
+        store_dir: str,
+        rnd: int,
+        *,
+        overwrite: bool = False,
+        n_rows: Optional[int] = None,
+        obs_aggs: Optional[tuple[list, list]] = None,
+    ) -> Optional[tuple[dict, int]]:
+        """Append ``rel`` to the store stamped ``__rnd = rnd``, or rebuild
+        the store from it (``overwrite``). Given ``obs_aggs``, the write's
+        own job observes the (gate counts, rows) it writes."""
         # bound file-count growth: a small late-round delta written from 32
         # tasks x 64 buckets would add ~2k tiny files per round; coalescing
         # by size keeps appends at <= tasks-per-round x touched buckets
         if n_rows is not None:
-            delta = delta.coalesce(max(1, min(32, n_rows // 250_000 + 1)))
+            rel = rel.coalesce(max(1, min(32, n_rows // 250_000 + 1)))
+        obs = Observation()
         (
-            delta.withColumn("__rnd", F.lit(rnd))
-            .withColumn("__pb", _pb_write_col(delta))
+            (rel.observe(obs, *obs_aggs[0]) if obs_aggs else rel)
+            .withColumn("__rnd", F.lit(rnd))
+            .withColumn("__pb", _pb_write_col(rel))
             .write.partitionBy("__pb")
-            .mode("append")
+            .mode("overwrite" if overwrite else "append")
             .parquet(store_dir)
         )
+        return self._gate_vals(obs.get, obs_aggs[1]) if obs_aggs else None
 
     def _store_nfiles(self, store_dir: str) -> int:
         n = 0
@@ -1523,52 +1481,44 @@ class FixpointEngine:
         partition column const-predicate alpha selections prune on."""
         return self.spark.read.parquet(store_dir).filter(F.col("__rnd") <= rnd)
 
-    def _store_init(
+    def _store_batch(
         self,
-        facts: DataFrame,
         store_dir: str,
-        round0: int,
-        delta0: Optional[DataFrame],
-        expect_rows: Optional[int] = None,
-        obs_aggs: Optional[tuple[list, list]] = None,
-    ) -> tuple[DataFrame, Optional[tuple]]:
-        """The store read at ``round0`` and, given ``obs_aggs``, the
-        (gate counts, rows, lineage) the fresh-run rebuild write observed."""
-        fresh_run = round0 == 0 and delta0 is None
-        rebuild = not os.path.isdir(store_dir) or fresh_run
-        if not rebuild and delta0 is not None and expect_rows is not None:
-            # incremental over an existing store: verify the store actually
-            # IS prev.facts before trusting the O(|delta|) append — a stale
-            # store from a different run under a reused checkpoint_dir would
-            # silently corrupt the facts relation (ADVICE r3). The probe
-            # scans only the __rnd column (one small-column count job).
-            have = self._store_read(store_dir, round0 - 1).count()
-            if have != expect_rows:
-                rebuild = True
-        if rebuild:
-            # materialize() always rewrites (a leftover store from an earlier
-            # run under the same checkpoint_dir must not leak in); resume()
-            # removes the store first and lands here too. On the incremental
-            # rebuild path `facts` already includes delta0, so stamping
-            # everything with round0 is exact for all `__rnd <= rnd` reads.
-            obs = Observation()
-            (
-                (facts.observe(obs, *obs_aggs[0]) if obs_aggs else facts)
-                .withColumn("__rnd", F.lit(round0))
-                .withColumn("__pb", _pb_write_col(facts))
-                .write.partitionBy("__pb")
-                .mode("overwrite")
-                .parquet(store_dir)
+        rnd: int,
+        prev_facts: DataFrame,
+        n_prev: int,
+        delta: DataFrame,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Bring the store to batch round ``rnd``: compact, verify, append.
+        Returns the store read at ``rnd`` and the prior facts relation,
+        which is the compacted store read when compaction ran (``prev``'s
+        files are gone then).
+
+        Compaction happens HERE — after the seed delta is materialized (it
+        no longer references the old files) and before any relation for
+        this batch is built over the store. Old
+        FixpointResults' relations are invalidated by design (same as any
+        non-snapshot table format). Both count checks verify that the store
+        actually IS prev's facts before trusting it: a stale store from a
+        different run under a reused checkpoint_dir would silently corrupt
+        the facts relation (ADVICE r3). Each probe scans only the __rnd
+        column. A missing or stale store is rebuilt from prev ∪ delta,
+        stamped ``rnd`` (exact for every ``__rnd <= rnd`` read)."""
+        have = self._store_recover(store_dir)
+        if (
+            have
+            and self._store_nfiles(store_dir) > self.store_max_files
+            and self._store_read(store_dir, rnd - 1).count() == n_prev
+        ):
+            self._store_compact(store_dir)
+            prev_facts = self._store_read(store_dir, rnd - 1).select(*TRIPLE_COLS)
+        if have and self._store_read(store_dir, rnd - 1).count() == n_prev:
+            self._store_write(delta, store_dir, rnd)
+        else:
+            self._store_write(
+                prev_facts.unionByName(delta), store_dir, rnd, overwrite=True
             )
-        elif delta0 is not None:
-            # verified store: only the seed delta appends (compaction happens
-            # at the incremental() batch boundary, where the caller can swap
-            # its store-backed relations to the compacted files)
-            self._store_append(delta0, store_dir, round0)
-        written = None
-        if rebuild and obs_aggs:
-            written = (*self._gate_vals(obs.get, obs_aggs[1]), [])
-        return self._store_read(store_dir, round0), written
+        return self._store_read(store_dir, rnd), prev_facts
 
     def _write_round(
         self, rnd: int, delta: DataFrame, m: RoundMetrics, delta_to_disk: bool = True
@@ -1595,80 +1545,26 @@ class FixpointEngine:
         self,
         facts: DataFrame,
         asserted: DataFrame,
+        delta: DataFrame,
+        facts_old: DataFrame,
         *,
         round0: int,
-        prior_metrics: list[RoundMetrics],
+        counts: _Counts,
+        metrics: list[RoundMetrics],
         derivations: Optional[DataFrame],
         ctx: _CompiledRules,
-        delta0: Optional[DataFrame] = None,
-        facts_old0: Optional[DataFrame] = None,
-        use_store: Optional[bool] = None,
-        commit_seed: bool = False,
-        counts: Optional[_Counts] = None,
+        store_dir: Optional[str],
     ) -> FixpointResult:
-        """Semi-naive rounds from ``counts``, the caller's exact counts of
-        the first delta, facts and facts_old (see _Counts). Only a fresh
-        store run passes None: its store write counts the input as it
-        materializes it (or, under lineage tracking, the grouped job does)."""
+        """Semi-naive rounds after the committed round ``round0``, from
+        ``counts``, the caller's exact counts of ``delta``, ``facts`` and
+        ``facts_old`` (see _Counts). ``metrics`` holds every committed
+        round so far; with ``store_dir`` set, ``facts`` is the bucketed
+        store's read at ``round0`` and each round appends to it."""
         spark = self.spark
         spo = list(TRIPLE_COLS)
-        delta = delta0 if delta0 is not None else facts
-        facts_old = facts_old0 if facts_old0 is not None else _empty_like(facts)
-        store_dir = None
         gate_obs = self._gate_obs_aggs(ctx)
-        if use_store is None:
-            use_store = self.pred_partitioned is True
-        if use_store:
-            store_dir = os.path.join(self.checkpoint_dir, "facts_by_p")
-            # incremental append path: prior_metrics[-1] is the seed round's
-            # metrics, so the pre-append store must hold exactly
-            # facts_total - delta_out rows (== prev.facts_count)
-            expect = (
-                prior_metrics[-1].facts_total - prior_metrics[-1].delta_out
-                if delta0 is not None and prior_metrics
-                else None
-            )
-            facts_in = facts
-            _t0 = time.time()
-            count_write = counts is None and not self.track_lineage
-            facts, written = self._store_init(
-                facts, store_dir, round0, delta0, expect_rows=expect,
-                obs_aggs=gate_obs if count_write else None,
-            )
-            if counts is None:
-                counts = self._fresh_counts(facts, ctx, written)
-            ph0 = getattr(self, "_setup_ph", None)
-            if ph0 is not None:
-                ph0["store_init"] = round(time.time() - _t0, 4)
-            if delta0 is None:
-                # fresh run: the store write just materialized the (possibly
-                # lazy) input exactly once — rebind the round-0 delta, and
-                # the asserted relation when it was the same input object,
-                # to the store read instead of re-executing the input plan
-                delta = facts
-                if asserted is facts_in:
-                    asserted = facts.select(*spo)
-        if commit_seed and prior_metrics:
-            # incremental seed-round commit, AFTER the store init/append so a
-            # metrics line never claims a round the store doesn't hold yet
-            self._write_round(
-                round0, delta, prior_metrics[-1], delta_to_disk=not use_store
-            )
         delta_preds, delta_total = counts.delta, counts.delta_total
         facts_count = counts.facts_total
-        if round0 == 0 and not prior_metrics:
-            # round-0 "phases" carry the pre-loop setup jobs (input sizing,
-            # dictionary build, encode/stage, store init) — the
-            # infer-time-outside-rounds that scaling analysis needs
-            m0 = RoundMetrics(
-                0, 0, delta_total, facts_count, 0.0, 0, 0, counts.lineage,
-                phases=dict(getattr(self, "_setup_ph", None) or {}),
-            )
-            prior_metrics = [m0]
-            # store mode: _store_init already wrote the round-0 facts under
-            # __rnd=0 — skip the duplicate round= write
-            self._write_round(0, delta, m0, delta_to_disk=not use_store)
-        metrics = list(prior_metrics)
         if self.store_derivations and derivations is None:
             spo_fields = [
                 T.StructField(c, facts.schema[c].dataType, False) for c in spo
@@ -1993,7 +1889,7 @@ class FixpointEngine:
                     # append BEFORE the metrics line commits the round: a crash
                     # between the two leaves an orphan __rnd partition that
                     # resume's __rnd <= last-complete-round filters exclude
-                    self._store_append(new_delta, store_dir, rnd, n_rows=delta_out)
+                    self._store_write(new_delta, store_dir, rnd, n_rows=delta_out)
                     _mark("store_append")
                 m = RoundMetrics(
                     round=rnd,

@@ -6,18 +6,15 @@ extractors over code_files(repo, path, commit, lang, content) producing
 candidate entity mentions (class defs, inheritance, function defs, imports,
 call edges).
 
-Implementation: ``mapInPandas`` with Arrow batches — vectorized pandas
-``str.extractall`` per batch, no per-row Python (input_hint). The per-row
-``content_sha256`` invariant is computed in the SAME pass, so tests can prove
-the extractor saw exactly the bytes of the source table.
+Implementation: per-kind ``regexp_extract_all`` column expressions, one
+codegen'd projection + explode, no Python workers (extract_mentions_expr).
+The per-row ``content_sha256`` invariant is computed in the SAME pass, so
+tests can prove the extractor saw exactly the bytes of the source table.
+A pandas extractor under ``tests/kg_oracles.py`` is the parity oracle.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,37 +61,10 @@ _PATTERNS = {
 _DEFAULT = _PATTERNS["python"]
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        sha = pdf["content"].map(
-            lambda c: hashlib.sha256(c.encode("utf-8")).hexdigest()
-        )
-        base = pdf[["repo", "path", "commit", "lang"]].copy()
-        base["content_sha256"] = sha
-        outs = []
-        for lang, group_idx in pdf.groupby("lang").groups.items():
-            sub = pdf.loc[group_idx]
-            pats = _PATTERNS.get(lang, _DEFAULT)
-            for kind, pat in pats.items():
-                hits = sub["content"].str.extractall(pat, flags=__import__("re").M)
-                if hits.empty:
-                    continue
-                hits = hits.reset_index(level=1, drop=True)[0].rename("mention")
-                joined = base.loc[hits.index].copy()
-                joined["mention"] = hits.values
-                joined["mention_kind"] = kind
-                outs.append(joined)
-        if outs:
-            out = pd.concat(outs, ignore_index=True).drop_duplicates()
-            yield out[list(MENTION_SCHEMA.fieldNames())]
-
-
 def _kind_matches(kind: str) -> F.Column:
     """Per-lang regexp_extract_all dispatch for one mention kind — a
     when/otherwise chain on `lang` (3 named grammars + python-ish default),
-    entirely inside whole-stage codegen. `(?m)` replicates the pandas path's
+    entirely inside whole-stage codegen. `(?m)` replicates the pandas oracle's
     re.M so ^ anchors match at every line start."""
     expr = None
     # (?U) = Java UNICODE_CHARACTER_CLASS: makes \w match Unicode word chars
@@ -117,13 +87,13 @@ def _kind_matches(kind: str) -> F.Column:
 def extract_mentions_expr(code_files: DataFrame) -> DataFrame:
     """Pure-Catalyst extraction: per-kind regexp_extract_all arrays,
     array_distinct per (file, kind) — the same within-file dedup the pandas
-    path's drop_duplicates performs — flattened into one struct array and
+    oracle's drop_duplicates performs — flattened into one struct array and
     exploded. No Python workers, no Arrow transfer: the whole stage is one
     codegen'd projection + generate, which is what fixed the extract stage's
     1.54x separate-executor scaling (Python worker fan-out was the
     bottleneck; VERDICT r2 next-round item 4).
 
-    Unicode parity with the pandas path (differential-tested, incl. a
+    Unicode parity with the pandas oracle (differential-tested, incl. a
     non-ASCII corpus): the embedded (?U) flag gives Java's `\\w` the same
     Unicode word-character semantics as Python's re."""
     def _tag(kind: str):
@@ -159,18 +129,13 @@ def extract_mentions_expr(code_files: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(code_files: DataFrame, use_pandas_udf: bool = False) -> DataFrame:
-    """code_files -> mentions. Default is the codegen'd expression path
-    (extract_mentions_expr); ``use_pandas_udf=True`` selects the equivalent
-    Arrow-batched mapInPandas extractor (kept for the UDF-surface parity
-    evidence, differential-tested to produce identical rows — the same
-    dual-path pattern as link_mentions). Columns are pruned before either
-    path so the scan reads only what extraction needs."""
+def extract_mentions(code_files: DataFrame) -> DataFrame:
+    """code_files -> mentions through the codegen'd expression path
+    (extract_mentions_expr), differential-tested against a pandas
+    extractor. Columns are pruned first so the scan reads only what
+    extraction needs."""
     cols = ["repo", "path", "commit", "lang", "content"]
-    pruned = code_files.select(*cols)
-    if use_pandas_udf:
-        return pruned.mapInPandas(_extract_batches, MENTION_SCHEMA)
-    return extract_mentions_expr(pruned)
+    return extract_mentions_expr(code_files.select(*cols))
 
 
 _KIND_PRED = {

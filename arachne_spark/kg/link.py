@@ -4,42 +4,21 @@ Mentions are scored against a broadcast entity dictionary. The candidate
 generation is a broadcast hash join on a normalized alias key (JVM-side,
 codegen'd); the scoring combines the dictionary prior with a character-bigram
 Jaccard similarity between the raw mention and the alias surface form. The
-default scorer is a pure column expression (whole-stage codegen, zero Python
-workers in the hot path); `link_score` is the equivalent Arrow-batched pandas
-UDF, kept for the UDF-surface parity evidence and differential-tested against
-the expression form. The best candidate per mention wins via one min_by hash
+scorer is a pure column expression (whole-stage codegen, zero Python workers
+in the hot path), differential-tested against a pandas UDF oracle under
+``tests/kg_oracles.py``. The best candidate per mention wins via one min_by hash
 aggregation (deterministic tie-break on canonical_iri).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def _bigrams(s: pd.Series) -> pd.Series:
-    def grams(x: str) -> set:
-        x = x or ""
-        return {x[i : i + 2] for i in range(len(x) - 1)} or {x}
-
-    return s.map(grams)
-
-
-@F.pandas_udf(T.DoubleType())
-def link_score(mention: pd.Series, alias: pd.Series, prior: pd.Series) -> pd.Series:
-    """score = 0.7 * bigram-Jaccard(mention, alias) + 0.3 * prior (vectorized)."""
-    mg, ag = _bigrams(mention.str.lower()), _bigrams(alias.str.lower())
-    inter = [len(a & b) for a, b in zip(mg, ag)]
-    union = [len(a | b) or 1 for a, b in zip(mg, ag)]
-    jac = pd.Series(inter, index=mention.index) / pd.Series(union, index=mention.index)
-    return 0.7 * jac + 0.3 * prior.astype(float)
 
 
 def _bigram_set(c: Column) -> Column:
     """Distinct character bigrams of lower(c) as an array — pure expression.
-    Matches `_bigrams`: a string shorter than 2 chars yields {itself}."""
+    A string shorter than 2 chars yields {itself}."""
     lc = F.lower(c)
     grams = F.array_distinct(
         F.transform(
@@ -51,7 +30,8 @@ def _bigram_set(c: Column) -> Column:
 
 
 def link_score_expr(mention: Column, alias: Column, prior: Column) -> Column:
-    """Same score as `link_score`, as a Catalyst expression (codegen'd)."""
+    """score = 0.7 * bigram-Jaccard(mention, alias) + 0.3 * prior, as a
+    Catalyst expression (codegen'd)."""
     mg, ag = _bigram_set(mention), _bigram_set(alias)
     inter = F.size(F.array_intersect(mg, ag)).cast("double")
     union = F.greatest(F.size(F.array_union(mg, ag)), F.lit(1)).cast("double")
@@ -140,16 +120,12 @@ def link_mentions(
     mentions: DataFrame,
     entity_dict: DataFrame,
     min_score: float = 0.5,
-    use_pandas_udf: bool = False,
 ) -> DataFrame:
     """mentions x broadcast(dict) -> best (mention, canonical_iri, kind, score).
 
     The dictionary is the small side — broadcast explicitly so the join never
     shuffles the (huge) mention table (SURVEY O8: broadcast the ontology-
-    derived side tables). Scoring is a codegen'd column expression by default;
-    ``use_pandas_udf=True`` selects the equivalent Arrow-batched pandas UDF
-    (differential-tested to produce identical scores)."""
-    scorer = link_score if use_pandas_udf else link_score_expr
+    derived side tables). Scoring is a codegen'd column expression."""
     # Score the VOCABULARY, not the corpus: the best candidate for a mention
     # depends only on the mention string, and distinct mention strings are
     # dictionary-scale (identifiers repeat massively in any code corpus),
@@ -163,7 +139,9 @@ def link_mentions(
         F.broadcast(entity_dict.withColumn("alias_norm", _norm(F.col("alias")))),
         _norm(F.col("mention")) == F.col("alias_norm"),
         "inner",
-    ).withColumn("score", scorer(F.col("mention"), F.col("alias"), F.col("prior")))
+    ).withColumn(
+        "score", link_score_expr(F.col("mention"), F.col("alias"), F.col("prior"))
+    )
     # best candidate per mention via min_by on (-score, canonical_iri):
     # deterministic (max score, ties -> min IRI)
     best = (

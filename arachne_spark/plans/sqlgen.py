@@ -20,7 +20,8 @@ the facade's and SPARQL's BGPs:
   subqueries (facts are a set, so at most one row can match);
 - head construction (R10) -> one SELECT per head atom, UNION ALL across
   variants (positionally s, p, o).
-- broadcast-sized deltas keep their driver-known hint via `/*+ BROADCAST */`.
+- broadcast-sized deltas keep their driver-known hint via `/*+ BROADCAST */`
+  on variants whose FROM holds more than one relation.
 - `__pb` bucket pruning and `p IN (...)` value-level restriction are plain
   WHERE conditions (foldable bucket expressions still partition-prune).
 - provenance (R12): each body atom contributes its matched triple as a
@@ -141,9 +142,11 @@ def variant_selects(
                 f"(SELECT {gate} AS __g{j} FROM {rel_views[j]}{inner} LIMIT 1) {alias}"
             )
             body.append(f"{alias}.__g{j}")
+    # a hint needs a join to act on: a 1-relation FROM would only log a
+    # HintErrorLogger warning every round
     hint = (
         f"/*+ BROADCAST({delta_alias}) */ "
-        if broadcast_delta and delta_alias is not None
+        if broadcast_delta and delta_alias is not None and len(from_parts) > 1
         else ""
     )
     from_sql = " CROSS JOIN ".join(from_parts)

@@ -724,6 +724,38 @@ def test_caller_vocab_coverage_violation_raises(spark):
     # facts/asserted — inferred_only re-decodes from ids (ADVICE r4 #1)
     with pytest.raises(Exception, match="decode miss|USER_RAISED_EXCEPTION"):
         res.inferred_only().collect()
+    # ... and onto every incremental batch: a batch result decoded loosely
+    # would drop the facts with the uncovered term instead of raising
+    eng = FixpointEngine(spark, _trans_rules(), dict_encode=True)
+    res = eng.materialize(triples_df(spark, chain), vocab=vocab)
+    nxt = eng.incremental(
+        res, triples_df(spark, [("<n4>", f"<{R}>", "<n5>")])
+    )
+    assert nxt.strict_decode
+    with pytest.raises(Exception, match="decode miss|USER_RAISED_EXCEPTION"):
+        nxt.facts.collect()
+
+
+def test_encoded_batch_keeps_strict_decode(spark):
+    """A materialize_encoded result decodes strictly, and so does every
+    incremental batch over it."""
+    from arachne_spark.dictionary import encode_ids
+
+    chain = [(f"<n{i}>", f"<{R}>", f"<n{i+1}>") for i in range(4)]
+    terms = sorted({t for row in chain for t in row})
+    eng = FixpointEngine(spark, _trans_rules())
+    salt, term_dict = eng.build_dictionary(
+        spark.createDataFrame([(t,) for t in terms], "term string")
+    )
+    res = eng.materialize_encoded(
+        encode_ids(triples_df(spark, chain), salt), term_dict=term_dict, salt=salt
+    )
+    nxt = eng.incremental(
+        res, triples_df(spark, [("<n4>", f"<{R}>", "<n5>")])
+    )
+    assert res.strict_decode and nxt.strict_decode
+    want = naive_fixpoint(chain + [("<n4>", f"<{R}>", "<n5>")], _trans_rules())
+    assert spo_set(nxt.facts) == want
 
 
 def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):

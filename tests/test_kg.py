@@ -15,6 +15,7 @@ from arachne_spark.kg import (
 from arachne_spark.kg.pipeline import build_triples, materialize_kg
 from arachne_spark.owlrl import owl_rl_core
 from arachne_spark.rules import RuleSet, load_rules_json
+from tests.kg_oracles import extract_mentions_pandas
 
 
 @pytest.fixture(scope="module")
@@ -127,13 +128,18 @@ def test_connected_components_driver_vs_distributed(spark, edict):
     assert fast == dist
 
 
-def test_link_scorer_expr_matches_pandas_udf(spark, edict):
+def test_link_scorer_expr_matches_pandas_udf(spark, edict, monkeypatch):
     """The codegen'd column-expression scorer is differential-tested against
-    the Arrow-batched pandas UDF: identical best candidates + scores."""
+    the Arrow-batched pandas UDF oracle: linking with either scorer picks
+    identical best candidates + scores."""
+    from arachne_spark.kg import link
+    from tests.kg_oracles import link_score
+
     mentions = extract_mentions(gen_code_files(spark, 500)).localCheckpoint(eager=True)
     key = ["repo", "path", "mention", "mention_kind"]
-    a = link_mentions(mentions, edict, use_pandas_udf=False).orderBy(*key).collect()
-    b = link_mentions(mentions, edict, use_pandas_udf=True).orderBy(*key).collect()
+    a = link_mentions(mentions, edict).orderBy(*key).collect()
+    monkeypatch.setattr(link, "link_score_expr", link_score)
+    b = link_mentions(mentions, edict).orderBy(*key).collect()
     assert len(a) == len(b)
     for x, y in zip(a, b):
         assert x["canonical_iri"] == y["canonical_iri"]
@@ -226,8 +232,7 @@ def test_extract_expr_matches_pandas_path(spark):
     a = {tuple(r) for r in extract_mentions(corpus).select(*cols).collect()}
     b = {
         tuple(r)
-        for r in extract_mentions(corpus, use_pandas_udf=True)
-        .select(*cols)
+        for r in extract_mentions_pandas(corpus).select(*cols)
         .collect()
     }
     assert a == b
@@ -255,8 +260,7 @@ def test_extract_expr_unicode_identifiers(spark):
     a = {tuple(r) for r in extract_mentions(corpus).select(*cols).collect()}
     b = {
         tuple(r)
-        for r in extract_mentions(corpus, use_pandas_udf=True)
-        .select(*cols)
+        for r in extract_mentions_pandas(corpus).select(*cols)
         .collect()
     }
     assert a == b

@@ -91,25 +91,48 @@ def test_canonicalize_driver_matches_distributed(spark, tmp_path):
 
 
 def test_stage0_observation_stats_match_grouped_job(spark):
-    """Round-0 stats folded into the stage-0 checkpoint's Observation must be
-    bit-identical to the separate grouped _delta_stats job they replace
-    (gate counts + total; lineage is the documented opt-in exception)."""
+    """Stats folded into a checkpoint's Observation (_observed_checkpoint,
+    _commit_delta) must be bit-identical to the separate grouped
+    _delta_stats job they replace (gate counts + total; lineage is the
+    documented opt-in exception)."""
     rules = load_rules_json(_RULES)
     eng = FixpointEngine(spark, rules)
     data = spark.createDataFrame(_ROWS, TRIPLE_SCHEMA)
     ctx = eng._string_ctx
-    facts, n, stats0 = eng._stage0_checkpoint(data.distinct(), ctx)
+    aggs = eng._gate_obs_aggs(ctx)
+    facts, preds_obs, n = eng._observed_checkpoint(data.distinct(), aggs)
     preds_ref, total_ref, _ = eng._delta_stats(facts, ctx)
-    assert stats0 is not None
-    preds_obs, total_obs, lineage_obs = stats0
-    assert total_obs == total_ref == n == len(set(_ROWS))
+    assert n == total_ref == len(set(_ROWS))
     assert preds_obs == preds_ref
-    assert lineage_obs == []
-    # lineage tracking keeps the grouped job path (stats0 None)
+    _, preds_c, n_c, lineage_c = eng._commit_delta(data.distinct(), ctx, aggs)
+    assert (preds_c, n_c, lineage_c) == (preds_ref, total_ref, [])
+    # lineage tracking keeps the grouped job, which adds the histogram
     eng_l = FixpointEngine(spark, rules, track_lineage=True)
-    _, n_l, stats0_l = eng_l._stage0_checkpoint(data.distinct(), ctx)
-    assert stats0_l is None and n_l == n
+    _, preds_l, n_l, lineage_l = eng_l._commit_delta(data.distinct(), ctx, aggs)
+    assert (preds_l, n_l) == (preds_ref, total_ref)
+    assert sum(lineage_l) == n_l
     # end-to-end: folded and grouped paths materialize identical facts
     a = sorted(tuple(r) for r in eng.materialize(data).facts.collect())
     b = sorted(tuple(r) for r in eng_l.materialize(data).facts.collect())
     assert a == b
+
+
+def test_broadcast_hint_only_on_joins():
+    """The delta's broadcast hint is emitted only where the FROM holds a
+    join: a 1-atom rule's variant would only log a HintErrorLogger warning."""
+    from arachne_spark.plans.sqlgen import variant_selects
+
+    rules = {r.name: r for r in load_rules_json(_RULES)}
+
+    def sql(name, variant):
+        rule = rules[name]
+        k = len(rule.body)
+        return variant_selects(
+            rule, variant, ["f"] * k, [False] * k, {}, True, 64, 48
+        )
+
+    assert all("BROADCAST" not in q for q in sql("sym", 0))
+    assert all("BROADCAST(t0)" in q for q in sql("rep", 0))
+    assert all("BROADCAST(t1)" in q for q in sql("rep", 1))
+    # a constant-only gate subquery is a second relation: the hint stays
+    assert all("BROADCAST(t1)" in q for q in sql("gate", 1))

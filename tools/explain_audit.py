@@ -7,8 +7,7 @@ that matter at 100 TB:
 - dictionary/TBox sides are BroadcastHashJoin / BroadcastNestedLoop (never a
   shuffle of the corpus side);
 - the inference join chain stays inside WholeStageCodegen spans;
-- the linking path contains NO Python UDF stages (ArrowEvalPython/BatchEvalPython)
-  unless the pandas-UDF variant is explicitly requested.
+- the linking path contains NO Python UDF stages (ArrowEvalPython/BatchEvalPython).
 
 Usage: python tools/explain_audit.py [sf_dir]
 """

@@ -1,10 +1,11 @@
-"""Decompose _store_init's write cost (the round-0 setup phase that scales
-only ~2.5x from 4->16 cores).
+"""Decompose the fresh store write's cost (``_store_write`` with
+``overwrite``: the round-0 setup phase that scales only ~2.5x from 4->16
+cores).
 
 Times, at one parallelism level in a fresh session, over N synthetic long-id
 triples shaped like an encoded abox:
   plain      — write.parquet, no partitioning (the lower bound)
-  partby     — write.partitionBy(__pb)  (what _store_init does today:
+  partby     — write.partitionBy(__pb)  (what _store_write does today:
                per-task dynamic-partition sort + up to tasks x 64 files)
   sorted     — sortWithinPartitions(__pb) + partitionBy (planner skips its
                own sort; same file fan-out)
