@@ -76,7 +76,8 @@ Explanation(asserted facts, rules) sets.
 Resumability (north rule): with ``checkpoint_dir`` set, each round's delta is
 written to parquet (``round=NNNN``) together with a ``metrics.jsonl`` line
 carrying round number, delta sizes, wall time, per-rule skip stats, and
-per-partition lineage, plus a ``meta.json`` recording the dictionary salt;
+per-partition lineage, plus a ``meta.json`` recording the representation
+(ids or strings), the dictionary salt and whether decode is strict;
 ``FixpointEngine.resume`` restarts from the last completed round.
 """
 
@@ -105,7 +106,7 @@ from arachne_spark.dictionary import (
     rule_constants,
 )
 from arachne_spark.model import TRIPLE_COLS
-from arachne_spark.plans.sqlgen import variant_selects
+from arachne_spark.plans.sqlgen import PB_BUCKETS, pb_sql, variant_selects
 from arachne_spark.rules import Any_, Rule, RuleSet, Var
 
 TRIPLE_SCHEMA = T.StructType(
@@ -127,8 +128,8 @@ def _empty_like(df: DataFrame) -> DataFrame:
 # const-predicate alpha selection prunes to 1/PB_BUCKETS of the store's files
 # at scan time instead of scanning all facts — this attacks the measured
 # O(|facts|) per-round scan floor (~9 s/round at 40M facts, BENCH r2). The
-# bucket count bounds directory fan-out for open predicate vocabularies.
-PB_BUCKETS = 64
+# bucket count (plans/sqlgen.PB_BUCKETS) bounds directory fan-out for open
+# predicate vocabularies; a constant's bucket is `sqlgen.pb_sql`.
 
 
 def _pb_write_col(df: DataFrame) -> Column:
@@ -137,14 +138,6 @@ def _pb_write_col(df: DataFrame) -> Column:
     if isinstance(df.schema["p"].dataType, T.LongType):
         return F.pmod(F.col("p"), F.lit(PB_BUCKETS))
     return F.pmod(F.xxhash64(F.col("p")), F.lit(PB_BUCKETS))
-
-
-def _pb_of_const(p_const) -> Column:
-    """Foldable bucket literal for a constant predicate — partition pruning
-    evaluates it at planning time."""
-    if isinstance(p_const, int):
-        return F.lit(p_const % PB_BUCKETS)
-    return F.pmod(F.xxhash64(F.lit(p_const)), F.lit(PB_BUCKETS))
 
 
 @dataclass(frozen=True)
@@ -738,7 +731,7 @@ class FixpointEngine:
             if len(preds) <= self.PRED_PB_CAP:
                 pb = reduce(
                     lambda a, b: a | b,
-                    [F.col("__pb") == _pb_of_const(p) for p in preds],
+                    [F.col("__pb") == F.expr(pb_sql(p)) for p in preds],
                 )
                 rel = rel.filter(pb)
             rel = rel.select(*TRIPLE_COLS)
@@ -813,17 +806,19 @@ class FixpointEngine:
             return None
         return frozenset(r[0] for r in rows)
 
-    def _write_meta(self, *, ids: bool, salt: int = 0) -> None:
+    def _write_meta(self, *, ids: bool, salt: int, strict: bool) -> None:
         """Record the checkpoint representation. The string path writes
         ids=false explicitly so a dir reused across modes can never resume
-        long-id parquets with the wrong decoder (or vice versa)."""
+        long-id parquets with the wrong decoder (or vice versa); ``strict``
+        carries strict decode (caller vocabulary, pre-encoded input) across
+        resume()."""
         if not self.checkpoint_dir:
             return
         os.makedirs(self.checkpoint_dir, exist_ok=True)
         with open(
             os.path.join(self.checkpoint_dir, "meta.json"), "w", encoding="utf-8"
         ) as f:
-            json.dump({"ids": ids, "salt": salt}, f)
+            json.dump({"ids": ids, "salt": salt, "strict": strict}, f)
 
     def _clear_stale_checkpoint(self) -> None:
         """A fresh materialize() under a reused checkpoint_dir starts at
@@ -922,7 +917,7 @@ class FixpointEngine:
         raw: FixpointResult,
         term_dict: DataFrame,
         salt: int,
-        strict: bool = False,
+        strict: bool,
     ) -> FixpointResult:
         return replace(
             raw,
@@ -986,7 +981,7 @@ class FixpointEngine:
         if "__pb" in facts.columns and len(preds) <= self.DEDUP_PB_CAP:
             cond = cond & reduce(
                 lambda a, b: a | b,
-                [F.col("__pb") == _pb_of_const(p) for p in preds],
+                [F.col("__pb") == F.expr(pb_sql(p)) for p in preds],
             )
         return facts.filter(cond).select(*spo)
 
@@ -1104,8 +1099,8 @@ class FixpointEngine:
             # checkpoint_dir accumulates a consistent delta sequence
             round0 = prev.metrics[-1].round + 1 if prev.metrics else 1
             if store:
-                facts, prev_facts = self._store_batch(
-                    sd, round0, prev_facts, prev.facts_count, delta
+                facts, prev_facts, prev_asserted = self._store_batch(
+                    sd, round0, prev_facts, prev_asserted, prev.facts_count, delta
                 )
                 mark("store_init")
             else:
@@ -1163,7 +1158,7 @@ class FixpointEngine:
                 )
                 mark("dict_build")
             ctx = self._ctx_for_salt(salt) if ids else self._string_ctx
-            self._write_meta(ids=bool(ids), salt=salt)
+            self._write_meta(ids=bool(ids), salt=salt, strict=strict)
             # stage 0 in the run's representation. Injectivity was verified
             # by build_term_dict, so encoding a distinct string relation
             # yields already-distinct id rows.
@@ -1227,7 +1222,8 @@ class FixpointEngine:
     def resume(self, asserted: DataFrame) -> FixpointResult:
         """Restart from the last completed round under ``checkpoint_dir``.
         The per-round parquet already carries the representation (long ids or
-        strings); ``meta.json`` carries the dictionary salt, and the decode
+        strings); ``meta.json`` carries the dictionary salt and strict
+        decode (a ``vocab=`` or pre-encoded run stays strict), and the decode
         dictionary is rebuilt statelessly from the asserted input + rule
         constants (hash ids depend on nothing else)."""
         if not self.checkpoint_dir:
@@ -1259,13 +1255,13 @@ class FixpointEngine:
             return self.materialize(asserted)
         asserted = asserted.select(*TRIPLE_COLS)
         meta_path = os.path.join(self.checkpoint_dir, "meta.json")
-        id_mode = False
-        salt = 0
+        id_mode, salt, strict = False, 0, False
         if os.path.exists(meta_path):
             with open(meta_path, encoding="utf-8") as f:
                 meta = json.load(f)
             id_mode = bool(meta.get("ids"))
             salt = int(meta.get("salt", 0))
+            strict = bool(meta.get("strict", False))
         if id_mode:
             _, term_dict = build_term_dict(
                 self.spark, asserted, self._const_terms, start_salt=salt, max_salt=1
@@ -1380,7 +1376,7 @@ class FixpointEngine:
             store_dir=store_dir,
         )
         if id_mode:
-            return self._wrap_ids(raw, term_dict, salt)
+            return self._wrap_ids(raw, term_dict, salt, strict)
         return raw
 
     # -- predicate-bucketed facts store (SURVEY O1) -------------------------
@@ -1486,13 +1482,16 @@ class FixpointEngine:
         store_dir: str,
         rnd: int,
         prev_facts: DataFrame,
+        prev_asserted: DataFrame,
         n_prev: int,
         delta: DataFrame,
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Bring the store to batch round ``rnd``: compact, verify, append.
-        Returns the store read at ``rnd`` and the prior facts relation,
-        which is the compacted store read when compaction ran (``prev``'s
-        files are gone then).
+        Returns the store read at ``rnd`` and the prior facts and asserted
+        relations. When compaction ran (``prev``'s files are gone then), the
+        prior facts are the compacted store's read, and the prior asserted
+        relation was checkpointed before the rewrite: it may read the store
+        (a fresh store run's asserted IS its stage-0 store read).
 
         Compaction happens HERE — after the seed delta is materialized (it
         no longer references the old files) and before any relation for
@@ -1510,6 +1509,7 @@ class FixpointEngine:
             and self._store_nfiles(store_dir) > self.store_max_files
             and self._store_read(store_dir, rnd - 1).count() == n_prev
         ):
+            prev_asserted = prev_asserted.localCheckpoint(eager=True)
             self._store_compact(store_dir)
             prev_facts = self._store_read(store_dir, rnd - 1).select(*TRIPLE_COLS)
         if have and self._store_read(store_dir, rnd - 1).count() == n_prev:
@@ -1518,7 +1518,7 @@ class FixpointEngine:
             self._store_write(
                 prev_facts.unionByName(delta), store_dir, rnd, overwrite=True
             )
-        return self._store_read(store_dir, rnd), prev_facts
+        return self._store_read(store_dir, rnd), prev_facts, prev_asserted
 
     def _write_round(
         self, rnd: int, delta: DataFrame, m: RoundMetrics, delta_to_disk: bool = True
@@ -1747,7 +1747,6 @@ class FixpointEngine:
                             [rel_pb[x] for x in src],
                             restrict,
                             broadcast_delta,
-                            PB_BUCKETS,
                             self.PRED_PB_CAP,
                         )
                         sql_parts.extend(variant_selects(*args))

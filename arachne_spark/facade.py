@@ -17,6 +17,8 @@ dictionary, as the last step. An all-constant ask decodes nothing.
 
 The subClassOf cones of Q4/Q5 are walked on the driver, one collect per hop;
 driver keys cross into the JVM as one Arrow batch, never as pickled rows.
+BGP calls (Q13 and every SPARQL query) compile as a rule body through
+`plans/sqlgen`, the compiler of the fixpoint rounds.
 """
 
 from __future__ import annotations
@@ -41,16 +43,15 @@ from arachne_spark.model import (
     encode_iri,
     encode_resource,
 )
-from arachne_spark.dictionary import decode_cols, encode_ids, term_id_col
-from arachne_spark.engine import PB_BUCKETS, _pb_of_const
-from arachne_spark.plans.compiler import (
-    alpha_filter,
-    apply_head,
-    bind_vars,
-    join_chain,
+from arachne_spark.dictionary import decode_cols, encode_ids
+from arachne_spark.plans.sqlgen import (
+    bgp_relation,
+    head_relation,
+    key_sql,
+    pb_sql,
     var_col,
 )
-from arachne_spark.rules import ANY, Atom, atom_vars
+from arachne_spark.rules import Atom, atom_vars
 
 _TYPE = encode_iri(RDF_TYPE)
 _SCO = encode_iri(RDFS_SUBCLASSOF)
@@ -140,6 +141,9 @@ class Reasoner:
         else:
             self._rel = facts
         self._ids = term_dict is not None and self._rel is not facts
+        # how a query constant becomes a selection-relation key
+        # (sqlgen.key_sql): hashed with the salt over ids, as is over strings
+        self._key_salt = salt if self._ids else None
         self._set = False  # is the selection relation known to be a set?
         self._cone_cache: dict[tuple[str, bool], frozenset] = {}
 
@@ -176,9 +180,7 @@ class Reasoner:
         """The selection-relation key for an encoded term: a foldable
         xxhash64 literal over ids (constant-folds, so the __pb comparison
         prunes partitions at planning time), the string itself otherwise."""
-        if self._ids:
-            return term_id_col(F.lit(t), self._salt)
-        return F.lit(t)
+        return F.expr(key_sql(t, self._key_salt))
 
     def _match(
         self, s: Optional[str] = None, p: Optional[str] = None,
@@ -192,12 +194,7 @@ class Reasoner:
         given = {c: t for c, t in zip(TRIPLE_COLS, (s, p, o)) if t is not None}
         conds = [F.col(c) == self._term_key(t) for c, t in given.items()]
         if self._store is not None and p is not None:
-            bucket = (
-                F.pmod(self._term_key(p), F.lit(PB_BUCKETS))
-                if self._ids
-                else _pb_of_const(p)
-            )
-            conds.insert(0, F.col("__pb") == bucket)
+            conds.insert(0, F.col("__pb") == F.expr(pb_sql(p, self._key_salt)))
         rel = self._rel.filter(reduce(and_, conds)) if conds else self._rel
         return rel.select(*[c for c in TRIPLE_COLS if c not in given])
 
@@ -352,24 +349,15 @@ class Reasoner:
 
     # -- Q13: generic query runners (:319-338) --------------------------------
     def _bindings(self, patterns: Sequence[Atom]) -> DataFrame:
-        """BGP solutions in the selection relation's representation: one
-        :meth:`_match` per pattern (its constants as keys), the
-        repeated-variable guards, and the rule-body join chain; columns are
-        ``var_col`` names."""
-        rels = []
-        for atom in patterns:
-            rel = self._match(
-                **{c: t for c, t in zip(TRIPLE_COLS, atom) if isinstance(t, str)}
-            )
-            # constants were matched as keys: only the repeated-variable
-            # guards of the atom are left to apply
-            guards = tuple(ANY if isinstance(t, str) else t for t in atom)
-            rels.append(bind_vars(alpha_filter(rel, guards), atom))
-        return join_chain(rels, list(patterns))
+        """BGP solutions in the selection relation's representation: the
+        patterns compile as a rule body (``sqlgen.bgp_select``: constants as
+        keys, ``__pb`` pruning on the store, repeated-variable guards, the
+        body join); columns are ``var_col`` names in first-binding order."""
+        return bgp_relation(self._rel, patterns, self._key_salt)
 
     def select_bgp(self, patterns: Sequence[Atom]) -> DataFrame:
-        """SPARQL basic-graph-pattern SELECT: self-joins of the facts via the
-        rule-body join chain; result columns are the variable names."""
+        """SPARQL basic-graph-pattern SELECT: self-joins of the facts,
+        compiled as a rule body; result columns are ``var_col`` names."""
         return self._decode(self._bindings(patterns))
 
     def ask_bgp(self, patterns: Sequence[Atom]) -> bool:
@@ -381,7 +369,7 @@ class Reasoner:
         used = {var_col(v) for a in template for v in atom_vars(a)}
         bound = self._bindings(where)
         bound = self._decode(bound.select(*[c for c in bound.columns if c in used]))
-        return apply_head(bound, list(template)).distinct()
+        return head_relation(bound, template).distinct()
 
     def sparql(self, query: str):
         """SPARQL TEXT surface (Q13): parse a SPARQL string (BGP subset —

@@ -1,19 +1,3 @@
-from arachne_spark.plans.compiler import (
-    alpha_filter,
-    apply_head,
-    apply_rule_once,
-    atom_relation,
-    bind_vars,
-    compile_body,
-    join_chain,
-)
+from arachne_spark.plans.compiler import apply_rule_once, atom_relation
 
-__all__ = [
-    "alpha_filter",
-    "apply_head",
-    "apply_rule_once",
-    "atom_relation",
-    "bind_vars",
-    "compile_body",
-    "join_chain",
-]
+__all__ = ["apply_rule_once", "atom_relation"]

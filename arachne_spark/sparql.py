@@ -6,9 +6,10 @@ executeAsk take a Query parsed from text). The repo's native surface is the
 BGP-atom API (facade.select_bgp/ask_bgp/construct_bgp) plus spark.sql over
 create_view(); this module closes the porting gap by parsing the SPARQL
 subset those users actually run against a reasoner — basic graph patterns —
-into the SAME atom API, so the whole execution path (id-literal constants
-on dictionary-encoded results, join chain, store pruning) is reused
-unchanged.
+into the SAME atom API, so the whole execution path (the `plans/sqlgen`
+BGP compile: id-literal constants on dictionary-encoded results, store
+pruning, the body join) is reused unchanged; CONSTRUCT instantiates its
+template with the same head compile as a rule.
 
 Supported subset (documented, checked — anything else raises
 NotImplementedError naming the construct):
@@ -41,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arachne_spark.model import RDF_TYPE, encode_iri, encode_literal
-from arachne_spark.plans.compiler import var_col
+from arachne_spark.plans.sqlgen import head_relation, var_col
 from arachne_spark.rules import Atom, Var, atom_vars
 from arachne_spark.sources.turtle import _unescape
 
@@ -430,9 +431,7 @@ def execute_sparql(reasoner, query: str) -> Union[DataFrame, bool]:
     if q.kind == "ask":
         return not bound.limit(1).isEmpty()
     if q.kind == "construct":
-        from arachne_spark.plans.compiler import apply_head
-
-        out = apply_head(bound, q.template).distinct()
+        out = head_relation(bound, q.template).distinct()
         if q.limit is not None:
             out = out.limit(q.limit)
         return out

@@ -704,7 +704,7 @@ def test_materialize_with_caller_vocab_matches_default(spark):
     assert res.salt == base.salt
 
 
-def test_caller_vocab_coverage_violation_raises(spark):
+def test_caller_vocab_coverage_violation_raises(spark, tmp_path):
     """An incomplete caller vocabulary must raise at decode time (strict
     decode), never silently drop facts — the failure mode of trusting a
     stale dimension table."""
@@ -734,6 +734,19 @@ def test_caller_vocab_coverage_violation_raises(spark):
     assert nxt.strict_decode
     with pytest.raises(Exception, match="decode miss|USER_RAISED_EXCEPTION"):
         nxt.facts.collect()
+    # ... and across a checkpointed resume (meta.json records it), whose
+    # later batches inherit it in turn
+    ck = dict(dict_encode=True, checkpoint_dir=str(tmp_path / "ck"))
+    FixpointEngine(spark, _trans_rules(), **ck).materialize(
+        triples_df(spark, chain), vocab=vocab
+    )
+    eng = FixpointEngine(spark, _trans_rules(), **ck)
+    resumed = eng.resume(triples_df(spark, chain))
+    assert resumed.strict_decode
+    nxt = eng.incremental(
+        resumed, triples_df(spark, [("<n4>", f"<{R}>", "<n5>")])
+    )
+    assert nxt.strict_decode
 
 
 def test_encoded_batch_keeps_strict_decode(spark):

@@ -128,7 +128,7 @@ def test_broadcast_hint_only_on_joins():
         rule = rules[name]
         k = len(rule.body)
         return variant_selects(
-            rule, variant, ["f"] * k, [False] * k, {}, True, 64, 48
+            rule, variant, ["f"] * k, [False] * k, {}, True, 48
         )
 
     assert all("BROADCAST" not in q for q in sql("sym", 0))

@@ -7,7 +7,9 @@ that matter at 100 TB:
 - dictionary/TBox sides are BroadcastHashJoin / BroadcastNestedLoop (never a
   shuffle of the corpus side);
 - the inference join chain stays inside WholeStageCodegen spans;
-- the linking path contains NO Python UDF stages (ArrowEvalPython/BatchEvalPython).
+- the linking path contains NO Python UDF stages (ArrowEvalPython/BatchEvalPython);
+- facade BGPs compile like round bodies: `__pb`-pruned store scans, id-literal
+  constants and one join per body join over ids.
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -35,7 +37,7 @@ def variant_plan(spark, rule, variant: int, rels) -> str:
     """Plan one rule variant the way the engine's rounds compile it: the
     `variant_selects` SQL over ``rels[j]`` (the relation body atom j reads),
     each registered as a global temp view."""
-    from arachne_spark.engine import PB_BUCKETS, FixpointEngine
+    from arachne_spark.engine import FixpointEngine
     from arachne_spark.plans.sqlgen import variant_selects
 
     gdb = spark.conf.get("spark.sql.globalTempDatabase")
@@ -50,13 +52,25 @@ def variant_plan(spark, rule, variant: int, rels) -> str:
             ["__pb" in rel.columns for rel in rels],
             {},
             False,
-            PB_BUCKETS,
             FixpointEngine.PRED_PB_CAP,
         )
         return plan_of(spark.sql("\nUNION ALL\n".join(sql)))
     finally:
         for name in names:
             spark.catalog.dropGlobalTempView(name)
+
+
+def store_scans(plan: str) -> tuple[int, int]:
+    """(parquet scans, scans without a ``__pb`` PartitionFilter) of a
+    formatted plan's per-node details; an unpruned scan prints no
+    PartitionFilters line at all."""
+    details = [d.strip() for d in plan.split("\n\n")]
+    scans = [d for d in details if d.startswith("(") and ") Scan parquet" in d]
+    pruned = [
+        d for d in scans
+        if "__pb" in (d.split("PartitionFilters: [")[1:] or [""])[0].split("]")[0]
+    ]
+    return len(scans), len(scans) - len(pruned)
 
 
 def check(name: str, plan: str, must: list[str], must_not: list[str]) -> bool:
@@ -247,19 +261,11 @@ def main() -> int:
         p = variant_plan(spark, list(tcr)[0], 1, [store, store])
         if verbose:
             print(p)
-        # the formatted plan's per-node details; an unpruned scan prints no
-        # PartitionFilters line at all
-        details = [d.strip() for d in p.split("\n\n")]
-        scans = [d for d in details if d.startswith("(") and ") Scan parquet" in d]
-        pruned = [
-            d for d in scans
-            if "__pb" in (d.split("PartitionFilters: [")[1:] or [""])[0].split("]")[0]
-        ]
-        unpruned = len(scans) - len(pruned)
+        n_scans, unpruned = store_scans(p)
         results.append(
             check(
                 "pred-bucketed facts store: both round scans prune on __pb",
-                f"store scans={len(scans)} unpruned={unpruned}",
+                f"store scans={n_scans} unpruned={unpruned}",
                 ["store scans=2", "unpruned=0"],
                 [],
             )
@@ -289,6 +295,26 @@ def main() -> int:
             )
         )
 
+        # 9a. a BGP over the bucketed store compiles like a round body
+        # (plans/sqlgen.bgp_select): both scans of a 2-atom select_bgp carry
+        # the __pb partition filter of their constant predicate
+        from arachne_spark.rules import Var
+
+        x, y, z = Var("x"), Var("y"), Var("z")
+        chain = [(x, "<http://ex/r>", y), (y, "<http://ex/r>", z)]
+        p = plan_of(r.select_bgp(chain))
+        if verbose:
+            print(p)
+        n_scans, unpruned = store_scans(p)
+        results.append(
+            check(
+                "BGP over bucketed store: both scans prune on __pb",
+                f"store scans={n_scans} unpruned={unpruned}",
+                ["store scans=2", "unpruned=0"],
+                [],
+            )
+        )
+
     # 8. facade over a dictionary-encoded result: a from_result query
     # selects on the long-id facts with id-literal constants (no string
     # compare) and decodes only its one answer column — one dictionary
@@ -311,6 +337,22 @@ def main() -> int:
             p + f"\njoins={n_joins}",
             ["joins=1", "Scan ExistingRDD"],
             ["<n0>", "<http://ex/r>"],
+        )
+    )
+
+    # 9b. a BGP over ids: the constants are id literals (no string in the
+    # plan) and the two atoms meet in exactly one join before any decode
+    p = plan_of(Reasoner.from_result(res)._bindings(chain))
+    if verbose:
+        print(p)
+    tree = p.split("\n\n")[0]
+    n_joins = sum("Join" in line for line in tree.splitlines())
+    results.append(
+        check(
+            "BGP over ids: id-literal constants, one join before decode",
+            p + f"\njoins={n_joins}",
+            ["joins=1"],
+            ["<http://ex/r>"],
         )
     )
 
