@@ -171,6 +171,8 @@ class _Counts:
     old_total: int = 0
     lineage: list = field(default_factory=list)
     slices: dict = field(default_factory=dict)
+    # the first delta's predicate set, when its checkpoint observed it
+    pvals: Optional[frozenset] = None
 
 
 def _compile_rules(ruleset) -> _CompiledRules:
@@ -201,6 +203,11 @@ class RoundMetrics:
     rules_skipped: int
     variants_skipped: int
     partition_lineage: list[int] = field(default_factory=list)
+    # partition counts, read from checkpoint-only plans (no job): the facts
+    # relation the round's joins read (the seed round: the one it built for
+    # round 1) and the delta the round committed
+    facts_partitions: int = 0
+    delta_partitions: int = 0
     # wall seconds per round phase (derive/dedup/stats/commit jobs) — the
     # fine-grained S7 stage-timing channel; keys are stable names so
     # harnesses can aggregate the per-round driver floor across runs
@@ -217,7 +224,13 @@ class FixpointResult:
     In dictionary-encoded mode (the default), ``facts``/``asserted`` are lazy
     DECODE plans (3 dictionary joins) over the checkpointed long-id stores
     ``facts_ids``/``asserted_ids`` — set operations and incremental seeds run
-    on the ids; strings materialize only when exported or collected."""
+    on the ids; strings materialize only when exported or collected.
+
+    An ``incremental()`` result also carries what the next batch continues
+    from without recounting: the exact gate counts of ``facts`` with their
+    signature and slice cache, and ``copy_partitions``, the partition count
+    its in-memory facts copy got (the next batch copies into the same
+    count, so it reads as many partitions as the first batch did)."""
 
     facts: DataFrame          # asserted ∪ derived (WorkingMemory.facts, N1)
     asserted: DataFrame
@@ -248,6 +261,10 @@ class FixpointResult:
     gate_counts: Optional[dict] = None
     gate_sig: Optional[tuple] = None
     slice_cache: Optional[dict] = None
+    # P of the last batch (None on a fresh run): max(defaultParallelism,
+    # prev P or, on the first batch, prev facts' partition count). The
+    # asserted and term_dict refreshes copy into the same P.
+    copy_partitions: Optional[int] = None
 
     def inferred_only(self) -> DataFrame:
         """facts minus asserted — the --inferred-only export (S6, Main.scala:81).
@@ -599,14 +616,39 @@ class FixpointEngine:
         preds = {kk: vals[f"g{i}"] for i, kk in enumerate(keys) if vals[f"g{i}"]}
         return preds, vals["n"]
 
+    @staticmethod
+    def _with_pred_set(obs_aggs: tuple[list, list]) -> tuple[list, list]:
+        """``obs_aggs`` plus the observed relation's predicate set. Only
+        for relations known to hold at most PRED_SET_CAP rows, so the set
+        is bounded before the job runs."""
+        return obs_aggs[0] + [F.collect_set("p").alias("pv")], obs_aggs[1]
+
     def _observed_checkpoint(
         self, plan: DataFrame, obs_aggs: tuple[list, list]
-    ) -> tuple[DataFrame, dict, int]:
+    ) -> tuple[DataFrame, dict, int, Optional[frozenset]]:
         """Eager localCheckpoint of ``plan`` whose own job also yields the
-        exact gate counts and row count, via an Observation."""
+        exact gate counts and row count, via an Observation, and the
+        predicate set when ``obs_aggs`` asks for it (None if not, or empty)."""
         obs = Observation()
         df = plan.observe(obs, *obs_aggs[0]).localCheckpoint(eager=True)
-        return (df, *self._gate_vals(obs.get, obs_aggs[1]))
+        vals = obs.get
+        pvals = frozenset(vals.get("pv", ())) or None
+        return (df, *self._gate_vals(vals, obs_aggs[1]), pvals)
+
+    @staticmethod
+    def _nparts(df: DataFrame) -> int:
+        """Partition count of a plan over checkpoints or file scans: the
+        planner reads it, no job runs (a plan with an Exchange would run
+        its stages under AQE, so never pass one)."""
+        return df.rdd.getNumPartitions()
+
+    @staticmethod
+    def _balanced_copy(df: DataFrame, parts: int) -> DataFrame:
+        """One checkpoint of ``df`` in exactly ``parts`` round-robin
+        partitions (a user-set count, which AQE never coalesces): a copy of
+        a union of a large relation and small pieces keeps no tiny
+        partitions, and every partition holds the same share of rows."""
+        return df.repartition(parts).localCheckpoint(eager=True)
 
     def _gate_pass(self, df: DataFrame, ctx: _CompiledRules) -> tuple[dict, int]:
         """One aggregate pass over an already materialized relation, for
@@ -616,16 +658,17 @@ class FixpointEngine:
 
     def _commit_delta(
         self, plan: DataFrame, ctx: _CompiledRules, obs_aggs: tuple[list, list]
-    ) -> tuple[DataFrame, dict, int, list[int]]:
-        """Checkpoint the round's new delta and return
-        (delta, gate counts, exact total, lineage). Lineage tracking keeps
-        the separate grouped stats job (per-partition histogram needs
-        grouping); otherwise the counts fold into the checkpoint's own job
-        via an Observation — exact either way (see _gate_obs_aggs)."""
+    ) -> tuple[DataFrame, dict, int, Optional[frozenset], list[int]]:
+        """Checkpoint the round's new delta and return (delta, gate counts,
+        exact total, predicate set if ``obs_aggs`` observes it, lineage).
+        Lineage tracking keeps the separate grouped stats job (per-partition
+        histogram needs grouping; ``obs_aggs`` then holds the count and
+        predicate set only); otherwise the counts fold into the checkpoint's
+        own job via an Observation — exact either way (see _gate_obs_aggs)."""
         if self.track_lineage:
-            nd = plan.localCheckpoint(eager=True)
+            nd, _, _, pv = self._observed_checkpoint(plan, obs_aggs)
             preds, total, lineage = self._delta_stats(nd, ctx)
-            return nd, preds, total, lineage
+            return nd, preds, total, pv, lineage
         return (*self._observed_checkpoint(plan, obs_aggs), [])
 
     @staticmethod
@@ -693,6 +736,15 @@ class FixpointEngine:
                     cons.append((kk, "o"))
             out[j] = cons
         return out
+
+    def _vp_cons(self, ctx: _CompiledRules) -> tuple[list, bool]:
+        """Per-rule var-predicate constraint shapes, and whether any rule
+        has a CONSTRAINED var-predicate atom — the only reader of a delta's
+        predicate set. Rule sets without one (e.g. a plain transitive
+        closure, all predicates constant) never need that set, so no job or
+        observation computes it."""
+        cons = [self._var_pred_constraints(r) for r in ctx.rules]
+        return cons, any(bool(c) for per_rule in cons for c in per_rule.values())
 
     def _warm_slice_cache(
         self, facts: DataFrame, vp_cons: list, totals: dict, cache: dict
@@ -1050,7 +1102,9 @@ class FixpointEngine:
             # micro-batch lineage (a foreachBatch DataFrame is only valid
             # inside its batch); the dictionary delta and both anti-joins
             # read it again
-            rows, _, n_new = self._observed_checkpoint(rows.distinct(), count_only)
+            rows, _, n_new, _ = self._observed_checkpoint(
+                rows.distinct(), count_only
+            )
             mark("stage0_distinct")
             ids, salt, strict = prev.facts_ids is not None, prev.salt, prev.strict_decode
             if ids:
@@ -1073,10 +1127,15 @@ class FixpointEngine:
             # seed delta: new triples the store doesn't have. Small batches
             # (the streaming norm) stream the full facts store map-only via
             # the two-pass broadcast; the Observation folds the delta's count
-            # and gate counts into the checkpoint job, lineage tracking too
-            delta, delta_preds, d = self._observed_checkpoint(
-                self._anti_small(rows, prev_facts, n_new, spo),
-                self._gate_obs_aggs(ctx),
+            # and gate counts into the checkpoint job, lineage tracking too,
+            # and the predicate set round 1 prunes by when the batch (a
+            # superset of the delta) is known to hold at most PRED_SET_CAP
+            # rows
+            seed_obs = self._gate_obs_aggs(ctx)
+            if n_new <= self.PRED_SET_CAP and self._vp_cons(ctx)[1]:
+                seed_obs = self._with_pred_set(seed_obs)
+            delta, delta_preds, d, pvals = self._observed_checkpoint(
+                self._anti_small(rows, prev_facts, n_new, spo), seed_obs
             )
             base = prev.facts_count + d
             # EXACT: the seed delta is disjoint from prev_facts, so facts'
@@ -1091,7 +1150,15 @@ class FixpointEngine:
                 totals[kk] = totals.get(kk, 0) + cnt
             counts = _Counts(
                 delta_preds, d, totals, base, prev_counts, prev.facts_count,
-                slices=slices,
+                slices=slices, pvals=pvals,
+            )
+            # batch k reads as many facts partitions as batch 1: the copy
+            # below lands in P partitions, P never below the parallelism
+            # and never below what the previous copy (or, on the first
+            # batch, the fresh result's facts) had
+            parts = max(
+                self.spark.sparkContext.defaultParallelism,
+                prev.copy_partitions or self._nparts(prev_facts),
             )
             mark("seed")
             store = self._resolve_store(base)
@@ -1106,8 +1173,13 @@ class FixpointEngine:
             else:
                 # in memory the copy pays for itself: rounds over a lazy
                 # union of every delta since the last refresh measured
-                # slower (BENCH.md)
-                facts = prev_facts.unionByName(delta).localCheckpoint(eager=True)
+                # slower (BENCH.md). A plain checkpoint of the union would
+                # keep every partition of it, adding the seed's and each
+                # round delta's per batch, and every later variant, dedup
+                # scan and facade call starts a task per partition; one
+                # round-robin copy into P partitions keeps the count fixed
+                # and the partitions even (BENCH.md, "Balanced batch copy")
+                facts = self._balanced_copy(prev_facts.unionByName(delta), parts)
                 mark("facts_union")
             # asserted stays a SET: drop re-asserted triples before the union
             asserted = prev_asserted.unionByName(
@@ -1141,7 +1213,9 @@ class FixpointEngine:
                 # representation n decides. Store runs keep the explicit
                 # count: the store write needs the distinct LAZY, and store
                 # sizing precedes it.
-                rows, _, n = self._observed_checkpoint(rows.distinct(), count_only)
+                rows, _, n, _ = self._observed_checkpoint(
+                    rows.distinct(), count_only
+                )
                 mark("stage0_distinct")
             elif n is None and "auto" in (ids, self.pred_partitioned):
                 # one count pass (cheap for parquet/checkpointed inputs)
@@ -1179,7 +1253,7 @@ class FixpointEngine:
                 # the checkpointed distinct IS the facts relation
                 facts, written, phase = plan, None, "stats0"
             else:
-                facts, *written = self._observed_checkpoint(plan, obs)
+                facts, *written, _ = self._observed_checkpoint(plan, obs)
                 phase = "encode" if ids and encoded is None else "stage0_distinct"
             if self.track_lineage:
                 preds, d, lineage = self._delta_stats(facts, ctx)
@@ -1197,7 +1271,10 @@ class FixpointEngine:
         # claims a round the store doesn't hold yet; in store mode the store
         # already holds the seed under its __rnd stamp
         m0 = RoundMetrics(
-            round0, 0, d, base, 0.0, 0, 0, counts.lineage, phases=ph
+            round0, 0, d, base, 0.0, 0, 0, counts.lineage,
+            facts_partitions=self._nparts(facts),
+            delta_partitions=self._nparts(delta),
+            phases=ph,
         )
         self._write_round(round0, delta, m0, delta_to_disk=not store)
         raw = self._run(
@@ -1207,14 +1284,17 @@ class FixpointEngine:
             ctx=ctx, store_dir=sd if store else None,
         )
         if prev is not None:
-            # bound the asserted plan's depth across long incremental
-            # histories: each batch wraps another union + anti, so the chain
-            # is collapsed into one checkpoint whenever a batch's metrics
-            # cross a multiple of facts_refresh (a batch adds 2+ metrics, so
-            # it can step over every exact multiple)
+            # bound the asserted (and id-mode term_dict) plan depth across
+            # long incremental histories: each batch wraps another union, so
+            # the chains are collapsed into one balanced copy each whenever a
+            # batch's metrics cross a multiple of facts_refresh (a batch adds
+            # 2+ metrics, so it can step over every exact multiple)
             k = max(1, self.facts_refresh)
+            raw = replace(raw, copy_partitions=parts)
             if len(raw.metrics) // k > len(prev.metrics) // k:
-                raw = replace(raw, asserted=raw.asserted.localCheckpoint(eager=True))
+                raw = replace(raw, asserted=self._balanced_copy(raw.asserted, parts))
+                if ids:
+                    term_dict = self._balanced_copy(term_dict, parts)
         if ids:
             return self._wrap_ids(raw, term_dict, salt, strict)
         return raw
@@ -1308,12 +1388,12 @@ class FixpointEngine:
         # the three eager checkpoints (facts, last delta, facts_old) carry
         # their exact gate counts and row counts on their own jobs
         aggs = self._gate_obs_aggs(ctx)
-        facts, facts_preds, n_facts = self._observed_checkpoint(facts_p, aggs)
-        delta_last, delta_preds, n_delta = self._observed_checkpoint(delta_p, aggs)
-        facts_old, old_preds, n_old = (
+        facts, facts_preds, n_facts, _ = self._observed_checkpoint(facts_p, aggs)
+        delta_last, delta_preds, n_delta, _ = self._observed_checkpoint(delta_p, aggs)
+        facts_old, old_preds, n_old, _ = (
             self._observed_checkpoint(old_p, aggs)
             if len(rounds) > 1
-            else (_empty_like(facts), {}, 0)
+            else (_empty_like(facts), {}, 0, None)
         )
         if id_mode:
             # decode coverage gate: every resumed id must be in the rebuilt
@@ -1562,7 +1642,6 @@ class FixpointEngine:
         store's read at ``round0`` and each round appends to it."""
         spark = self.spark
         spo = list(TRIPLE_COLS)
-        gate_obs = self._gate_obs_aggs(ctx)
         delta_preds, delta_total = counts.delta, counts.delta_total
         facts_count = counts.facts_total
         if self.store_derivations and derivations is None:
@@ -1598,22 +1677,18 @@ class FixpointEngine:
         # predicate set (None when unknown/too big). The seed delta's set is
         # only worth a job when the delta is a proper subset of facts
         # (incremental batches); a fresh round-1 delta IS facts.
-        vp_cons = [self._var_pred_constraints(r) for r in ctx.rules]
-        # the delta predicate-set job only feeds the value-level pruning of
-        # CONSTRAINED var-predicate atoms — rule sets without any such atom
-        # (e.g. a plain transitive-closure rule, all predicates constant)
-        # never read delta_pvals, so skip the per-round job outright (one
-        # fewer scheduler round-trip per round, the fixed floor small-delta
-        # rounds are bound by)
-        has_vp = any(
-            bool(cons) for per_rule in vp_cons for cons in per_rule.values()
-        )
+        vp_cons, has_vp = self._vp_cons(ctx)
         slice_cache = dict(counts.slices)
-        delta_pvals: Optional[frozenset] = (
-            self._delta_pred_values(delta, delta_total)
-            if has_vp and delta_total < facts_count
-            else None
-        )
+        delta_pvals: Optional[frozenset] = counts.pvals
+        if delta_pvals is None and has_vp and delta_total < facts_count:
+            delta_pvals = self._delta_pred_values(delta, delta_total)
+        # a committed delta known to hold at most PRED_SET_CAP rows (it is
+        # a subset of the round's distinct derived set) observes its
+        # predicate set on its own checkpoint job; larger ones keep the
+        # separate bounded job after the commit
+        gate_obs = self._gate_obs_aggs(None if self.track_lineage else ctx)
+        commit_obs = (gate_obs, self._with_pred_set(gate_obs))
+        facts_parts = self._nparts(facts)
 
         # every round compiles to SQL text over three views (plans/sqlgen.py).
         # They are GLOBAL temp views: inside foreachBatch the batch's
@@ -1808,7 +1883,7 @@ class FixpointEngine:
                         # fixpoint reached: skip the anti-join AND stats jobs
                         # entirely (an empty delta has trivially empty counts)
                         new_delta = dd
-                        new_preds, delta_out, lineage = {}, 0, []
+                        new_preds, delta_out, pvals, lineage = {}, 0, None, []
                     else:
                         # a facts row can only collide with dd on an (s,p,o) key
                         # if its predicate occurs in dd, so the facts side of the
@@ -1839,21 +1914,23 @@ class FixpointEngine:
                             )
                         else:
                             nd_plan = dd.join(facts_side, on=spo, how="left_anti")
-                        new_delta, new_preds, delta_out, lineage = (
-                            self._commit_delta(nd_plan, ctx, gate_obs)
+                        fold = has_vp and n_dd <= self.PRED_SET_CAP
+                        new_delta, new_preds, delta_out, pvals, lineage = (
+                            self._commit_delta(nd_plan, ctx, commit_obs[fold])
                         )
                         _mark("dedup_anti")
                 else:
                     new_delta = _empty_like(facts).localCheckpoint(eager=True)
-                    new_preds, delta_out, lineage = {}, 0, []
+                    new_preds, delta_out, pvals, lineage = {}, 0, None, []
                 _mark("stats")
-                # next round's (a)-skip input: the new delta's predicate set —
-                # one bounded job over the just-checkpointed delta (no job at
-                # fixpoint, where delta_out == 0, and none at all when no rule
-                # has a constrained var-predicate atom to consume it)
-                delta_pvals = (
-                    self._delta_pred_values(new_delta, delta_out) if has_vp else None
-                )
+                # next round's (a)-skip input: the new delta's predicate set,
+                # observed by the commit above or else one bounded job over
+                # the just-checkpointed delta (no job at fixpoint, where
+                # delta_out == 0, and none at all when no rule has a
+                # constrained var-predicate atom to consume it)
+                delta_pvals = pvals
+                if delta_pvals is None and has_vp:
+                    delta_pvals = self._delta_pred_values(new_delta, delta_out)
                 _mark("pred_values")
 
                 if self.store_derivations and delta_out > 0:
@@ -1899,6 +1976,8 @@ class FixpointEngine:
                     rules_skipped=rules_skipped,
                     variants_skipped=variants_skipped,
                     partition_lineage=lineage,
+                    facts_partitions=facts_parts,
+                    delta_partitions=self._nparts(new_delta),
                     phases=ph,
                 )
                 metrics.append(m)
@@ -1928,6 +2007,7 @@ class FixpointEngine:
                     # re-read is a fresh parquet relation, so no LogicalRDD
                     # aliasing with the delta
                     facts = self._store_read(store_dir, rnd)
+                    facts_parts = self._nparts(facts)
                 else:
                     # The delta must not appear as the SAME LogicalRDD both
                     # inside the facts union and as the join-side delta relation
@@ -1944,6 +2024,7 @@ class FixpointEngine:
                     facts = facts.unionByName(
                         new_delta.select(*[F.col(c).alias(c) for c in spo])
                     )
+                    facts_parts += m.delta_partitions
                     if (rnd - round0) % self.facts_refresh == 0:
                         facts = facts.localCheckpoint(eager=True)
                 delta = new_delta

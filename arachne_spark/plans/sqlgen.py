@@ -62,9 +62,17 @@ PB_BUCKETS = 64
 
 
 def var_col(v: Var) -> str:
-    """Variable -> stable column name (keeps non-ASCII word characters, so
-    SQL text quotes it with backticks)."""
-    return "v_" + re.sub(r"\W", "_", v.name)
+    """Variable -> column name, one per variable even under Spark's
+    case-insensitive column resolution (SPARQL's ``?x`` and ``?X`` are two
+    variables). A name of lowercase ASCII letters, digits and ``_`` keeps
+    its text (``v_<name>``); any other name gets the ``w_`` prefix and
+    spells every character outside ``[a-z0-9]`` as ``_<hex code point>_``,
+    so its column is lowercase too and decodes back to one name."""
+    if re.fullmatch(r"[a-z0-9_]+", v.name):
+        return "v_" + v.name
+    return "w_" + "".join(
+        c if re.fullmatch(r"[a-z0-9]", c) else f"_{ord(c):x}_" for c in v.name
+    )
 
 
 def sql_lit(v) -> str:

@@ -6,11 +6,14 @@ and a failing round must not leak its temp views."""
 import random
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from arachne_spark.engine import FixpointEngine
 from arachne_spark.oracle import naive_fixpoint
 from arachne_spark.rules import load_rules_json
 from tests.conftest import spo_set, triples_df
+from tests.test_property import _rules, _triples
 
 EX = "http://ex/"
 TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -253,9 +256,112 @@ def test_asserted_plan_depth_bounded_across_batches(spark, dict_encode):
     asserted = res.asserted_ids if dict_encode else res.asserted
     plan = asserted._jdf.queryExecution().logical().toString()
     assert plan.count("Union") <= eng.facts_refresh + 1, plan
+    if dict_encode:
+        # every batch unions its new terms into the dictionary: Spark
+        # flattens the chain into one Union, so count its branches, which
+        # collapse on the same crossings
+        plan = res.term_dict._jdf.queryExecution().logical().toString()
+        assert plan.count("LogicalRDD") <= eng.facts_refresh + 1, plan
     assert spo_set(res.asserted) == set(base) | {
         (_iri(f"{EX}j{k}"), _iri(TYPE), _iri(EX + "C1")) for k in range(12)
     }
+
+
+def _facts_rel(res):
+    return res.facts_ids if res.facts_ids is not None else res.facts
+
+
+@pytest.mark.parametrize("mode", ["string", "ids"])
+def test_facts_partitions_bounded_across_batches(spark, tmp_path, mode):
+    """Each in-memory batch copies its facts once, round-robin into P
+    partitions: after batch k the facts relation has P partitions plus one
+    per productive round of that batch (not one more per batch), the copy's
+    partitions hold even shares, and the metrics record the counts."""
+    eng = _engine(spark, tmp_path, mode)
+    p1, typ, c0 = _iri(EX + "p1"), _iri(TYPE), _iri(EX + "C0")
+    chain = [_iri(f"{EX}c{k}") for k in range(13)]
+    seen = _tbox() + [(_iri(f"{EX}t{k}"), typ, c0) for k in range(300)]
+    res = eng.materialize(triples_df(spark, seen))
+    want_p = max(spark.sparkContext.defaultParallelism, eng._nparts(_facts_rel(res)))
+    for k in range(12):
+        # a chain link (transitive p1: one productive round) and a typing
+        batch = [(chain[k], p1, chain[k + 1]), (_iri(f"{EX}u{k}"), typ, c0)]
+        n0 = len(res.metrics)
+        res = eng.incremental(res, triples_df(spark, batch))
+        seen += batch
+        assert res.copy_partitions == want_p
+        rounds = [m for m in res.metrics[n0 + 1:] if m.delta_out > 0]
+        facts = _facts_rel(res)
+        n_parts = eng._nparts(facts)
+        assert rounds and n_parts <= want_p + len(rounds)
+        assert n_parts == want_p + sum(m.delta_partitions for m in rounds)
+        # the seed round and round 1 read the copy
+        assert res.metrics[n0].facts_partitions == want_p
+        assert res.metrics[n0 + 1].facts_partitions == want_p
+        sizes = facts.rdd.glom().map(len).collect()[:want_p]
+        assert max(sizes) <= 2 * sum(sizes) / want_p, sizes
+    assert spo_set(res.facts) == naive_fixpoint(seen, load_rules_json(RULES))
+
+
+@pytest.mark.parametrize("mode", ["string", "store"])
+def test_partition_counts_recorded_without_a_job(
+    spark, tmp_path, monkeypatch, mode
+):
+    """Every round's metrics carry the partition counts of the facts it
+    read and the delta it committed; reading them launches no Spark job."""
+    from tests.test_facade import _jobs
+
+    real = FixpointEngine._nparts
+    launched = []
+
+    def _counted(df):
+        n, jobs = _jobs(spark, lambda: real(df))
+        launched.append(jobs)
+        return n
+
+    monkeypatch.setattr(FixpointEngine, "_nparts", staticmethod(_counted))
+    base, batches = _batches(6)
+    eng = _engine(spark, tmp_path, mode)
+    res = eng.materialize(triples_df(spark, base))
+    for batch in batches:
+        res = eng.incremental(res, triples_df(spark, batch))
+    assert len(launched) >= len(res.metrics) and not any(launched)
+    assert all(m.facts_partitions > 0 for m in res.metrics)
+    assert all(m.delta_partitions > 0 for m in res.metrics if m.delta_out > 0)
+    if mode == "string":
+        # the last round adds nothing: the result's facts are what it read
+        assert real(res.facts) == res.metrics[-1].facts_partitions
+
+
+@pytest.mark.parametrize("mode", ["string", "ids"])
+@settings(
+    max_examples=6,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rules=_rules(),
+    triples=_triples,
+    cuts=st.lists(st.integers(1, 10), min_size=3, max_size=3),
+)
+def test_random_programs_across_batches(spark, mode, rules, triples, cuts):
+    """The property suite's random programs (repeated variables,
+    variable predicates, cross products) through materialize plus three
+    in-memory batches, one of which re-asserts a known triple: every
+    batch result equals the oracle. Batch copies and round deltas are
+    distinct checkpoints, so no plan holds one relation twice (the
+    DeduplicateRelations shape the round loop avoids by re-aliasing)."""
+    if len(naive_fixpoint(triples, rules)) > 3000:
+        return
+    a, b, c = sorted(min(x, len(triples)) for x in cuts)
+    eng = FixpointEngine(spark, rules, **MODES[mode])
+    res = eng.materialize(triples_df(spark, triples[:a]))
+    seen = list(triples[:a])
+    for batch in (triples[a:b], triples[b:c] + triples[:1], triples[c:]):
+        res = eng.incremental(res, triples_df(spark, batch))
+        seen += batch
+        assert spo_set(res.facts) == naive_fixpoint(seen, rules)
 
 
 @pytest.mark.parametrize("dict_encode", [False, True])

@@ -100,15 +100,22 @@ def test_stage0_observation_stats_match_grouped_job(spark):
     data = spark.createDataFrame(_ROWS, TRIPLE_SCHEMA)
     ctx = eng._string_ctx
     aggs = eng._gate_obs_aggs(ctx)
-    facts, preds_obs, n = eng._observed_checkpoint(data.distinct(), aggs)
+    facts, preds_obs, n, pv = eng._observed_checkpoint(data.distinct(), aggs)
     preds_ref, total_ref, _ = eng._delta_stats(facts, ctx)
     assert n == total_ref == len(set(_ROWS))
     assert preds_obs == preds_ref
-    _, preds_c, n_c, lineage_c = eng._commit_delta(data.distinct(), ctx, aggs)
+    assert pv is None  # not asked for
+    _, preds_c, n_c, pv_c, lineage_c = eng._commit_delta(
+        data.distinct(), ctx, eng._with_pred_set(aggs)
+    )
     assert (preds_c, n_c, lineage_c) == (preds_ref, total_ref, [])
+    # the folded predicate set equals the separate job's
+    assert pv_c == eng._delta_pred_values(facts, n) == {r[1] for r in _ROWS}
     # lineage tracking keeps the grouped job, which adds the histogram
     eng_l = FixpointEngine(spark, rules, track_lineage=True)
-    _, preds_l, n_l, lineage_l = eng_l._commit_delta(data.distinct(), ctx, aggs)
+    _, preds_l, n_l, _, lineage_l = eng_l._commit_delta(
+        data.distinct(), ctx, eng._gate_obs_aggs(None)
+    )
     assert (preds_l, n_l) == (preds_ref, total_ref)
     assert sum(lineage_l) == n_l
     # end-to-end: folded and grouped paths materialize identical facts

@@ -59,6 +59,16 @@ def test_select_matches_bgp_api(reasoner):
     assert got == want and got == {(e("i1"), e("i2"))}
 
 
+def test_variables_differing_only_in_case_stay_apart(spark):
+    """SPARQL variables are case-sensitive, Spark column resolution is not:
+    ?x and ?X must bind two columns, not one ambiguous reference."""
+    r = Reasoner(triples_df(spark, [(e("a"), e("p"), e("b"))]))
+    q = "SELECT ?x ?X WHERE { ?x <http://example.org/p> ?X }"
+    got = r.sparql(q)
+    assert got.columns == ["x", "X"]
+    assert [tuple(row) for row in got.collect()] == [(e("a"), e("b"))]
+
+
 def test_select_star_semicolon_comma_and_a(reasoner):
     # ; predicate list, 'a', SELECT * — columns in first-appearance order
     q = PFX + "SELECT * WHERE { ?x a ex:B ; ex:knows ?y . }"
